@@ -1,18 +1,16 @@
 #!/usr/bin/env python
-"""Benchmark harness: times every registered (bench-eligible) query at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
-and prints ONE compact JSON line on stdout:
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+"""One-pass timing of every bench-eligible registered query.
 
-The stdout line must stay SHORT: the driver captures only a tail window of
-output, and round 1's ~4 KB all-queries line got front-truncated into
-unparseable JSON (BENCH_r01.json parsed:null). So stdout carries the metric
-plus only the 10 slowest per-query timings; the full per-query map goes to
-the BENCH_DETAIL.json sidecar (and stderr).
+Runs each ``s.bench`` spec once over the tables in $SPARK_GRAFT_SF_DIR
+(default: the sf0.1 test data), materializing it through the ``noop`` sink
+so results never leave the executors, and prints ONE short JSON line on
+stdout:
 
-Each query is fully materialized via the ``noop`` DataSourceV2 sink (no
-driver-side collect — results never leave the executors, which is also the
-honest way to measure at scale).
+    {"metric": "total_query_wall_time", "value": N, "unit": "sec",
+     "queries": {10 slowest}, "sf": ...}
+
+A failed query is reported as -1 and left out of the total. This is a quick
+smoke-level figure; the repo's benchmark is ``perfbench/run.py``.
 """
 
 from __future__ import annotations
@@ -22,431 +20,41 @@ import os
 import sys
 import time
 
+from toy_map_reduce_spark.functions.ranks import release_scratch
 from toy_map_reduce_spark.registry import all_specs
 from toy_map_reduce_spark.session import get_spark
-
-
-def materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def _boot_info() -> dict:
-    """Boot/host identity stamped into BENCH_DETAIL (r8 verdict task 4):
-    cross-boot runs drift ±7-20% uniformly on this class of VM, and the
-    "never chase uniform inflation" rule needs a machine-readable anchor
-    instead of tribal memory — bench_regress warns when boot ids differ."""
-    info: dict[str, object] = {}
-    try:
-        with open("/proc/sys/kernel/random/boot_id") as fh:
-            info["boot_id"] = fh.read().strip()
-        with open("/proc/uptime") as fh:
-            info["uptime_sec"] = round(float(fh.read().split()[0]))
-    except OSError:
-        pass
-    try:
-        with open("/proc/cpuinfo") as fh:
-            for ln in fh:
-                if ln.lower().startswith("model name"):
-                    info["cpu"] = ln.split(":", 1)[1].strip()
-                    break
-    except OSError:
-        pass
-    return info
-
-
-# calib_version 2 (r12): probes are JIT-WARMED before timing. The v1
-# cold-JVM probe carried first-execution C2-compilation noise (measured:
-# 3.2s first run -> 0.79 settled min on an idle box), which made the
-# pre-vs-post contention compare structurally asymmetric (pre cold, post
-# warm after ~780 queries ≈ a built-in 1.2x) and put a QUIET machine at
-# the flag line. bench_regress must not normalize across differing calib
-# versions — the ratio would mix JIT maturity with host speed.
-CALIB_VERSION = 2
-
-
-def _calibrate(spark, runs: int = 3, warmup: int = 2) -> float:
-    """Deterministic CPU probe (r10 verdict task 4): min wall time of a
-    fixed JVM workload — xxhash64+sum over range(3.2e9), 32 even splits, no
-    data dependence, no shuffle — stamped into BENCH_DETAIL as
-    ``boot.calib_sec``. bench_regress divides per-query times by the
-    calib ratio before classifying a CROSS-BOOT comparison, so a uniform
-    host-speed change (r9→r10 measured 1.23x when the VM moved to a
-    2.10 GHz host) self-corrects instead of widening the no-detect band.
-    ``warmup`` untimed executions first, so the number measures the host,
-    not whole-stage-codegen JIT compilation (see CALIB_VERSION)."""
-    from pyspark.sql import functions as F
-
-    # shiftright keeps the summed terms ≤ 2^32 so ANSI mode can't overflow
-    # the long accumulator over 3.2e9 rows
-    df = spark.range(0, 3_200_000_000, 1, 32).select(
-        F.sum(F.shiftright(F.xxhash64("id"), 32)).alias("h")
-    )
-    for _ in range(warmup):
-        materialize(df)
-    best = float("inf")
-    for _ in range(runs):
-        t0 = time.time()
-        materialize(df)
-        best = min(best, time.time() - t0)
-    return round(best, 4)
-
-
-_MEM_PROBE = None  # 2 GiB int64 stream, built once per process
-
-
-def _calibrate_mem(runs: int = 3) -> float:
-    """Memory-bandwidth probe (r13 verdict task 5). The r13 closing runs
-    exposed a ±12% whole-run drift mode that the xxhash ALU probe does
-    NOT see (the slowest run had the FASTEST probes): the drift hits
-    scans and shuffles — memory-subsystem work — while the register-
-    resident ALU loop sails through. This probe is the complement: min
-    wall time of a full sequential pass (numpy int64 sum, a single
-    C-level stream far larger than any cache) over a 2 GiB driver-side
-    array. Deliberately NOT a Spark job: no task scheduling, no codegen,
-    no CacheManager residue — the number moves only when DRAM/interconnect
-    throughput does, which is exactly the mode the xxhash probe missed.
-    The contention flag requires BOTH probes steady across the timed
-    window (either one disagreeing >20% marks the attempt contended).
-    The array is built once per process and reused by every probe site;
-    it lives in Python memory, outside the JVM heap, so it adds no GC
-    pressure to the queries it brackets."""
-    import numpy as np
-
-    global _MEM_PROBE
-    if _MEM_PROBE is None:
-        # arange, not zeros: the kernel's lazy zero pages would turn the
-        # "scan" into a single-page cache loop
-        _MEM_PROBE = np.arange(256_000_000, dtype=np.int64)
-        _MEM_PROBE.sum()  # fault every page in before timing
-    best = float("inf")
-    for _ in range(runs):
-        t0 = time.time()
-        _MEM_PROBE.sum()
-        best = min(best, time.time() - t0)
-    return round(best, 4)
-
-
-# The dedup family whose r10 bench promotion moved the 32-way signature
-# aggregate into the shared prewarmed staging pass: their headline (warm,
-# staging-amortized) numbers are not comparable to r9's in-query-staging
-# numbers, so BENCH_DETAIL also publishes their COLD cost — fresh JVM, no
-# prewarm, single pass, staging paid in-query (r11 verdict task 6).
-COLD_FAMILY = (
-    "dedup_near",
-    "dedup_near_verified",
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-)
-
-
-def _cold_family_timings(sf_dir: str) -> dict:
-    """Run bench.py on COLD_FAMILY in fresh subprocesses (fresh JVM each)
-    in cold mode and return per-query timings for the ``cold`` section.
-
-    min-of-2 FRESH JVMS since r14 (r13 verdict task 6): the r13 cold
-    section was single-shot, so a 3x ambient swing (cold dedup_near
-    28.0 s vs 9.2 s in r12) was unclassifiable — real cold-path
-    regression or noisy host, no way to tell. Each attempt is still a
-    genuine cold pass (its own JVM, no prewarm, staging paid in-query,
-    single in-JVM pass); running TWO of them and taking the per-query
-    min keeps cold semantics while bounding one-shot ambient inflation,
-    exactly the min-of-passes convention the warm section uses. Both
-    attempts' probe brackets ship so a reader can see which one was
-    quiet."""
-    import subprocess
-    import tempfile
-
-    results: list[dict] = []
-    for _ in range(2):
-        with tempfile.TemporaryDirectory() as td:
-            path = os.path.join(td, "cold_detail.json")
-            env = dict(os.environ)
-            env.update(
-                {
-                    "SPARK_GRAFT_BENCH_COLD": "1",
-                    "SPARK_GRAFT_BENCH_ONLY": ",".join(COLD_FAMILY),
-                    "SPARK_GRAFT_BENCH_DETAIL_PATH": path,
-                    "SPARK_GRAFT_SF_DIR": sf_dir,
-                }
-            )
-            try:
-                subprocess.run(
-                    [sys.executable, os.path.abspath(__file__)],
-                    env=env, capture_output=True, timeout=900, check=True,
-                )
-                with open(path) as fh:
-                    results.append(json.load(fh))
-            except Exception as exc:  # noqa: BLE001 — cold section is additive
-                if not results:
-                    return {"error": f"{type(exc).__name__}: {exc}"[:200]}
-    merged: dict[str, float] = {}
-    for cold in results:
-        for name, t in cold["queries"].items():
-            if t >= 0 and (name not in merged or t < merged[name]):
-                merged[name] = t
-    return {
-        "queries": merged,
-        "attempts": [
-            {
-                "queries": cold["queries"],
-                "calib_sec": cold.get("boot", {}).get("calib_sec"),
-                "calib_sec_post": cold.get("boot", {}).get("calib_sec_post"),
-                "calib_mem_sec": cold.get("boot", {}).get("calib_mem_sec"),
-                "calib_mem_sec_post": cold.get("boot", {}).get("calib_mem_sec_post"),
-                "contended": cold.get("contended"),
-            }
-            for cold in results
-        ],
-        "note": (
-            "min of 2 fresh-JVM single-pass attempts, no prewarm — "
-            "shared staging paid in-query; the apples-to-apples basis "
-            "for cross-round dedup speedup claims"
-        ),
-    }
 
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("tmr-bench")
-    specs = {n: s for n, s in all_specs().items() if s.bench}
-    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY", "")
-    if only:
-        wanted = set(only.split(","))
-        specs = {n: s for n, s in specs.items() if n in wanted}
-
-    # CPU calibration BEFORE any query work, on the cold-but-settled JVM —
-    # same position every round so the probe measures the host, not the
-    # bench's residue
-    calib_sec = _calibrate(spark)
-
-    # All queries share ONE session/JVM by design: a fresh JVM per family
-    # would add ~10 s × families of pure startup and measure Spark's boot,
-    # not the queries; the cost is mild cross-query contention (GC, codegen
-    # cache churn) that shows up as run-to-run spread — which is why every
-    # pass is timed and the per-query min/max goes to the sidecar, so a
-    # drifted timing is classifiable as noise vs regression without rerunning.
-    #
-    # Pass 1 doubles as the warm-up (whole-stage codegen compilation and
-    # parquet footer caches are one-time costs, not engine throughput); the
-    # official per-query timing is the MIN across passes — the steady-state
-    # convention that a one-off GC pause in either pass cannot inflate
-    # (measured: an 11.5 s last-pass outlier on a 1.6 s query, unchanged
-    # code). The full min/max spread still ships in the sidecar so drift
-    # stays classifiable. SPARK_GRAFT_BENCH_COLD=1 reports the single cold
-    # pass instead.
-    cold = os.environ.get("SPARK_GRAFT_BENCH_COLD", "") == "1"
-    n_passes = 1 if cold else int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "2"))
-    from toy_map_reduce_spark.functions.ranks import release_scratch
-
-    # Pre-materialize the cross-query shared staging tables (shingle
-    # stage, capped shingles, simhash blocks) OUTSIDE the timed window and
-    # report their cost as an explicit line (r7 verdict task 2): otherwise
-    # whichever dedup query runs first pays the shared materialization and
-    # its per-query minimum is an ordering artifact, not a plan signal.
-    # SPARK_GRAFT_BENCH_NO_PREWARM=1 restores the r7 behavior for A/Bs.
-    # Cold mode skips prewarm AND the floor probes entirely (r8 advisor):
-    # they warm codegen/footer caches and persist the dedup staging, which
-    # silently changed what the single "cold" pass was measuring.
-    # Materialize the ingest-time layout normalization (tables._read_path
-    # re-chunk) up front and report its cost explicitly (r13 verdict task
-    # 9): the re-chunked copies are disk-cached across runs, so on a warm
-    # checkout this is ~0 s — but on a fresh checkout whichever query
-    # first scanned each table silently paid the one-time rewrite inside
-    # its timed window. Same visibility treatment as staging_sec.
-    layout_sec = None
-    if not cold:
-        from toy_map_reduce_spark.tables import TABLES, _read_path
-
+    timings: dict[str, float] = {}
+    for name, spec in all_specs().items():
+        if not spec.bench:
+            continue
         t0 = time.perf_counter()
-        for t in TABLES:
-            _read_path(sf_dir, t)
-        layout_sec = round(time.perf_counter() - t0, 4)
+        try:
+            spec.builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            timings[name] = round(time.perf_counter() - t0, 4)
+        except Exception as exc:  # a broken query shouldn't zero the run
+            print(f"bench: {name} FAILED: {exc}", file=sys.stderr)
+            timings[name] = -1.0
+        # outside the timed window: drop this query's scratch persists
+        release_scratch()
 
-    staging: dict[str, float] = {}
-    if not cold and os.environ.get("SPARK_GRAFT_BENCH_NO_PREWARM", "") != "1":
-        from toy_map_reduce_spark.operators.dedup import prewarm_staging
-
-        staging = prewarm_staging(spark, sf_dir)
-
-    # Measure the streaming query-start/stop floor once per run (r7
-    # verdict task 7): over half of most S-tier entries is this harness
-    # constant, so the sidecar carries it (floor_sec) plus the S-tier
-    # query list, and bench_regress compares S-tier entries with the
-    # floor subtracted — a streaming-logic regression can't hide under
-    # the constant, and floor drift can't masquerade as one.
-    floor_sec = None
-    if not cold:
-        from toy_map_reduce_spark.streaming.windows import measure_streaming_floor
-
-        floor_sec = measure_streaming_floor(spark, sf_dir)
-
-    # Contention-retry protocol (r12 verdict task 1): a contended run is
-    # "not evidence" by the flag's own definition, yet r12's driver-visible
-    # artifact WAS one (289.5 s contended vs the adjudicated 271.6 s quiet
-    # rerun). So bench.py no longer finalizes a contended attempt while it
-    # has retries left: each attempt is bracketed by its own pre/post calib
-    # probes, and if they disagree >20% the whole timed window re-runs
-    # (bounded, SPARK_GRAFT_BENCH_MAX_ATTEMPTS, default 3). Only if every
-    # attempt is contended does the artifact ship contended:true — with the
-    # full attempt history stamped in, so a reader sees the host never went
-    # quiet rather than mistaking ambient load for a plan change. Warm
-    # retries are safe under the min-of-passes convention: caches being
-    # warmer on attempt 2 can only tighten a minimum, never inflate it.
-    max_attempts = 1 if cold else int(
-        os.environ.get("SPARK_GRAFT_BENCH_MAX_ATTEMPTS", "3")
-    )
-    attempts: list[dict] = []
-    calib_pre = calib_sec
-    mem_pre = _calibrate_mem()
-    for attempt in range(max_attempts):
-        if attempt > 0:
-            calib_pre = _calibrate(spark)
-            mem_pre = _calibrate_mem()
-        per_pass: list[dict[str, float]] = []
-        for p in range(n_passes):
-            timings: dict[str, float] = {}
-            for name, spec in specs.items():
-                t0 = time.perf_counter()
-                try:
-                    materialize(spec.builder(spark, sf_dir))
-                    timings[name] = round(time.perf_counter() - t0, 4)
-                except Exception as exc:  # a broken query shouldn't zero the bench
-                    if p == n_passes - 1:
-                        print(f"bench: {name} FAILED: {exc}", file=sys.stderr)
-                    timings[name] = -1.0
-                # release rank-primitive scratch persists OUTSIDE the timed
-                # window: the CacheManager holds them strongly, and letting
-                # them pile up inflates every later query with GC pressure
-                release_scratch()
-            per_pass.append(timings)
-        spread = {
-            name: [min(ts), max(ts)]
-            for name in per_pass[-1]
-            if (ts := [pp[name] for pp in per_pass if pp[name] >= 0])
-        }
-        timings = {
-            name: (spread[name][0] if name in spread else -1.0)
-            for name in per_pass[-1]
-        }
-
-        # Post-attempt calibration probes (r11 verdict task 5; mem probe
-        # r13 verdict task 5): ambient VM contention can inflate a whole
-        # run 20%+ with 10x single-query outliers on the SAME boot
-        # (BENCH_r11: probe 1.388 vs 0.840 same-boot), and the r13
-        # closing runs drifted ±12% with STEADY xxhash probes — a
-        # memory-bandwidth mode the ALU loop can't see. Either probe
-        # disagreeing >20% pre-vs-post means the host was not quiet
-        # while the queries ran — retry rather than record. Cold mode
-        # stamps its probes too (r13 verdict task 6: the single-shot
-        # cold numbers need their own quiet-host evidence) but never
-        # retries — a second in-JVM pass would no longer be cold.
-        calib_post = _calibrate(spark)
-        mem_post = _calibrate_mem()
-        contended = bool(
-            abs(calib_post - calib_pre) / calib_pre > 0.2
-            or abs(mem_post - mem_pre) / mem_pre > 0.2
-        )
-        attempts.append(
-            {
-                "calib_pre": calib_pre,
-                "calib_post": calib_post,
-                "calib_mem_pre": mem_pre,
-                "calib_mem_post": mem_post,
-                "contended": contended,
-                "total": round(
-                    sum(t for t in timings.values() if t >= 0), 4
-                ),
-            }
-        )
-        if not contended:
-            break
-        print(
-            f"bench: CONTENDED attempt {attempt + 1}/{max_attempts} — calib "
-            f"probe moved {calib_pre} -> {calib_post} across the timed "
-            f"window"
-            + (
-                "; retrying" if attempt + 1 < max_attempts
-                else "; retries exhausted — artifact ships contended:true"
-            ),
-            file=sys.stderr,
-        )
-    calib_sec = calib_pre  # the probe that brackets the RECORDED attempt
-
-    total = round(sum(t for t in timings.values() if t >= 0), 4)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:
         sf_val: float | str = float(sf)
     except ValueError:
         sf_val = sf
-
-    detail = {
-        "metric": "total_query_wall_time",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "n_queries": len(timings),
-        "n_failed": sum(1 for t in timings.values() if t < 0),
-        "queries_minmax": spread,
-        "n_passes": n_passes,
-        # staging cost paid once outside timed passes (prewarm_staging);
-        # NOT included in "value" — the headline stays sum-of-mins, which
-        # in r6/r7 already excluded staging (pass-2 minimums hit warm
-        # caches); this line just makes the cost visible and attributable
-        "staging_sec": round(sum(staging.values()), 4),
-        "staging": staging,
-        # one-time parquet re-chunk cost (tables._read_path layout cache),
-        # paid outside the timed window and disk-cached across runs
-        "layout_sec": layout_sec,
-        # measured streaming start/stop floor + which queries pay it;
-        # bench_regress compares S-tier entries floor-adjusted
-        "floor_sec": floor_sec,
-        "s_tier": sorted(n for n, s in specs.items() if s.tier == "S"),
-        # boot/host stamp: bench_regress warns on cross-boot comparisons
-        # (uniform ±7-20% drift is machine noise, not a regression);
-        # calib_sec_post brackets the timed window — `contended` is the
-        # self-reported "this run is not evidence" flag
-        "boot": {**_boot_info(), "calib_sec": calib_sec,
-                 "calib_sec_post": calib_post,
-                 # driver-side DRAM-bandwidth probe (r13 verdict task 5);
-                 # NOT used for cross-boot normalization (calib_sec keeps
-                 # that role, so calib_version stays 2) — only for the
-                 # contended flag, where it catches the scan-side drift
-                 # mode the ALU probe misses
-                 "calib_mem_sec": mem_pre,
-                 "calib_mem_sec_post": mem_post,
-                 "calib_version": CALIB_VERSION},
-        "contended": contended,
-        # every attempt's probe bracket + total — on a contended:true
-        # artifact this shows the host never went quiet across all retries
-        "attempts": attempts,
-        "sf": sf_val,
-    }
-    if not cold and not only:
-        # cold no-prewarm numbers for the staging-amortized dedup family
-        # (fresh subprocess AFTER the timed window, so its CPU use can't
-        # pollute the headline numbers)
-        detail["cold"] = _cold_family_timings(sf_dir)
-    detail_path = os.environ.get("SPARK_GRAFT_BENCH_DETAIL_PATH") or os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-    )
-    with open(detail_path, "w") as fh:
-        json.dump(detail, fh, indent=1, sort_keys=True)
-    print(json.dumps(detail), file=sys.stderr)
-
-    # stdout: compact — top-10 slowest only, so the driver's tail capture
-    # always sees a complete, parseable JSON line
     slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:10])
-    print(
-        json.dumps(
-            {
-                "metric": "total_query_wall_time",
-                "value": total,
-                "unit": "sec",
-                "queries": slowest,
-                "sf": sf_val,
-            }
-        )
-    )
+    print(json.dumps({
+        "metric": "total_query_wall_time",
+        "value": round(sum(t for t in timings.values() if t >= 0), 4),
+        "unit": "sec",
+        "queries": slowest,
+        "sf": sf_val,
+    }))
     return 0
 
 

@@ -3,7 +3,9 @@
 # last commit ran only sf0.01 parity; this script is the process fix
 # (VERDICT r4 item 2). It runs, in order:
 #
-#   1. the FULL pytest suite at the fixture scale (sf0.001)
+#   1. the default pytest tier at the fixture scale (sf0.001)
+#  1b. the sweep pytest tier (`-m sweep`: full-registry parity,
+#      degenerate and skewed sweeps)
 #   2. the all-query oracle parity sweep at sf0.001 + sf0.01 + sf0.1
 #      (sf0.1 since r9 — the first bench-scale sweep caught five value
 #      drifts both smaller SFs were green on), plus the two perturbed
@@ -21,9 +23,8 @@
 #      50-key window; real executor processes, local-cluster[2,4,2048])
 #   6. the memory-pressure spill smoke (r11 — heavy tail at 2g heap /
 #      memory.fraction 0.2, parity under observed multi-GB spill)
-#   7. the per-query bench regression gate (only if a fresh
-#      BENCH_DETAIL.json exists next to a prior round's file;
-#      cross-boot comparisons normalized by boot.calib_sec since r11)
+#   7. the benchmark's own tests (perfbench: percentile and round rules,
+#      seeded inputs, oracle checks, the BENCHMARK.json contract)
 #
 # Exit non-zero if anything is red. Cite the one-line result in the round's
 # closing commit message.
@@ -58,20 +59,8 @@ python scripts/localcluster_smoke.py --full LOCALCLUSTER.json || fail=1
 echo "== handoff gate 6/7: memory-pressure spill smoke =="
 python scripts/spill_smoke.py SPILL.json || fail=1
 
-echo "== handoff gate 7/7: bench regression =="
-# highest ROUND, not newest mtime: a fresh checkout gives every r*.json
-# the same mtime and ls -t tie-breaks arbitrarily (observed: picked r4
-# over r5, resurrecting regressions the r5 baseline already absorbs)
-prev=$(ls BENCH_DETAIL_r*.json 2>/dev/null | sort -V | tail -1)
-if [[ -n "${prev}" && -f BENCH_DETAIL.json ]]; then
-  python scripts/bench_regress.py "${prev}" BENCH_DETAIL.json
-  rc=$?
-  if [[ $rc -eq 1 ]]; then fail=1
-  elif [[ $rc -eq 2 ]]; then echo "bench_regress: INCOMPARABLE (rc=2)"; fail=1
-  fi
-else
-  echo "bench_regress: skipped (need ${prev:-BENCH_DETAIL_r*.json} + BENCH_DETAIL.json)"
-fi
+echo "== handoff gate 7/7: perfbench tests =="
+python3 -m pytest perfbench -q || fail=1
 
 if [[ $fail -eq 0 ]]; then
   echo "HANDOFF GATE: GREEN"

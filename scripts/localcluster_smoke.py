@@ -56,8 +56,8 @@ def main() -> int:
     out_path = args[0] if args else "LOCALCLUSTER.json"
 
     os.environ["SPARK_GRAFT_MASTER"] = MASTER
-    # two 2048 MB executors can't take the local-mode 24g driver default,
-    # and the driver does no heavy lifting here
+    # the default heap (half the host RAM) is sized for local mode, where it
+    # also holds every executor thread; here the driver does no heavy lifting
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
 
     import duckdb

@@ -1,13 +1,8 @@
 #!/usr/bin/env python
-"""Generate benign scale-equivalent corpora for the scaling fit:
-data/sf1_bench (10x sf0.1, r11 verdict task 4) and data/sf3_bench
-(30x sf0.1, r12 verdict task 6 — third scaling step for the dedup
-family).
-
-The scaling smoke fit one decade (sf0.01 -> sf0.1); a superlinear term
-with a small constant can hide inside one decade and dominate the next.
-These corpora extend the fit to sf1 (6M lineitem, 1M events, 50k
-documents) and sf3 without waiting on fixture generation.
+"""Generate benign scale-equivalent corpora: data/sf1_bench (10x sf0.1:
+6M lineitem, 1M events, 50k documents) and data/sf3_bench (30x sf0.1),
+without waiting on fixture generation. tests/test_corpora.py pins their
+FK integrity and replica independence.
 
 Construction (DuckDB, deterministic, no RNG): every scaling table is
 replicated REP x with per-replica key offsets, mirroring how TPC-H SF

@@ -1,9 +1,10 @@
 #!/usr/bin/env python
 """Memory-pressure spill smoke (r10 verdict task 6).
 
-The 128 GiB sandbox hides spill bugs: with a 24g heap nothing ever
-spills, so external-sort/agg spill paths, spill-file cleanup, and
-result correctness UNDER spill were exercised zero times before r11.
+A default-sized heap (half the host's RAM) hides spill bugs: at the
+fixture scales nothing ever spills, so external-sort/agg spill paths,
+spill-file cleanup, and result correctness UNDER spill were exercised
+zero times before r11.
 This smoke starves the engine on purpose:
 
     driver memory 2g (local mode: the one heap everything shares)
@@ -14,8 +15,7 @@ then runs a widened selection (r11 verdict task 3 — the r11 smoke
 covered 10 dedup/percentile-heavy queries; the sort-based-shuffle
 families had never executed under pressure):
 
-    * the heavy-tail queries (same top-N-by-cost selection as
-      scaling_smoke),
+    * the heavy-tail queries (HEAVY_TAIL below),
     * the big-sort shuffle families the first smoke missed —
       window_median, window_gaps_islands, sort_limit_offset,
       graph_pagerank, stream_chained_windows (streaming state store
@@ -30,8 +30,8 @@ API's per-stage memory/disk spill counters must be nonzero across the
 run, otherwise the smoke silently proved nothing.
 
 Usage:
-    python scripts/spill_smoke.py SPILL_r12.json
-    TOP_N=10 WINDOW=50 python scripts/spill_smoke.py out.json
+    python scripts/spill_smoke.py SPILL.json
+    WINDOW=50 python scripts/spill_smoke.py out.json
 """
 
 from __future__ import annotations
@@ -55,6 +55,22 @@ SF_DIR = os.path.join(
 )
 
 
+# The ten slowest non-streaming queries in round 9's sf0.1 per-query
+# timings (BENCH_DETAIL_r9.json, since removed; git history keeps it).
+# The gate used to re-derive this list from that file on every run.
+HEAVY_TAIL = [
+    "agg_weighted",
+    "tokenize_bpe_apply",
+    "dedup_near_verified",
+    "dedup_simhash",
+    "graph_bfs_levels",
+    "sql_recursive_cte",
+    "dedup_near",
+    "agg_trimmed_mean",
+    "agg_percentile",
+    "dedup_ngram_jaccard",
+]
+
 # sort-based-shuffle families added in r12: per-key window sorts, a
 # global order-by, an iterative join loop, and a stateful stream
 SHUFFLE_FAMILIES = [
@@ -68,7 +84,6 @@ SHUFFLE_FAMILIES = [
 
 def main() -> int:
     out_path = sys.argv[1] if len(sys.argv) > 1 else "SPILL.json"
-    top_n = int(os.environ.get("TOP_N", "10"))
     window = int(os.environ.get("WINDOW", "50"))
 
     os.environ["SPARK_GRAFT_DRIVER_MEM"] = "2g"
@@ -76,7 +91,6 @@ def main() -> int:
     import duckdb
 
     from parity import canonical_rows, fetch_oracle
-    from scaling_smoke import pick_queries
     from toy_map_reduce_spark.functions.ranks import release_scratch
     from toy_map_reduce_spark.registry import all_specs
     from toy_map_reduce_spark.session import get_spark
@@ -89,7 +103,7 @@ def main() -> int:
 
     driver_window = sorted(_specs_fn())[:window]
     names = list(dict.fromkeys(
-        pick_queries(top_n) + SHUFFLE_FAMILIES + driver_window
+        HEAVY_TAIL + SHUFFLE_FAMILIES + driver_window
     ))
     # 8 cores, not local[32]: a 2g heap at 32 concurrent tasks is
     # 64 MB/task — no production executor runs that ratio, and the

@@ -430,59 +430,6 @@ def test_bracketed_stats_null_contract(spark):
         ).collect()
 
 
-def test_bench_regress_floor_adjusted_s_tier(tmp_path):
-    """The bench regression gate (scripts/bench_regress.py) must compare
-    S-tier entries with the measured streaming start/stop floor
-    subtracted on BOTH sides: floor drift alone must not flag, a real
-    logic regression above the floor must, and files without floor data
-    (pre-r8 baselines) fall back to the unadjusted compare."""
-    import json
-    import os
-    import subprocess
-    import sys
-
-    script = os.path.join(
-        os.path.dirname(__file__), "..", "scripts", "bench_regress.py"
-    )
-
-    def run(old, new):
-        po, pn = tmp_path / "old.json", tmp_path / "new.json"
-        po.write_text(json.dumps(old))
-        pn.write_text(json.dumps(new))
-        r = subprocess.run(
-            [sys.executable, script, str(po), str(pn)],
-            capture_output=True, text=True,
-        )
-        return r.returncode, json.loads(r.stdout)
-
-    base = {
-        "sf": 0.1, "value": 10, "floor_sec": 0.6, "s_tier": ["stream_x"],
-        "queries": {"stream_x": 1.2},
-        "queries_minmax": {"stream_x": [1.2, 1.4]},
-    }
-    # floor drift (0.6 -> 1.1) doubles the raw timing: absorbed
-    drift = dict(base, floor_sec=1.1, queries={"stream_x": 2.2},
-                 queries_minmax={"stream_x": [2.2, 2.3]})
-    code, out = run(base, drift)
-    assert code == 0 and out["n_regressions"] == 0
-    assert out["n_floor_adjusted"] == 1
-
-    # same raw timings but floor unchanged: logic above floor grew
-    # 0.8 -> 2.2 (> 2x + 0.3 slack) -> flagged, with the adjusted
-    # numbers recorded for adjudication
-    bad = dict(base, queries={"stream_x": 2.9},
-               queries_minmax={"stream_x": [2.9, 3.0]})
-    code, out = run(base, bad)
-    assert code == 1
-    assert out["regressions"]["stream_x"]["floor_adjusted"]["new"] == 2.3
-
-    # old side predates floor reporting: raw compare still applies
-    old_raw = {k: v for k, v in base.items()
-               if k not in ("floor_sec", "s_tier")}
-    code, out = run(old_raw, bad)
-    assert code == 1 and out["n_floor_adjusted"] == 0
-
-
 def test_row_count_matches_footer_and_handles_layouts(spark, sf_dir, tmp_path):
     """tables.row_count must return the exact fixture row count from
     parquet footers (single-file AND directory layouts) without a Spark
@@ -518,79 +465,6 @@ def test_row_count_matches_footer_and_handles_layouts(spark, sf_dir, tmp_path):
         "r_regionkey"
     ).parquet(str(tmp_path / "region_part.parquet"))
     assert row_count(str(tmp_path), "region_part") is None
-
-
-def test_bench_regress_boot_note_and_adjudication(tmp_path, monkeypatch, capsys):
-    """r9 bench_regress additions: differing boot ids add a WARN note
-    without failing the gate, and --adjudicate re-verdicts flagged
-    queries through the warm protocol — warm_min within the old noise
-    band moves the entry to adjudicated_noise (exit 0), above it stays a
-    regression (exit 1)."""
-    import importlib.util
-    import json
-    import os
-    import sys
-
-    spec = importlib.util.spec_from_file_location(
-        "bench_regress",
-        os.path.join(os.path.dirname(__file__), "..", "scripts", "bench_regress.py"),
-    )
-    br = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(br)
-
-    base = {
-        "sf": 0.1, "value": 10,
-        "queries": {"q_a": 1.0, "q_b": 1.0},
-        "queries_minmax": {"q_a": [1.0, 1.1], "q_b": [1.0, 1.1]},
-        "boot": {"boot_id": "boot-AAA", "uptime_sec": 10},
-    }
-    # both queries regress raw (>2x old max + floor); warm protocol says
-    # q_a was noise (warm_min 1.05 <= old max 1.1), q_b is real
-    new = dict(
-        base,
-        queries={"q_a": 2.6, "q_b": 2.6},
-        queries_minmax={"q_a": [2.6, 2.7], "q_b": [2.6, 2.7]},
-        boot={"boot_id": "boot-BBB", "uptime_sec": 99},
-    )
-    po, pn = tmp_path / "old.json", tmp_path / "new.json"
-    po.write_text(json.dumps(base))
-    pn.write_text(json.dumps(new))
-
-    # _adjudicate returns (warm_mins, meta) since r12; an empty meta
-    # exercises the fallback warm normalization path (_norm)
-    monkeypatch.setattr(
-        br, "_adjudicate", lambda names, sf: ({"q_a": 1.05, "q_b": 2.4}, {})
-    )
-    monkeypatch.setattr(
-        sys, "argv", ["bench_regress.py", str(po), str(pn), "--adjudicate"]
-    )
-    code = br.main()
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert "boot_note" in out  # cross-boot WARN present
-    assert out["n_adjudicated_noise"] == 1
-    assert out["adjudicated_noise"]["q_a"]["warm_min"] == 1.05
-    assert "q_b" in out["regressions"]
-    assert "real" in out["regressions"]["q_b"]["verdict"]
-    assert code == 1  # q_b still fails the gate
-
-    # same files without --adjudicate: both flagged, note still WARN-only
-    monkeypatch.setattr(sys, "argv", ["bench_regress.py", str(po), str(pn)])
-    code = br.main()
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert code == 1 and out["n_regressions"] == 2
-    assert out["n_adjudicated_noise"] == 0
-
-    # all flagged entries adjudicate as noise -> gate passes
-    monkeypatch.setattr(
-        br, "_adjudicate", lambda names, sf: ({"q_a": 1.05, "q_b": 1.08}, {})
-    )
-    monkeypatch.setattr(
-        sys, "argv", ["bench_regress.py", str(po), str(pn), "--adjudicate"]
-    )
-    code = br.main()
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert code == 0 and out["n_regressions"] == 0
-    assert out["n_adjudicated_noise"] == 2
 
 
 def test_derby_base_is_per_process(monkeypatch):

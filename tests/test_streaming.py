@@ -161,17 +161,3 @@ def test_transform_with_state_gates_cleanly_without_protobuf(spark, sf_dir):
         pytest.skip("protobuf present; covered by the run variant")
     with pytest.raises(RuntimeError, match="protobuf"):
         sw.stream_transform_with_state(spark, sf_dir)
-
-
-def test_streaming_floor_probe_cleans_up_temp_views(spark, sf_dir):
-    """measure_streaming_floor must leave no floor_probe_* memory-sink
-    views behind (r8 verdict task 8) — a bench session's catalog should
-    reflect only real queries."""
-    from toy_map_reduce_spark.streaming.windows import measure_streaming_floor
-
-    floor = measure_streaming_floor(spark, sf_dir, passes=1)
-    assert floor > 0
-    leftovers = [
-        t.name for t in spark.catalog.listTables() if "floor_probe" in t.name
-    ]
-    assert leftovers == []

@@ -50,9 +50,10 @@ __all__ = [
 # action. Spark's SQL CacheManager holds strong references — without a
 # release, a long-lived session running many rank queries accumulates
 # cached blocks and every LATER query pays the GC pressure (measured:
-# ~20% uniform inflation across a 389-query bench run). Callers that
-# drive many queries through one session (bench.py after each query)
-# call release_scratch() once the result is materialized.
+# ~20% uniform inflation across a full registry pass). Callers that
+# drive many queries through one session call release_scratch() once a
+# result is materialized (bench.py and the parity sweeps after each
+# query, perfbench between rounds).
 _SCRATCH: list[DataFrame] = []
 
 
@@ -62,16 +63,16 @@ def register_scratch(df: DataFrame) -> DataFrame:
     persist their own pre-rank aggregates (orders_rfm's customer frame,
     the doc-grain sized frames) use this instead of reaching into the
     private list, so every consumer that honors the lifecycle (bench.py,
-    bench_subset.py, the parity sweeps) releases their scratch too.
+    perfbench, the parity sweeps) releases it too.
 
     Enrollment boundary (r7 A/B): enroll ONLY frames private to one
     query's rank pass. Staging tables that other queries in the same
     session re-find through the CacheManager's plan matching — the
     shingle stage, simhash blocks, the market-basket item table — must
     NOT be enrolled: releasing them per query severed that cross-query
-    reuse and cost +22 s on the 389-query bench; the ContextCleaner
-    retires them when their plans are garbage-collected. Returns ``df``
-    so the call chains at the persist site."""
+    reuse and cost +22 s over a full registry pass. The CacheManager
+    keeps them until ``spark.catalog.clearCache()``. Returns ``df`` so
+    the call chains at the persist site."""
     _SCRATCH.append(df)
     return df
 

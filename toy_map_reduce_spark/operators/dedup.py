@@ -185,15 +185,17 @@ def shingle_stage(docs: DataFrame) -> DataFrame:
     what a production 100 TB dedup run does: materialize the shingle table
     once (disk-backed cache or a staging parquet), then fan out. The
     lineage stays intact, so the pipeline is still correct — just slower —
-    if the cache is evicted; Spark's ContextCleaner drops the cached
-    blocks once the query's frames are garbage-collected.
+    if the cache is evicted. The cached blocks are NOT dropped when the
+    query's frames are garbage-collected: Spark's CacheManager holds them
+    until ``spark.catalog.clearCache()`` (or an unpersist of an equal
+    plan).
 
     Deliberately NOT enrolled in the rank-scratch release lifecycle: the
     staging table is SHARED across queries in one session through Spark's
     CacheManager (dedup_near_verified materializes it; ngram_jaccard /
     containment / clusters / threshold_sweep then hit the same plan) —
-    that cross-query reuse is the staging-table pattern itself. An r7
-    A/B that released it per query cost +22 s on the 389-query bench."""
+    that cross-query reuse is the staging-table pattern itself. An A/B
+    that released it per query cost +22 s over a full registry pass."""
     from pyspark import StorageLevel
 
     return _shingles(docs).persist(StorageLevel.MEMORY_AND_DISK)
@@ -236,44 +238,6 @@ def capped_shingles(docs: DataFrame, df_cap: int = DF_CAP,
     )
 
 
-def prewarm_staging(spark: SparkSession, sf_dir: str) -> dict[str, float]:
-    """Materialize the cross-query shared staging tables ONCE, returning
-    {stage: seconds}. Bench attributability fix (r7 verdict task 2): the
-    dedup family shares these persists through the CacheManager's plan
-    matching, so whichever query ran first in a timed pass paid the
-    materialization and its minimum stopped meaning anything
-    (dedup_containment's r6/r7 noise band spanned ~[1.5, 4.7] s purely on
-    ordering). bench.py calls this before the timed passes and reports
-    the cost as its own ``staging`` line, so per-query minimums measure
-    the query's OWN logic and the staging cost stays visible instead of
-    being smeared over an arbitrary victim. The +22 s cross-query-reuse
-    regime (ranks.py:register_scratch enrollment boundary) is untouched —
-    this just moves WHO pays, not whether the caches live.
-
-    The plans built here must stay IDENTICAL to what the queries build
-    (CacheManager matches on the analyzed plan): shingle_stage(docs),
-    capped_shingles(docs, sh_all=shingle_stage(docs)) with the default
-    df cap, simhash_blocks(simhash_signatures(docs)), and
-    minhash_sig_stage(docs) (r10 — the CW signature aggregate shared by
-    the four minhash consumers)."""
-    import time as _time
-
-    docs = load(spark, sf_dir, "documents")
-    out: dict[str, float] = {}
-    sh_all = shingle_stage(docs)
-    stages = {
-        "shingle_stage": sh_all,
-        "capped_shingles": capped_shingles(docs, sh_all=sh_all),
-        "simhash_blocks": simhash_blocks(simhash_signatures(docs)),
-        "minhash_sig": minhash_sig_stage(docs),
-    }
-    for name, frame in stages.items():
-        t0 = _time.perf_counter()
-        frame.count()  # populates the persist; consumers hit the cache
-        out[name] = round(_time.perf_counter() - t0, 4)
-    return out
-
-
 _DEDUP_EXACT_ORACLE = """
 SELECT sha256(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')) AS text_hash,
        CAST(MIN(doc_id) AS BIGINT) AS keep_id,
@@ -307,23 +271,6 @@ def _minhash_sig(sh: DataFrame) -> DataFrame:
     ]
     sig = words.groupBy("doc_id").agg(*minhash_cols)
     return sig.select("doc_id", F.array(*[f"mh{j}" for j in range(NUM_HASHES)]).alias("sig"))
-
-
-def minhash_sig_stage(docs: DataFrame) -> DataFrame:
-    """The persisted minhash signature staging table: (doc_id, sig),
-    32 longs per doc — tiny (n_docs rows) but the product of the corpus-
-    wide md5 + 32-way min-aggregate, and FOUR queries consume it
-    (dedup_near, dedup_near_verified, dedup_lsh_eval,
-    dedup_ensemble_report). Same staging-table lifecycle as shingle_stage:
-    persisted MEMORY_AND_DISK, shared across queries through the
-    CacheManager's analyzed-plan matching, materialized by prewarm_staging
-    so bench passes time the banding join and verify stages — the
-    per-query logic — rather than re-paying the signature scan. At 100 TB
-    this IS the production shape: signatures are computed once per corpus
-    snapshot and every dedup/eval pass reads the staged table."""
-    from pyspark import StorageLevel
-
-    return _minhash_sig(shingle_stage(docs)).persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def minhash_candidates(docs: DataFrame, sh_all: DataFrame | None = None) -> DataFrame:
@@ -643,8 +590,8 @@ def simhash_blocks(sig: DataFrame) -> DataFrame:
     the signature aggregate (64 bit-count sums) run once, not twice —
     and, like shingle_stage, the CacheManager shares it across queries
     in one session (dedup_simhash_pairs, dedup_eval's hamming arm).
-    Module-level so bench prewarm (prewarm_staging) can build the
-    IDENTICAL plan and pay the materialization outside timed passes."""
+    Module-level so every consumer builds the IDENTICAL plan, which is
+    what the CacheManager matches on."""
     from pyspark import StorageLevel
 
     blocks = sig.select(

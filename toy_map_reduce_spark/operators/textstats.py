@@ -975,7 +975,8 @@ def tokenize_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the cache; the returned plan did not). Enrolling the cache in the
     # rank-scratch lifecycle instead keeps it alive through the caller's
     # materialization and releases it at the established boundary
-    # (bench.py / bench_subset / parity call release_scratch per query).
+    # (bench.py and parity call release_scratch per query, perfbench
+    # per round).
     # Interleaved same-session A/B at sf0.1: a wash (2.60 vs 2.75 s
     # min-of-4 — documents is 5k rows locally, so the recomputed pass is
     # free); the point is the asymptote: `words` is VOCAB-sized while
@@ -987,9 +988,9 @@ def tokenize_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # release_scratch() keeps the vocab-sized cache alive for the
     # session lifetime. That is the documented scratch-lifecycle
     # contract (functions/ranks.py): every harness in this repo
-    # (bench.py, bench_subset, parity, localcluster, spill) releases per
-    # query, and for any other caller Spark's ContextCleaner retires the
-    # blocks once the DataFrame is garbage-collected.
+    # (bench.py, parity, localcluster, spill) releases per query and
+    # perfbench per round; for any other caller the CacheManager keeps
+    # the blocks until spark.catalog.clearCache().
     register_scratch(words)
     return out
 

@@ -18,6 +18,14 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
+def _default_driver_mem() -> str:
+    """Half of the host's MemTotal in whole GiB (at least 1g): the heap
+    shares the machine with the Python workers and the page cache."""
+    with open("/proc/meminfo") as fh:
+        kb = int(next(ln for ln in fh if ln.startswith("MemTotal:")).split()[1])
+    return f"{max(1, kb // 2 // (1 << 20))}g"
+
+
 _SHIPPED: set[str] = set()  # application ids the package zip was added to
 
 
@@ -133,11 +141,12 @@ def get_spark(
                 os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"))
         .config("spark.sql.files.openCostInBytes", "65536")
         .config("spark.ui.enabled", "false")
-        # local mode = one JVM holding driver + all 32 executor threads +
-        # the persisted staging tables (shingles, windows, knn vectors);
-        # 8g left the bench GC-bound once caches accumulated — the box has
-        # 128 GiB, size the heap like the executor fleet it stands in for
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # local mode = one JVM holding driver + every executor thread +
+        # the persisted staging tables (shingles, windows, knn vectors),
+        # so the heap defaults to half the host's RAM (_default_driver_mem);
+        # SPARK_GRAFT_DRIVER_MEM overrides it
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

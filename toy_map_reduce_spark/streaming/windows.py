@@ -131,12 +131,10 @@ def run_to_table(stream_df: DataFrame, base_name: str, output_mode: str, sf_dir:
     ~10% (the WAL writes are small; the cost is round trips, not fsync),
     disabling no-data micro-batches saves ~40 ms but changes
     watermark-emission semantics for the append-mode queries, and
-    reusing a live query or its checkpoint across bench passes breaks
-    both the two-batch replay semantics pinned in tests/test_streaming.py
-    (a reused checkpoint re-emits nothing in append mode) and the honest
-    cold-query measurement. The floor is therefore measured and
-    subtracted (measure_streaming_floor + bench_regress's S-tier
-    adjustment) rather than shaved.
+    reusing a live query or its checkpoint across runs breaks the
+    two-batch replay semantics pinned in tests/test_streaming.py (a
+    reused checkpoint re-emits nothing in append mode). So every call
+    pays the floor; it is not shaved here.
     """
     name = _sink_name(base_name, sf_dir)
     spark = stream_df.sparkSession
@@ -157,33 +155,6 @@ def run_to_table(stream_df: DataFrame, base_name: str, output_mode: str, sf_dir:
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
     return spark.table(name)
-
-
-def measure_streaming_floor(
-    spark: SparkSession, sf_dir: str, passes: int = 3
-) -> float:
-    """Measure the per-query streaming fixed-cost floor: a bare
-    availableNow COUNT(*) over the events source — no windows, no state,
-    no watermark — timed ``passes`` times, min reported. This is the
-    query-start/stop cost (temp checkpoint dir, micro-batch planning,
-    offset WAL) that every S-tier bench entry pays and that no operator
-    logic can remove (see run_to_table's fixed-cost note). bench.py
-    records it as ``floor_sec`` so bench_regress can compare S-tier
-    entries floor-adjusted — a real streaming-logic regression can't
-    hide under, and can't be simulated by, the harness constant."""
-    import time as _time
-
-    ts = []
-    for i in range(passes):
-        df = read_events_stream(spark, sf_dir).agg(F.count(F.lit(1)).alias("n"))
-        t0 = _time.perf_counter()
-        run_to_table(df, f"floor_probe_{i}", "complete", sf_dir)
-        ts.append(_time.perf_counter() - t0)
-    for i in range(passes):
-        # the memory sink registers a temp view per probe; drop them so a
-        # bench session's catalog stays clean (r8 verdict task 8)
-        spark.catalog.dropTempView(_sink_name(f"floor_probe_{i}", sf_dir))
-    return round(min(ts), 4)
 
 
 _STREAM_TUMBLING_ORACLE = """
