@@ -79,7 +79,26 @@ def main() -> int:
     # run a 16-task job first (forces executor registration + task
     # placement), then count registered block managers — local[N] reports
     # 1 (the driver); local-cluster must report 3 (driver + 2 executors).
-    spark.sparkContext.parallelize(range(16), 16).map(lambda x: x * x).count()
+    # Each task also reports where its Python worker came from: every
+    # Python query below needs workers started by graft_daemon that import
+    # the engine from the shipped package zip, and this names that failure
+    # once instead of as hundreds of query failures.
+    def worker_origin(_):
+        import sys
+
+        import toy_map_reduce_spark
+
+        yield sys.modules["__main__"].__file__, toy_map_reduce_spark.__file__
+
+    try:
+        origins = spark.sparkContext.parallelize(range(16), 16).mapPartitions(worker_origin).collect()
+    except Exception as exc:  # noqa: BLE001 — report it in one line
+        # a missing daemon or package surfaces as "No module named ..." deep
+        # inside the Java stack trace
+        lines = [ln.strip() for ln in str(exc).splitlines() if ln.strip()]
+        reason = next((ln for ln in lines if "No module named" in ln), lines[0])
+        print(f"refusing: executor Python probe failed: {reason[:300]}")
+        return 2
     n_exec = spark.sparkContext._jsc.sc().getExecutorMemoryStatus().size()
     # The whole point of this gate is the real process boundary: if the
     # session silently fell back to single-process execution (env var
@@ -92,6 +111,13 @@ def main() -> int:
             f"saw {n_exec} — tasks are NOT running on real executor processes"
         )
         return 2
+    for main_file, pkg_file in origins:
+        if not main_file.endswith("graft_daemon.py") or "/pkg_" not in pkg_file:
+            print(
+                f"refusing: executor Python worker runs {main_file} and imports "
+                f"the engine from {pkg_file}, not graft_daemon and the shipped pkg_*.zip"
+            )
+            return 2
 
     duck = duckdb.connect()
     for t in TABLES:

@@ -15,7 +15,9 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
-from toy_map_reduce_spark.operators.wordcount import tokenize, wordcount
+from toy_map_reduce_spark.operators.wordcount import (
+    first_char_partition, tokenize, wordcount, wordcount_rdd,
+)
 from toy_map_reduce_spark.tables import load
 
 REF_CORPUS = "/root/reference/worker-fs/map-task-input"
@@ -87,3 +89,29 @@ def test_tokenizer_empty_and_punct(spark):
     df = spark.createDataFrame([("Hello, WORLD! *** a_b 42",)], ["text"])
     toks = [r.word for r in tokenize(df).collect()]
     assert toks == ["hello", "world", "", "a_b", "42"]
+
+
+def test_wordcount_rdd_one_combined_shuffle(spark, sf_dir):
+    """The literal RDD translation counts like the reference, leaves every
+    word in its first-char partition, and does it in one shuffle: a
+    map-side-combined shuffle stage and the result stage."""
+    texts = [r.text for r in load(spark, sf_dir, "documents").select("text").collect()]
+    sc = spark.sparkContext
+    group = "test-wordcount-rdd"
+    sc.setJobGroup(group, "wordcount_rdd", False)
+    try:
+        got = {r.word: r.cnt for r in wordcount_rdd(spark, sf_dir).collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == dict(reference_wordcount(texts))
+
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    stages = {s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds}
+    assert len(stages) == 2
+
+    rdd = wordcount_rdd(spark, sf_dir).rdd
+    assert rdd.getNumPartitions() == 37
+    placed = rdd.mapPartitionsWithIndex(lambda i, rows: ((i, r.word) for r in rows)).collect()
+    assert len(placed) == len(got)
+    assert all(i == first_char_partition(w) for i, w in placed)

@@ -22,12 +22,15 @@ Scale notes (100 TB): the aggregation key is the word itself (high
 cardinality → good hash distribution); partial agg collapses the shuffle to
 |vocabulary| per partition. The reference's first-letter partitioning
 (≤ 37 reducers, heavily skewed toward common letters) appears only as a
-*grouping column* in ``wordcount_partitioned`` — we deliberately do NOT
-repartition by it, because a 26-way skewed shuffle is exactly what AQE/hash
-partitioning avoids.
+*grouping column* in ``wordcount_partitioned`` — the DataFrame path
+deliberately does NOT repartition by it, because a 26-way skewed shuffle is
+exactly what AQE/hash partitioning avoids. Only the literal RDD translation,
+``wordcount_rdd``, shuffles into those 37 partitions.
 """
 
 from __future__ import annotations
+
+from operator import add
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -79,19 +82,30 @@ GROUP BY 1, 2
 """
 
 
+def first_char_partition(word: str) -> int:
+    """Reference partition key = upper(first char), mapped into the fixed
+    37-partition space. NOT python ``hash()``: str hashing is
+    seed-randomized per process, which would scatter one key across
+    partitions."""
+    return (ord(word[0].upper()) if word else 0) % 37
+
+
 @register("wordcount_rdd", "R", oracle=_WORDCOUNT_ORACLE, bench=False,
           doc="The literal RDD translation of the reference pipeline: flatMap "
-              "(mapFunction) → partitionBy first-char partitioner → reduceByKey "
-              "(reduceFunction). Demo of the MapReduce-literal surface; the "
-              "DataFrame wordcount is the production path")
+              "(mapFunction) → reduceByKey (reduceFunction) in one combined "
+              "shuffle into the first-char partitioner's 37 partitions. Demo of "
+              "the MapReduce-literal surface; the DataFrame wordcount is the "
+              "production path")
 def wordcount_rdd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1:1 mapping of the reference's three UDFs onto the RDD API
     (reference user/UserDefinedFunctions.scala:5-30):
 
     * ``mapFunction``  → ``flatMap`` emitting (token, 1)
-    * ``partitionBy``  → ``partitionBy(26+10+1, first-char partitioner)``
-    * ``reduceFunction`` → ``reduceByKey(add)`` — Spark additionally runs it
-      map-side as a combiner, which the reference never did
+    * ``reduceFunction`` and ``partitionBy`` → ``reduceByKey(add, 37,
+      first_char_partition)``: one shuffle into the reference's 26+10+1
+      first-char partitions. Spark also runs ``add`` map-side as a
+      combiner, which the reference never did, so each map task ships one
+      pair per distinct word instead of one per token.
     """
     import re
 
@@ -100,20 +114,13 @@ def wordcount_rdd(spark: SparkSession, sf_dir: str) -> DataFrame:
     def tokenize_py(text: str) -> list[str]:
         return [non_word.sub("", t.lower()) for t in text.split(" ")]
 
-    def first_char_partition(word: str) -> int:
-        # reference partition key = upper(first char), mapped into the fixed
-        # partition space. NOT python hash(): str hashing is seed-randomized
-        # per process, which would scatter one key across partitions
-        return (ord(word[0].upper()) if word else 0) % 37
-
     docs = load(spark, sf_dir, "documents")
     counts = (
         docs.select("text").rdd
         .flatMap(
             lambda row: [] if row.text is None else [(w, 1) for w in tokenize_py(row.text)]
         )
-        .partitionBy(37, first_char_partition)
-        .reduceByKey(lambda a, b: a + b)
+        .reduceByKey(add, 37, first_char_partition)
     )
     # explicit schema: inference samples the RDD and raises on an empty one
     return spark.createDataFrame(counts, "word string, cnt long")
