@@ -33,6 +33,10 @@ cd "$(dirname "$0")/.."
 
 fail=0
 
+# whether this run's JVMs map the class-data-sharing archive or the first
+# one dumps it (its set-up then runs about 3 s slower)
+python -c 'from toy_map_reduce_spark.session import cds_status; print(cds_status())'
+
 echo "== handoff gate 1/7: default pytest (driver-window tier) =="
 python -m pytest tests/ -q || fail=1
 

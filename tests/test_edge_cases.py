@@ -116,6 +116,37 @@ def test_compaction_actually_reduces_file_count(spark, sf_dir):
     assert len(frag) > len(tight)
 
 
+def test_dynamic_partition_overwrite_leaves_session_conf_alone(spark, sf_dir, duck):
+    """sink_dynamic_partition_overwrite asks for dynamic mode on its one
+    write: another client's overwrite on the shared session, polled here
+    while the query runs, never sees the session conf switch to dynamic.
+    Oracle parity shows the option took effect (a static overwrite would
+    drop every partition but 'A')."""
+    import threading
+
+    from tests.parity import run_parity
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    seen, done = set(), threading.Event()
+
+    def poll():
+        while not done.wait(0.001):
+            seen.add(spark.conf.get(key))
+
+    poller = threading.Thread(target=poll)
+    poller.start()
+    try:
+        run_parity(spark, duck, get_spec("sink_dynamic_partition_overwrite"), sf_dir)
+    finally:
+        done.set()
+        poller.join(timeout=60)
+    assert not poller.is_alive()
+    assert before.lower() == "static"
+    assert spark.conf.get(key) == before
+    assert seen == {before}
+
+
 def test_recursive_cte_agrees_with_unrolled_bfs(spark, sf_dir):
     """The declarative WITH RECURSIVE reachability and the hand-unrolled
     BFS loop are two formulations of the same computation — their result

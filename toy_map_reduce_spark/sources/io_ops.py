@@ -491,12 +491,10 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
         li.where(F.col("l_returnflag") == "A")
         .select("l_returnflag", (F.col("l_quantity") * 2).alias("l_quantity"))
     )
-    old_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        patch.write.mode("overwrite").partitionBy("l_returnflag").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", old_mode)
+    # the write option, not the session conf: another client's overwrite
+    # on the same session must stay static
+    (patch.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+     .partitionBy("l_returnflag").parquet(path))
     # explicit schema: a zero-row write leaves no part files to infer from
     back = spark.read.schema(li.schema).parquet(path)
     return back.groupBy("l_returnflag").agg(
