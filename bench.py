@@ -20,7 +20,7 @@ import os
 import sys
 import time
 
-from toy_map_reduce_spark.functions.ranks import release_scratch
+from toy_map_reduce_spark import scratch
 from toy_map_reduce_spark.registry import all_specs
 from toy_map_reduce_spark.session import get_spark
 
@@ -34,13 +34,12 @@ def main() -> int:
             continue
         t0 = time.perf_counter()
         try:
-            spec.builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            timings[name] = round(time.perf_counter() - t0, 4)
+            with scratch.scope():
+                spec.builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                timings[name] = round(time.perf_counter() - t0, 4)
         except Exception as exc:  # a broken query shouldn't zero the run
             print(f"bench: {name} FAILED: {exc}", file=sys.stderr)
             timings[name] = -1.0
-        # outside the timed window: drop this query's scratch persists
-        release_scratch()
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     try:

@@ -38,17 +38,17 @@ LAYOUTS = (
 
 def rows_under(spark, spec, sf_dir: str, overrides: dict):
     from parity import canonical_rows
-    from toy_map_reduce_spark.functions.ranks import release_scratch
+    from toy_map_reduce_spark import scratch
 
     saved = {k: spark.conf.get(k) for k in overrides}
     try:
         for k, v in overrides.items():
             spark.conf.set(k, v)
-        return canonical_rows(spec.builder(spark, sf_dir).toPandas())
+        with scratch.scope():
+            return canonical_rows(spec.builder(spark, sf_dir).toPandas())
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
-        release_scratch()
 
 
 def main() -> int:

@@ -129,14 +129,15 @@ def main() -> int:
     window = sorted(specs) if full else sorted(specs)[:WINDOW]
     report: dict[str, dict] = {}
     n_pass = n_rows_only = n_fail = 0
-    from toy_map_reduce_spark.functions.ranks import release_scratch
+    from toy_map_reduce_spark import scratch
 
     for name in window:
         spec = specs[name]
         rec: dict = {"rows_match": None, "schema_match": None, "hash_match": None,
                      "spark_rows": None, "oracle_rows": None, "err": None}
         try:
-            sdf = spec.builder(spark, SF_DIR).toPandas()
+            with scratch.scope():
+                sdf = spec.builder(spark, SF_DIR).toPandas()
             rec["spark_rows"] = int(len(sdf))
             if spec.oracle is None:
                 rec["err"] = "no_oracle"
@@ -158,8 +159,6 @@ def main() -> int:
         except Exception as exc:  # noqa: BLE001 — record, don't abort
             rec["err"] = f"{type(exc).__name__}: {exc}"[:300]
             n_fail += 1
-        finally:
-            release_scratch()
         report[name] = rec
 
     duck.close()

@@ -47,6 +47,7 @@ def run_sweep(spark, sf_dir: str) -> tuple[dict, dict]:
     import duckdb
 
     from parity import canonical_rows, fetch_oracle
+    from toy_map_reduce_spark import scratch
     from toy_map_reduce_spark.registry import all_specs
     from toy_map_reduce_spark.tables import TABLES, table_path
 
@@ -68,7 +69,8 @@ def run_sweep(spark, sf_dir: str) -> tuple[dict, dict]:
             "err": None,
         }
         try:
-            sdf = spec.builder(spark, sf_dir).toPandas()
+            with scratch.scope():
+                sdf = spec.builder(spark, sf_dir).toPandas()
             rec["spark_rows"] = int(len(sdf))
             if spec.oracle is None:
                 rec["err"] = "no_oracle"
@@ -108,13 +110,6 @@ def run_sweep(spark, sf_dir: str) -> tuple[dict, dict]:
         except Exception as exc:  # noqa: BLE001 — record, don't abort the sweep
             rec["err"] = f"{type(exc).__name__}: {exc}"[:300]
             n_fail += 1
-        finally:
-            # rank-scratch lifecycle: the query is materialized (or dead)
-            # by now, so releasing is safe and keeps a 414-query sweep
-            # from accumulating persisted blocks (r6 advisor)
-            from toy_map_reduce_spark.functions.ranks import release_scratch
-
-            release_scratch()
         report[name] = rec
     duck.close()
 

@@ -91,7 +91,7 @@ def main() -> int:
     import duckdb
 
     from parity import canonical_rows, fetch_oracle
-    from toy_map_reduce_spark.functions.ranks import release_scratch
+    from toy_map_reduce_spark import scratch
     from toy_map_reduce_spark.registry import all_specs
     from toy_map_reduce_spark.session import get_spark
     from toy_map_reduce_spark.tables import TABLES, table_path
@@ -144,7 +144,8 @@ def main() -> int:
         spec = specs[name]
         rec: dict = {"hash_match": None, "err": None}
         try:
-            sdf = spec.builder(spark, SF_DIR).toPandas()
+            with scratch.scope():
+                sdf = spec.builder(spark, SF_DIR).toPandas()
             rec["spark_rows"] = int(len(sdf))
             if spec.oracle is None:
                 rec["err"] = "no_oracle"
@@ -162,8 +163,6 @@ def main() -> int:
         except Exception as exc:  # noqa: BLE001 — record, don't abort
             rec["err"] = f"{type(exc).__name__}: {exc}"[:300]
             n_fail += 1
-        finally:
-            release_scratch()
         rec["sec"] = round(_time.time() - _t0, 1)
         report[name] = rec
     duck.close()

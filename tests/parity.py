@@ -91,21 +91,21 @@ def assert_frames_match(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, name:
 
 
 def run_parity(spark, duck, spec, sf_dir: str) -> None:
-    # Scratch-release lifecycle (r6 advisor): the rank primitive persists
-    # pid-stamped intermediates that only a consumer can release. The
-    # query is fully materialized (toPandas) before the finally runs, so
-    # releasing here is safe — unlike releasing between builds, which
-    # would break pid stability for still-unmaterialized frames. Without
-    # this, a 414-query parity session accumulates MEMORY_AND_DISK blocks
-    # and every later query pays the GC pressure (~20% measured).
-    from toy_map_reduce_spark.functions.ranks import release_scratch
+    """Build and materialize ``spec`` inside one query scope, check that
+    the scope left no cached relation behind (none beyond what was there
+    before it, counting only entries no other open scope holds), then
+    compare with the oracle."""
+    from toy_map_reduce_spark import scratch
 
-    try:
+    before = scratch.unheld(spark)
+    with scratch.scope():
         sdf = spec.builder(spark, sf_dir).toPandas()
-        if spec.oracle is None:
-            assert len(sdf) >= 0  # rows-only: builder ran and produced a frame
-            return
-        odf = fetch_oracle(duck, spec.oracle)
-        assert_frames_match(sdf, odf, name=spec.name)
-    finally:
-        release_scratch()
+    after = scratch.unheld(spark)
+    assert after <= before, (
+        f"{spec.name}: left {after - before} cached relation(s) behind its scope"
+    )
+    if spec.oracle is None:
+        assert len(sdf) >= 0  # rows-only: builder ran and produced a frame
+        return
+    odf = fetch_oracle(duck, spec.oracle)
+    assert_frames_match(sdf, odf, name=spec.name)

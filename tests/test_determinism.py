@@ -32,7 +32,7 @@ from __future__ import annotations
 import pytest
 
 from tests.parity import canonical_rows
-from toy_map_reduce_spark.functions.ranks import release_scratch
+from toy_map_reduce_spark import scratch
 from toy_map_reduce_spark.registry import get_spec
 
 # The r9 DECIMAL-hardened money queries: exact by construction, must be
@@ -103,11 +103,11 @@ def _rows_under(spark, sf_dir, name, max_partition_bytes, shuffle_parts):
     try:
         for k, v in overrides.items():
             spark.conf.set(k, v)
-        return canonical_rows(get_spec(name).builder(spark, sf_dir).toPandas())
+        with scratch.scope():
+            return canonical_rows(get_spec(name).builder(spark, sf_dir).toPandas())
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
-        release_scratch()
 
 
 @pytest.mark.parametrize("name", HARDENED + MARGIN_GUARDED + STRUCTURAL)

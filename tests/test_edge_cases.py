@@ -516,3 +516,33 @@ def test_derby_base_is_per_process(monkeypatch):
     a = _derby_base("/root/testdata/sf0.001")
     monkeypatch.setenv("SPARK_GRAFT_DERBY_KEY", "second")
     assert _derby_base("/root/testdata/sf0.001") != a
+
+
+def test_load_evicts_stale_memo_entries(spark, sf_dir, monkeypatch):
+    """Both tables.py memos stay bounded: inserting a relation drops the
+    relations of other applications (a stopped session's handles), and
+    inserting a read path drops the same source's entries under an older
+    (size, mtime_ns) stamp."""
+    import os
+
+    from toy_map_reduce_spark import tables
+
+    monkeypatch.delenv("SPARK_GRAFT_LAYOUT_CACHE", raising=False)
+    src = tables.table_path(sf_dir, "region")
+    s = os.stat(src)
+    path = tables._read_path(sf_dir, "region")
+    p = os.stat(path)
+    live = (spark.sparkContext.applicationId, path, (p.st_size, p.st_mtime_ns))
+    # force both inserts, with a stale key seeded beside each
+    tables._RELATION_CACHE.pop(live, None)
+    tables._READ_PATH_MEMO.pop((src, s.st_size, s.st_mtime_ns), None)
+    stale_app = ("app-of-a-stopped-session", path, live[2])
+    stale_stamp = (src, s.st_size + 1, s.st_mtime_ns - 1)
+    tables._RELATION_CACHE[stale_app] = None
+    tables._READ_PATH_MEMO[stale_stamp] = src
+
+    assert tables.load(spark, sf_dir, "region").count() > 0
+    assert stale_app not in tables._RELATION_CACHE
+    assert live in tables._RELATION_CACHE
+    assert stale_stamp not in tables._READ_PATH_MEMO
+    assert (src, s.st_size, s.st_mtime_ns) in tables._READ_PATH_MEMO

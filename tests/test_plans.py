@@ -1136,48 +1136,34 @@ def _cached_relations(df) -> list:
     return out
 
 
-def test_dedup_staging_is_shared_across_queries(spark, sf_dir):
-    """The dedup family shares its staging persists (shingle stage,
-    capped shingles, simhash blocks) across queries through the
-    CacheManager, which substitutes a cached relation only on
-    analyzed-plan equality. Without that reuse every dedup query re-pays
-    the corpus-wide staging (+22 s per full registry pass when staging
-    was released per query). Pin: once dedup_near_verified and
-    dedup_simhash have run, the other dedup queries read
-    InMemoryTableScan, and every cached relation the shingle-family
-    queries read is one those runs already filled — a staging plan that
-    drifts from what dedup_near_verified builds gets a fresh, empty
-    cache entry and fails here. dedup_simhash_pairs reads one cached
-    block table on both sides of its self-join."""
+def test_dedup_staging_is_read_within_its_own_query(spark, sf_dir):
+    """The dedup staging persists (shingle stage, capped shingles,
+    simhash blocks) live for one query (toy_map_reduce_spark/scratch.py).
+    Pin: starting from an empty cache, dedup_containment,
+    dedup_near_verified and dedup_simhash_pairs each read
+    InMemoryTableScan inside their own query scope; dedup_simhash_pairs
+    reads one cached block table on both sides of its self-join; and
+    nothing is cached once each scope has exited."""
+    from toy_map_reduce_spark import scratch
     from toy_map_reduce_spark.plans.explain import explain_str
     from toy_map_reduce_spark.registry import get_spec
 
-    spark.catalog.clearCache()  # start from no staging at all
-    try:
-        for name in ("dedup_near_verified", "dedup_simhash"):
-            get_spec(name).builder(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        for name in ("dedup_containment", "dedup_near", "dedup_near_verified",
-                     "dedup_simhash_pairs"):
+    scratch.release_scratch()  # frames earlier plan tests built unscoped
+    spark.catalog.clearCache()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    for name in ("dedup_containment", "dedup_near_verified", "dedup_simhash_pairs"):
+        with scratch.scope():
             df = get_spec(name).builder(spark, sf_dir)
             assert "InMemoryTableScan" in explain_str(df, "simple"), (
                 f"{name}: reads no cached staging"
             )
-            cached = _cached_relations(df)
             if name == "dedup_simhash_pairs":
+                cached = _cached_relations(df)
                 assert len(cached) >= 2 and len({c.hashCode() for c in cached}) == 1, (
                     f"{name}: the self-join sides do not share one cached table"
                 )
-            else:
-                assert cached and all(c.isCachedColumnBuffersLoaded() for c in cached), (
-                    f"{name}: reads staging dedup_near_verified did not fill — "
-                    "its staging plan drifted from what the other queries build"
-                )
-    finally:
-        # drop the staged caches so later tests in the session measure
-        # their own shapes, not this test's leftovers
-        spark.catalog.clearCache()
+            df.write.format("noop").mode("overwrite").save()
+        assert cm.isEmpty(), f"{name}: left its staging cached after its scope"
 
 
 def test_parse_plan_tree_on_real_cached_plan_output():

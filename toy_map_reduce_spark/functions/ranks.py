@@ -15,7 +15,9 @@ range-partitioned rank, exact and fully distributed:
    re-coalesces a user-specified numPartitions, so the partition ids are
    stable for both consumers below.
 2. Stamp ``spark_partition_id()`` and persist: pids become frozen data and
-   the two passes below share one materialization.
+   the two passes below share one materialization. The persist goes
+   through ``scratch.persist``, so it lives until the caller's query
+   scope ends (the result is lazy; see ``toy_map_reduce_spark/scratch.py``).
 3. A per-(group, pid) count/sum aggregate — P rows per group — prefix-
    summed over pid order. This is the only single-partition window in the
    plan and it runs over the P-row aggregate, never the corpus.
@@ -31,63 +33,18 @@ output is bit-identical to the single-task plan the DuckDB oracles run.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from toy_map_reduce_spark import scratch
+from toy_map_reduce_spark.scratch import release_scratch
 
 __all__ = [
     "with_global_order",
     "ntile_from_rn",
     "parts_for",
-    "register_scratch",
     "release_scratch",
 ]
-
-# Scratch-persist lifecycle: with_global_order MUST persist its
-# pid-stamped intermediate (spark_partition_id would otherwise be free to
-# differ between the offset pass and the rank pass), but the returned
-# DataFrame is lazy, so the function cannot unpersist after its own
-# action. Spark's SQL CacheManager holds strong references — without a
-# release, a long-lived session running many rank queries accumulates
-# cached blocks and every LATER query pays the GC pressure (measured:
-# ~20% uniform inflation across a full registry pass). Callers that
-# drive many queries through one session call release_scratch() once a
-# result is materialized (bench.py and the parity sweeps after each
-# query, perfbench between rounds).
-_SCRATCH: list[DataFrame] = []
-
-
-def register_scratch(df: DataFrame) -> DataFrame:
-    """Enroll a caller-persisted DataFrame in the rank-scratch lifecycle:
-    it is unpersisted by the next release_scratch(). Operators that
-    persist their own pre-rank aggregates (orders_rfm's customer frame,
-    the doc-grain sized frames) use this instead of reaching into the
-    private list, so every consumer that honors the lifecycle (bench.py,
-    perfbench, the parity sweeps) releases it too.
-
-    Enrollment boundary (r7 A/B): enroll ONLY frames private to one
-    query's rank pass. Staging tables that other queries in the same
-    session re-find through the CacheManager's plan matching — the
-    shingle stage, simhash blocks, the market-basket item table — must
-    NOT be enrolled: releasing them per query severed that cross-query
-    reuse and cost +22 s over a full registry pass. The CacheManager
-    keeps them until ``spark.catalog.clearCache()``. Returns ``df`` so
-    the call chains at the persist site."""
-    _SCRATCH.append(df)
-    return df
-
-
-def release_scratch() -> int:
-    """Unpersist every scratch intermediate created by with_global_order
-    since the last release. Returns the number released."""
-    n = len(_SCRATCH)
-    for df in _SCRATCH:
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # session already stopped — nothing to release
-    _SCRATCH.clear()
-    return n
 
 
 def parts_for(n_rows: int, spark, rows_per_part: int = 1 << 16) -> int:
@@ -112,7 +69,7 @@ def parts_for(n_rows: int, spark, rows_per_part: int = 1 << 16) -> int:
     return max(2, min(cap, -(-int(n_rows) // rows_per_part)))
 
 
-_SCRATCH_PREFIXES = ("_s_", "_off_", "_tot_", "_loc_")
+_RESERVED_PREFIXES = ("_s_", "_off_", "_tot_", "_loc_")
 
 
 def _validate_names(df, rn_col, cumsums, totals, n_col) -> None:
@@ -122,7 +79,7 @@ def _validate_names(df, rn_col, cumsums, totals, n_col) -> None:
     clobbered or mis-wired rather than erroring."""
     bad_in = [
         c for c in df.columns
-        if c in ("_pid", "_n") or c.startswith(_SCRATCH_PREFIXES)
+        if c in ("_pid", "_n") or c.startswith(_RESERVED_PREFIXES)
     ]
     if bad_in:
         raise ValueError(
@@ -143,14 +100,14 @@ def _validate_names(df, rn_col, cumsums, totals, n_col) -> None:
             f"with_global_order: duplicate output names in {outs}"
         )
     for out in list(cumsums) + list(totals):
-        if out == "n" or out == "_pid" or out.startswith(_SCRATCH_PREFIXES):
+        if out == "n" or out == "_pid" or out.startswith(_RESERVED_PREFIXES):
             raise ValueError(
                 f"with_global_order: output key {out!r} generates a "
                 "scratch column (_s_/_off_/_tot_ + key) that collides "
                 "with the reserved count columns — pick another name"
             )
     for out in (rn_col, n_col):
-        if out and (out == "_pid" or out.startswith(_SCRATCH_PREFIXES)):
+        if out and (out == "_pid" or out.startswith(_RESERVED_PREFIXES)):
             raise ValueError(
                 f"with_global_order: output column {out!r} collides with "
                 "reserved scratch names"
@@ -187,10 +144,7 @@ def with_global_order(
         parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     rp = df.repartitionByRange(parts, *[F.col(c) for c in part_cols] + list(order_cols))
-    stamped = rp.withColumn("_pid", F.spark_partition_id()).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    _SCRATCH.append(stamped)
+    stamped = scratch.persist(rp.withColumn("_pid", F.spark_partition_id()))
 
     aggs = [F.count(F.lit(1)).alias("_n")]
     sum_srcs = {f"_s_{out}": src for out, src in {**cumsums, **totals}.items()}

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from toy_map_reduce_spark import scratch
 from toy_map_reduce_spark.registry import register
 from toy_map_reduce_spark.tables import load
 
@@ -450,16 +451,16 @@ def orders_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     size (every metric ranks all n customers), so the primitive's
     whole-group totals subtree is skipped entirely."""
     from toy_map_reduce_spark.functions.ranks import (
-        ntile_from_rn, parts_for, register_scratch, with_global_order,
+        ntile_from_rn, parts_for, with_global_order,
     )
 
     orders = load(spark, sf_dir, "orders")
-    rfm = register_scratch(
+    rfm = scratch.persist(
         orders.groupBy(F.col("o_custkey").alias("custkey")).agg(
             F.max("o_orderdate").alias("last_order"),
             F.count(F.lit(1)).alias("frequency"),
             F.sum(F.round("o_totalprice", 2)).alias("monetary"),
-        ).persist()
+        )
     )
     n_cust = rfm.count()  # materializes the cache; sizes the range shuffle
     melted = rfm.select(
@@ -652,15 +653,13 @@ def orders_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     a customer's class cross-engine. The range-shuffle width is sized to
     the aggregate's actual cardinality (parts_for over a persisted count)
     so the toy-scale frame doesn't pay 32 partitions of fixed overhead."""
-    from toy_map_reduce_spark.functions.ranks import (
-        parts_for, register_scratch, with_global_order,
-    )
+    from toy_map_reduce_spark.functions.ranks import parts_for, with_global_order
 
     orders = load(spark, sf_dir, "orders")
-    cust = register_scratch(
+    cust = scratch.persist(
         orders.groupBy("o_custkey").agg(
             F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias("rev_cents")
-        ).persist()
+        )
     )
     ranked = with_global_order(
         cust,
@@ -922,15 +921,13 @@ def orders_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     the floored micro-int can't flip because both engines divide the same
     exact integers. Range-shuffle width sized to the aggregate's counted
     cardinality (parts_for), same rationale as orders_pareto_abc."""
-    from toy_map_reduce_spark.functions.ranks import (
-        parts_for, register_scratch, with_global_order,
-    )
+    from toy_map_reduce_spark.functions.ranks import parts_for, with_global_order
 
     orders = load(spark, sf_dir, "orders")
-    cust = register_scratch(
+    cust = scratch.persist(
         orders.groupBy("o_custkey").agg(
             F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias("cents")
-        ).where(F.col("cents").isNotNull()).persist()
+        ).where(F.col("cents").isNotNull())
     )
     ranked = with_global_order(
         cust, [F.col("cents"), F.col("o_custkey")], rn_col="i",
@@ -1408,18 +1405,16 @@ def itemsets_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     never touches the quadratic candidate space. Lift needs the global
     basket count: one scalar broadcast, the same one-row pattern as
     dedup_incremental."""
-    from pyspark import StorageLevel
-
     li = load(spark, sf_dir, "lineitem")
     # four consumers (basket count, supports, both join sides) — persist
     # so the distinct shuffle runs once
-    items = li.select("l_orderkey", "l_partkey").distinct().persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    items = scratch.persist(li.select("l_orderkey", "l_partkey").distinct())
     n = items.agg(F.countDistinct("l_orderkey").alias("n_baskets"))
     isup = items.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("s"))
     a, b = items.alias("a"), items.alias("b")
-    pairs = (
+    # both rule directions read this; persist or the basket self-join
+    # (the expensive stage) runs twice
+    pairs = scratch.persist(
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -1430,9 +1425,6 @@ def itemsets_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("s_ab"))
         .where(F.col("s_ab") >= MIN_SUPPORT)
-        # both rule directions read this; persist or the basket self-join
-        # (the expensive stage) runs twice
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     rules = pairs.select(
         F.col("part_a").alias("antecedent"), F.col("part_b").alias("consequent"), "s_ab"
@@ -1980,22 +1972,14 @@ def events_session_copresence(spark: SparkSession, sf_dir: str) -> DataFrame:
         Window.unboundedPreceding, Window.currentRow
     )
     # The presence table feeds THREE consumers (a-side, b-side, total),
-    # and the r13 executed plan re-derived the whole scan + session
-    # window stack for each — AQE's ReuseExchange never fired because
-    # every branch projects differently, so the exchanges never
-    # canonicalize equal. Persisting the distinct (session, type) table
-    # (bounded: sessions x types, far smaller than events) computes the
-    # stack once (r14, guide §2.4/§5; same-session ABAB at sf0.1:
-    # 0.83 -> 0.77 s min, medians 1.11 -> 0.93). Scratch-enrolled, so
-    # every harness releases it per query — no cross-query reuse.
-    from toy_map_reduce_spark.functions.ranks import register_scratch
-
-    present = register_scratch(
+    # and without the persist each re-derives the whole scan + session
+    # window stack. The distinct (session, type) table is bounded by
+    # sessions x types, far smaller than events.
+    present = scratch.persist(
         seq.select(
             "user_id", "event_type", F.sum("new_s").over(w_run).alias("session_no")
         )
         .distinct()
-        .persist()
     )
     total = present.select("user_id", "session_no").distinct().agg(
         F.count(F.lit(1)).alias("total")

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from toy_map_reduce_spark import scratch
 from toy_map_reduce_spark.registry import register
 from toy_map_reduce_spark.tables import load
 
@@ -319,9 +320,7 @@ def substring_report(docs: DataFrame) -> DataFrame:
     # both the per-doc totals and the run-length pass — persist each so
     # the fingerprint subtree and the flag join run once (staging-table
     # pattern, same as shingle_stage)
-    from pyspark import StorageLevel
-
-    win = win.persist(StorageLevel.MEMORY_AND_DISK)
+    win = scratch.persist(win)
 
     dup = (
         win.select("doc_id", "h").distinct()
@@ -329,9 +328,9 @@ def substring_report(docs: DataFrame) -> DataFrame:
         .where(F.col("df") >= 2)
         .select("h", F.lit(True).alias("dup"))
     )
-    flagged = win.join(dup, "h", "left").select(
+    flagged = scratch.persist(win.join(dup, "h", "left").select(
         "doc_id", "idx", F.coalesce("dup", F.lit(False)).alias("dup")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     tot = flagged.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_windows"),
         F.sum(F.when(F.col("dup"), 1).otherwise(0)).alias("n_dup"),

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from toy_map_reduce_spark import scratch
 from toy_map_reduce_spark.registry import register
 from toy_map_reduce_spark.tables import load
 
@@ -185,20 +186,10 @@ def shingle_stage(docs: DataFrame) -> DataFrame:
     what a production 100 TB dedup run does: materialize the shingle table
     once (disk-backed cache or a staging parquet), then fan out. The
     lineage stays intact, so the pipeline is still correct — just slower —
-    if the cache is evicted. The cached blocks are NOT dropped when the
-    query's frames are garbage-collected: Spark's CacheManager holds them
-    until ``spark.catalog.clearCache()`` (or an unpersist of an equal
-    plan).
-
-    Deliberately NOT enrolled in the rank-scratch release lifecycle: the
-    staging table is SHARED across queries in one session through Spark's
-    CacheManager (dedup_near_verified materializes it; ngram_jaccard /
-    containment / clusters / threshold_sweep then hit the same plan) —
-    that cross-query reuse is the staging-table pattern itself. An A/B
-    that released it per query cost +22 s over a full registry pass."""
-    from pyspark import StorageLevel
-
-    return _shingles(docs).persist(StorageLevel.MEMORY_AND_DISK)
+    if the cache is evicted. Like every persisted intermediate it lives
+    until the query that made it is done (``toy_map_reduce_spark/scratch.py``);
+    the next query over the same corpus stages it again."""
+    return scratch.persist(_shingles(docs))
 
 
 def capped_shingles(docs: DataFrame, df_cap: int = DF_CAP,
@@ -219,8 +210,6 @@ def capped_shingles(docs: DataFrame, df_cap: int = DF_CAP,
     ``df_cap`` docs, so ≤ n/df_cap entries), so it broadcasts, and the
     anti-join is map-side with zero shuffle of the posting lists.
     """
-    from pyspark import StorageLevel
-
     if sh_all is None:
         sh_all = _shingles(docs)
     hot = (
@@ -233,9 +222,7 @@ def capped_shingles(docs: DataFrame, df_cap: int = DF_CAP,
     # the capped table 2-3x (both sides of the inverted-index join plus
     # the per-doc sizes), and without the persist each use re-runs the
     # hot-shingle aggregate + broadcast anti-join subtree.
-    return sh_all.join(F.broadcast(hot), "shingle", "left_anti").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    return scratch.persist(sh_all.join(F.broadcast(hot), "shingle", "left_anti"))
 
 
 _DEDUP_EXACT_ORACLE = """
@@ -587,13 +574,10 @@ def simhash_blocks(sig: DataFrame) -> DataFrame:
     """The persisted simhash block-rotation staging table:
     (doc_id, simhash, block_id, block_val), SIMHASH_BLOCKS rows per doc.
     Both sides of the pigeonhole self-join read it, so the persist makes
-    the signature aggregate (64 bit-count sums) run once, not twice —
-    and, like shingle_stage, the CacheManager shares it across queries
-    in one session (dedup_simhash_pairs, dedup_eval's hamming arm).
+    the signature aggregate (64 bit-count sums) run once, not twice.
     Module-level so every consumer builds the IDENTICAL plan, which is
-    what the CacheManager matches on."""
-    from pyspark import StorageLevel
-
+    what the CacheManager matches on (concurrent clients running the same
+    query share one entry)."""
     blocks = sig.select(
         "doc_id",
         "simhash",
@@ -607,7 +591,7 @@ def simhash_blocks(sig: DataFrame) -> DataFrame:
             ])
         ).alias("blk"),
     ).select("doc_id", "simhash", "blk.block_id", "blk.block_val")
-    return blocks.persist(StorageLevel.MEMORY_AND_DISK)
+    return scratch.persist(blocks)
 
 
 def simhash_pairs(sig: DataFrame, max_hamming: int = SIMHASH_MAX_HAMMING) -> DataFrame:
@@ -1281,9 +1265,9 @@ def dedup_ensemble_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     for m, df in sets.items():
         t = df.withColumn("method", F.lit(m))
         tagged = t if tagged is None else tagged.unionAll(t)
-    votes = tagged.groupBy("doc_a", "doc_b").agg(
+    votes = scratch.persist(tagged.groupBy("doc_a", "doc_b").agg(
         F.count(F.lit(1)).alias("n_methods")
-    ).cache()
+    ))
 
     rows = []
     for m, df in sets.items():
@@ -1291,7 +1275,7 @@ def dedup_ensemble_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     uni = votes.count()
     two = votes.where(F.col("n_methods") >= 2).count()
     all3 = votes.where(F.col("n_methods") >= 3).count()
-    votes.unpersist()
+    scratch.release(votes)
     rows += [("union_any", uni, -1), ("consensus_2of3", two, -1), ("consensus_3of3", all3, -1)]
     return spark.createDataFrame(rows, "method string, n_pairs long, n_docs long")
 

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from toy_map_reduce_spark import scratch
 from toy_map_reduce_spark.registry import register
 from toy_map_reduce_spark.tables import load
 
@@ -235,9 +236,11 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # a<b strictly, so the two directed projections are disjoint — the
     # union needs no second distinct (one whole shuffle saved)
-    edges = und.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
-        und.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    ).persist()
+    edges = scratch.persist(
+        und.select(F.col("a").alias("src"), F.col("b").alias("dst")).union(
+            und.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+        )
+    )
 
     frontier = load(spark, sf_dir, "orders").sparkSession.createDataFrame(
         [(0,)], "node long"
@@ -252,7 +255,7 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
         # node universe. The hint also turns the visited anti-join from a
         # SortMergeJoin (two exchanges + sorts per level) into a broadcast
         # anti-join with zero shuffle of the expansion output.
-        nxt = (
+        nxt = scratch.persist(
             edges.join(
                 F.broadcast(frontier.select(F.col("node").alias("f_node"))),
                 F.col("src") == F.col("f_node"),
@@ -261,7 +264,6 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
             .join(F.broadcast(visited.select("node")), "node", "left_anti")
             .select("node", F.lit(lvl).alias("level"))
-            .persist()
         )
         visited = visited.unionAll(nxt)
         frontier = nxt

@@ -17,6 +17,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from toy_map_reduce_spark import scratch
 from toy_map_reduce_spark.registry import register
 from toy_map_reduce_spark.tables import load
 from toy_map_reduce_spark.operators.dedup import DF_CAP
@@ -158,13 +159,11 @@ def shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     counted: one tokenization pass feeds both the range sampler and the
     shuffle, and the count sizes the shuffle width (parts_for) so a toy
     corpus doesn't pay the full fixed partition scaffold."""
-    from toy_map_reduce_spark.functions.ranks import (
-        parts_for, register_scratch, with_global_order,
-    )
+    from toy_map_reduce_spark.functions.ranks import parts_for, with_global_order
 
     docs = load(spark, sf_dir, "documents")
-    sized = register_scratch(
-        docs.select("doc_id", F.size(_tokens("text")).alias("n_tokens")).persist()
+    sized = scratch.persist(
+        docs.select("doc_id", F.size(_tokens("text")).alias("n_tokens"))
     )
     ranked = with_global_order(
         sized, [F.col("n_tokens").desc(), F.col("doc_id").asc()], rn_col="rn",
@@ -304,9 +303,9 @@ def min_label_propagation(
     )
     if reliable_checkpoint_dir:
         docs.sparkSession.sparkContext.setCheckpointDir(reliable_checkpoint_dir)
-    edges = pairs.union(
+    edges = scratch.persist(pairs.union(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).persist()
+    ))
 
     labels = docs.withColumn("label", F.col("doc_id"))
 
@@ -326,7 +325,7 @@ def min_label_propagation(
             else:
                 new_labels = new_labels.localCheckpoint(eager=True)
         else:
-            new_labels = new_labels.persist()
+            new_labels = scratch.persist(new_labels)
         changed = (
             new_labels.alias("n")
             .join(labels.alias("o"), "doc_id")
@@ -334,12 +333,12 @@ def min_label_propagation(
             .limit(1)
             .count()
         )
-        labels.unpersist()  # drop the previous round's cached copy
+        scratch.release(labels)  # drop the previous round's cached copy
         labels = new_labels
         if changed == 0:
             break
 
-    edges.unpersist()
+    scratch.release(edges)
     return labels
 
 
@@ -399,13 +398,11 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-task window even at corpus grain. Deterministic: ordering is
     by doc_id, never by arrival. The sized frame is persisted + counted
     (one tokenization pass, size-aware shuffle width — see shard_assign)."""
-    from toy_map_reduce_spark.functions.ranks import (
-        parts_for, register_scratch, with_global_order,
-    )
+    from toy_map_reduce_spark.functions.ranks import parts_for, with_global_order
 
     docs = load(spark, sf_dir, "documents")
-    sized = register_scratch(
-        docs.select("doc_id", F.size(_tokens("text")).alias("n_tokens")).persist()
+    sized = scratch.persist(
+        docs.select("doc_id", F.size(_tokens("text")).alias("n_tokens"))
     )
     placed = with_global_order(
         sized, [F.col("doc_id").asc()], cumsums={"_cum": "n_tokens"},
@@ -683,15 +680,15 @@ def pipeline_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     difficulty frame is persisted + counted (one tokenization pass,
     size-aware shuffle width, literal group size — see shard_assign)."""
     from toy_map_reduce_spark.functions.ranks import (
-        ntile_from_rn, parts_for, register_scratch, with_global_order,
+        ntile_from_rn, parts_for, with_global_order,
     )
 
-    docs = register_scratch(
+    docs = scratch.persist(
         load(spark, sf_dir, "documents").select(
             "doc_id",
             F.size(F.split(F.coalesce(F.col("text"), F.lit("")), " "))
             .alias("difficulty"),
-        ).persist()
+        )
     )
     n_docs = docs.count()
     banded = with_global_order(

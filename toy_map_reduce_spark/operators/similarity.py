@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from toy_map_reduce_spark import scratch
 from toy_map_reduce_spark.registry import register
 from toy_map_reduce_spark.tables import load
 
@@ -521,11 +522,9 @@ def knn_graph_blocked(d: DataFrame, k: int = KNN_K, cap: int = KNN_BLOCK_CAP) ->
     total-pairs/cap, the price of bounding the quadratic. Uniform small
     blocks get n_sub = 1 and the plan degenerates to the plain keyed
     self-join."""
-    from pyspark import StorageLevel
-
     # three consumers (per-label sizes + both cogroup sides) would
     # otherwise each re-run the scan -> cast-to-double -> norm subtree
-    d = d.persist(StorageLevel.MEMORY_AND_DISK)
+    d = scratch.persist(d)
     sizes = d.groupBy("label").agg(
         F.ceil(F.count(F.lit(1)) / cap).cast("int").alias("n_sub")
     )
@@ -1462,7 +1461,9 @@ def sim_ann_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact's own recall is emitted as the 1.0 control row."""
     from toy_map_reduce_spark.registry import get_spec
 
-    exact = get_spec("sim_topk").builder(spark, sf_dir).select("q_id", "vec_id").cache()
+    exact = scratch.persist(
+        get_spec("sim_topk").builder(spark, sf_dir).select("q_id", "vec_id")
+    )
     n_exact = exact.count()
     rows = []
     for method in ("sim_topk", "sim_topk_lsh", "sim_topk_ivf", "sim_topk_pq"):
@@ -1472,7 +1473,7 @@ def sim_ann_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             (method, n_exact, n_hit,
              (1_000_000 * n_hit) // n_exact if n_exact else 1_000_000)
         )
-    exact.unpersist()
+    scratch.release(exact)
     return spark.createDataFrame(
         rows, "method string, n_exact long, n_hits long, recall_micro long"
     )

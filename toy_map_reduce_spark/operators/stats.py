@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from toy_map_reduce_spark import scratch
 from toy_map_reduce_spark.operators.extras import (
     PCTL_SMALL_N,
     _exact_order_stats,
@@ -573,9 +574,9 @@ def stat_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     # one-row frame consumed by both assignment branches: persist so the
     # boundary/below-count subtree evaluates once, not once per consumer
-    bnd = _exact_order_stats(
+    bnd = scratch.persist(_exact_order_stats(
         lab, "score", windows, extra_eps=(nb + 2) / PCTL_SMALL_N
-    ).persist()
+    ))
     # constant-key broadcast equi-join (NOT crossJoin: a one-row
     # BroadcastNestedLoopJoin evaluates every predicate interpreted,
     # outside codegen) with a non-foldable always-0 key — a literal key
@@ -1288,10 +1289,10 @@ def stat_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each filter branch re-evaluates the stacked aggregate and the scan
     # runs twice, costing more than the two per-column aggregates it
     # replaced (measured in the r6 full bench)
-    mr = byv.select(
+    mr = scratch.persist(byv.select(
         "_cid", "v",
         (F.coalesce(F.sum("cnt").over(w), F.lit(0)) + (F.col("cnt") + 1) / 2.0).alias("mr"),
-    ).persist()
+    ))
     rq = mr.where(F.col("_cid") == "q").select(
         F.col("v").alias("qv"), F.col("mr").alias("q_mr")
     )

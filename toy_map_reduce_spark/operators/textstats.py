@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from toy_map_reduce_spark import scratch
 from toy_map_reduce_spark.registry import register
 from toy_map_reduce_spark.tables import load
 
@@ -942,20 +943,20 @@ def tokenize_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-stage-codegen folds over the vocab table, and the compression
     report is one aggregate weighted by word frequency — the
     tokens-per-byte number a tokenizer change is judged by."""
-    from toy_map_reduce_spark.functions.ranks import register_scratch
     from toy_map_reduce_spark.functions.text import norm_text
 
     docs = load(spark, sf_dir, "documents")
-    words = (
+    # persisted for the trainer's actions AND the lazy report, which reads
+    # it again when the caller materializes it: the scope releases it then
+    words = scratch.persist(
         docs.select(F.explode(F.split(norm_text(F.col("text")), " ")).alias("word"))
         .where(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
-        .cache()
     )
     merges = bpe_train(words)
     enc = bpe_apply(words, merges)
-    out = enc.agg(
+    return enc.agg(
         F.count(F.lit(1)).cast("long").alias("vocab_words"),
         F.sum("freq").cast("long").alias("corpus_words"),
         F.sum(F.length("word") * F.col("freq")).cast("long").alias("chars_total"),
@@ -966,33 +967,6 @@ def tokenize_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("tokens_per_char"),
     )
-    # r13 optimization: this used to be words.unpersist() right here —
-    # but `out` is LAZY and derives from `words`, so dropping the cache
-    # before the caller materializes the result forced the final
-    # compression aggregate to RECOMPUTE the corpus-wide word-frequency
-    # pass from the documents scan, silently breaking the "corpus
-    # touched once" contract the docstring claims (training actions hit
-    # the cache; the returned plan did not). Enrolling the cache in the
-    # rank-scratch lifecycle instead keeps it alive through the caller's
-    # materialization and releases it at the established boundary
-    # (bench.py and parity call release_scratch per query, perfbench
-    # per round).
-    # Interleaved same-session A/B at sf0.1: a wash (2.60 vs 2.75 s
-    # min-of-4 — documents is 5k rows locally, so the recomputed pass is
-    # free); the point is the asymptote: `words` is VOCAB-sized while
-    # its recompute is a CORPUS-sized explode+groupBy, i.e. the old code
-    # paid one extra full corpus pass per run at scale.
-    #
-    # Leak surface (r13 advisor): a caller that drives this builder via
-    # __spark_entry__.queries() directly and never calls
-    # release_scratch() keeps the vocab-sized cache alive for the
-    # session lifetime. That is the documented scratch-lifecycle
-    # contract (functions/ranks.py): every harness in this repo
-    # (bench.py, parity, localcluster, spill) releases per query and
-    # perfbench per round; for any other caller the CacheManager keeps
-    # the blocks until spark.catalog.clearCache().
-    register_scratch(words)
-    return out
 
 
 _LEXICAL_DIVERSITY_ORACLE = """

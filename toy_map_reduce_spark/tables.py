@@ -130,7 +130,8 @@ def _read_path(sf_dir: str, name: str) -> str:
     Memoized on (src, size, mtime_ns) since r14: the decision requires a
     pyarrow footer parse (~10 ms) that was re-paid on every load call —
     part of the per-query constant the r13 verdict flagged. A refreshed
-    fixture changes the stamp and re-decides."""
+    fixture changes the stamp and re-decides; the insert drops the
+    source's entries under older stamps."""
     src = table_path(sf_dir, name)
     if os.environ.get("SPARK_GRAFT_LAYOUT_CACHE", "") == "off":
         return src
@@ -180,6 +181,9 @@ def _read_path(sf_dir: str, name: str) -> str:
     except Exception:
         return src
     if memo_key is not None:
+        # a refreshed fixture leaves its old stamps behind: drop them
+        for k in [k for k in list(_READ_PATH_MEMO) if k[0] == src and k != memo_key]:
+            _READ_PATH_MEMO.pop(k, None)
         _READ_PATH_MEMO[memo_key] = result
     return result
 
@@ -198,7 +202,8 @@ def _read_path(sf_dir: str, name: str) -> str:
 # rows, no results; every action still computes from the parquet
 # files), keyed on (application, resolved path, file size+mtime_ns) so
 # a new session, a different sf_dir, a refreshed fixture, or a layout-
-# cache toggle each get a fresh relation.
+# cache toggle each get a fresh relation. An insert drops the entries of
+# other applications, so the dict holds only the live session's tables.
 _RELATION_CACHE: dict[tuple, DataFrame] = {}
 
 
@@ -252,5 +257,8 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = ev.withColumn("ts", F.col("ts").cast("timestamp"))
     else:
         df = spark.read.parquet(path)
+    # relations of stopped sessions hold py4j handles into dead JVMs
+    for k in [k for k in list(_RELATION_CACHE) if k[0] != key[0]]:
+        _RELATION_CACHE.pop(k, None)
     _RELATION_CACHE[key] = df
     return df.toDF(*df.columns)
