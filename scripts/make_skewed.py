@@ -8,14 +8,14 @@ sessionization windows over a hot user) was asserted, never exercised
 against actually-skewed data. These dirs close that axis:
 
   data/skewed/        — derived from sf0.01, all ten tables, for the
-                        FULL-registry parity sweep (SKEW_rN.json):
+                        FULL-registry parity sweep (tests/test_skewed.py):
       events.user_id    ~20% of rows remapped to one hot user
       documents.lang    ~80% of rows remapped to one dominant lang
       lineitem.l_suppkey ~25% of rows remapped to one hot supplier
   data/skewed_bench/   — same rules over sf0.1 (600k lineitem, 100k
                         events), fact tables replicated REP x with
-                        offset surrogate keys, for the salted-vs-plain
-                        timing comparison (scripts/skew_bench.py).
+                        offset surrogate keys, for the large-input
+                        runs (scripts/spill_smoke.py).
 
 Skew rules are pure modular arithmetic on the surrogate keys (no RNG,
 no hash function that could differ across library versions), so

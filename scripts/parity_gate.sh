@@ -22,18 +22,18 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 if [[ -n "${SF:-}" ]]; then
   echo "parity gate @ ${SF}"
-  SPARK_GRAFT_TEST_SF_DIR="${SF}" python -m pytest tests/test_parity_all.py -q
+  SPARK_GRAFT_TEST_SF_DIR="${SF}" python -m pytest tests/test_parity_all.py -q -m sweep
 else
   for sf in /root/testdata/sf0.001 /root/testdata/sf0.01 /root/testdata/sf0.1; do
     echo "parity gate @ ${sf}"
-    SPARK_GRAFT_TEST_SF_DIR="${sf}" python -m pytest tests/test_parity_all.py -q
+    SPARK_GRAFT_TEST_SF_DIR="${sf}" python -m pytest tests/test_parity_all.py -q -m sweep
   done
   echo "parity gate @ sf0.01 [forced SMJ: autoBroadcastJoinThreshold=-1]"
   SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01 \
     SPARK_GRAFT_TEST_CONF="spark.sql.autoBroadcastJoinThreshold=-1" \
-    python -m pytest tests/test_parity_all.py -q
+    python -m pytest tests/test_parity_all.py -q -m sweep
   echo "parity gate @ sf0.01 [AQE off]"
   SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01 \
     SPARK_GRAFT_TEST_CONF="spark.sql.adaptive.enabled=false" \
-    python -m pytest tests/test_parity_all.py -q
+    python -m pytest tests/test_parity_all.py -q -m sweep
 fi

@@ -92,18 +92,18 @@ def assert_frames_match(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, name:
 
 def run_parity(spark, duck, spec, sf_dir: str) -> None:
     """Build and materialize ``spec`` inside one query scope, check that
-    the scope left no cached relation behind (none beyond what was there
-    before it, counting only entries no other open scope holds), then
-    compare with the oracle."""
+    the scope left nothing behind (no cached relation, temp view, catalog
+    table, active stream or scope directory beyond what was there before
+    it, counting only what no other open scope holds), then compare with
+    the oracle."""
     from toy_map_reduce_spark import scratch
 
     before = scratch.unheld(spark)
     with scratch.scope():
         sdf = spec.builder(spark, sf_dir).toPandas()
     after = scratch.unheld(spark)
-    assert after <= before, (
-        f"{spec.name}: left {after - before} cached relation(s) behind its scope"
-    )
+    left = {k: after[k] - before[k] for k in after if after[k] > before[k]}
+    assert not left, f"{spec.name}: left behind its scope: {left}"
     if spec.oracle is None:
         assert len(sdf) >= 0  # rows-only: builder ran and produced a frame
         return

@@ -21,6 +21,10 @@ NULL-ordering pins, empty-input row-cardinality contracts, NULL-aware
 UDF batches); this suite is the tripwire that keeps the whole class
 closed. All fixes are no-ops at real scale — the standard parity gates
 pin that separately.
+
+The file is in the sweep tier (pytest.ini deselects it by default): run
+it with ``-m sweep``, e.g. ``python -m pytest tests/test_degenerate.py -m
+sweep``. Without the flag pytest collects 0 tests and exits 5.
 """
 
 from __future__ import annotations

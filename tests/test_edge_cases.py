@@ -5,6 +5,8 @@ DuckDB oracle must agree on these too, not just on the fixtures.
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -106,12 +108,14 @@ def test_compaction_actually_reduces_file_count(spark, sf_dir):
     just return correct aggregates."""
     import glob
 
+    from toy_map_reduce_spark import scratch
     from toy_map_reduce_spark.registry import get_spec
-    from toy_map_reduce_spark.sources.io_ops import COMPACT_TARGET_FILES, _scratch
+    from toy_map_reduce_spark.sources.io_ops import COMPACT_TARGET_FILES
 
-    get_spec("compact_small_files").builder(spark, sf_dir).collect()
-    frag = glob.glob(_scratch(sf_dir, "compact/frag") + "/part-*.parquet")
-    tight = glob.glob(_scratch(sf_dir, "compact/tight") + "/part-*.parquet")
+    with scratch.scope():
+        get_spec("compact_small_files").builder(spark, sf_dir).collect()
+        frag = glob.glob(scratch.path("compact/frag") + "/part-*.parquet")
+        tight = glob.glob(scratch.path("compact/tight") + "/part-*.parquet")
     assert len(tight) == COMPACT_TARGET_FILES
     assert len(frag) > len(tight)
 
@@ -498,25 +502,36 @@ def test_row_count_matches_footer_and_handles_layouts(spark, sf_dir, tmp_path):
     assert row_count(str(tmp_path), "region_part") is None
 
 
-def test_derby_base_is_per_process(monkeypatch):
-    """source_jdbc_roundtrip's Derby root must be process-scoped (r8
-    verdict task 5): embedded Derby exclusively locks its database dir,
-    so a shared path made pytest and a parity sweep mutually exclusive
-    on one SF dir. The key is the pid by default, overridable via
-    SPARK_GRAFT_DERBY_KEY."""
-    import os
+def test_two_scopes_get_two_derby_databases_both_shut_down_and_removed(spark, sf_dir):
+    """source_jdbc_roundtrip's embedded Derby database belongs to its
+    query scope: two scopes open at once (embedded Derby locks its
+    database directory) get two databases, and each scope's exit shuts
+    its database down and removes it."""
+    from py4j.protocol import Py4JJavaError
 
-    from toy_map_reduce_spark.sources.lakehouse import _derby_base
+    from toy_map_reduce_spark import scratch
+    from toy_map_reduce_spark.registry import get_spec
+    from toy_map_reduce_spark.sources import lakehouse
 
-    monkeypatch.delenv("SPARK_GRAFT_DERBY_KEY", raising=False)
-    assert f"derby_{os.getpid()}" in _derby_base("/root/testdata/sf0.001")
-    monkeypatch.setenv("SPARK_GRAFT_DERBY_KEY", "other-proc")
-    assert "derby_other-proc" in _derby_base("/root/testdata/sf0.001")
-    # distinct keys -> distinct database dirs -> no lock collision
-    a = _derby_base("/root/testdata/sf0.001")
-    monkeypatch.setenv("SPARK_GRAFT_DERBY_KEY", "second")
-    assert _derby_base("/root/testdata/sf0.001") != a
-
+    if not lakehouse._jvm_class_exists(spark, lakehouse._DERBY_DRIVER):
+        pytest.skip("derby driver jar absent")
+    spec = get_spec("source_jdbc_roundtrip")
+    dbs = []
+    with scratch.scope():
+        assert len(spec.builder(spark, sf_dir).collect()) == 5
+        dbs.append(scratch.path("derby") + "/db")
+        with scratch.scope():
+            assert len(spec.builder(spark, sf_dir).collect()) == 5
+            dbs.append(scratch.path("derby") + "/db")
+            assert all(os.path.isdir(db) for db in dbs)
+        assert os.path.isdir(dbs[0]) and not os.path.exists(dbs[1])
+    assert dbs[0] != dbs[1]
+    for db in dbs:
+        assert not os.path.exists(db)
+        # a database still booted would accept a connection
+        with pytest.raises(Py4JJavaError) as err:
+            spark._jvm.java.sql.DriverManager.getConnection(f"jdbc:derby:{db}")
+        assert err.value.java_exception.getSQLState() == "XJ004"
 
 def test_load_evicts_stale_memo_entries(spark, sf_dir, monkeypatch):
     """Both tables.py memos stay bounded: inserting a relation drops the

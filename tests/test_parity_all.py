@@ -1,5 +1,10 @@
 """Universal parity gate: every registered query vs its DuckDB oracle at
-sf0.001 — the local mirror of the driver's t2 check (sf0.01)."""
+sf0.001 — the local mirror of the driver's t2 check (sf0.01).
+
+The file is in the sweep tier (pytest.ini deselects it by default): run
+it with ``-m sweep``, e.g. ``python -m pytest tests/test_parity_all.py
+-m sweep``. Without the flag pytest collects 0 tests and exits 5.
+"""
 
 from __future__ import annotations
 

@@ -113,14 +113,13 @@ def test_partitioned_sink_read_prunes_partitions(spark, sf_dir):
     # predicate into PartitionFilters (skipping directories), not scan-all
     from pyspark.sql import functions as F
 
+    from toy_map_reduce_spark import scratch
     from toy_map_reduce_spark.registry import get_spec
 
-    get_spec("sink_partitioned_parquet").builder(spark, sf_dir)  # materialize sink
-    from toy_map_reduce_spark.sources.io_ops import _scratch
-
-    path = _scratch(sf_dir, "part_parquet")
-    df = spark.read.parquet(path).where(F.col("o_orderstatus") == "F")
-    plan = explain_str(df)
+    with scratch.scope():
+        get_spec("sink_partitioned_parquet").builder(spark, sf_dir)  # materialize sink
+        df = spark.read.parquet(scratch.path("part_parquet"))
+        plan = explain_str(df.where(F.col("o_orderstatus") == "F"))
     pf = [l for l in plan.splitlines() if "PartitionFilters" in l]
     assert pf, "no PartitionFilters in scan"
     assert "o_orderstatus" in pf[0], pf[0]

@@ -12,9 +12,10 @@ never exercised against data that actually has a hot key. data/skewed
 
 Every oracle-backed query must stay hash-exact against DuckDB and every
 rows-only query must run — skew must change PERFORMANCE, never answers.
-The performance half (salted-vs-plain straggler/wall ratios on a 9.6M-
-row amplification of the same rules) is scripts/skew_bench.py, recorded
-in SKEW_r{N}.json.
+
+The file is in the sweep tier (pytest.ini deselects it by default): run
+it with ``-m sweep``, e.g. ``python -m pytest tests/test_skewed.py -m
+sweep``. Without the flag pytest collects 0 tests and exits 5.
 """
 
 from __future__ import annotations

@@ -24,18 +24,6 @@ from toy_map_reduce_spark.registry import register
 from toy_map_reduce_spark.tables import load
 
 
-def _view(df, sf_dir: str, base: str) -> str:
-    """Register a temp view with an sf-scoped name: a bare global name
-    would collide if the driver interleaves calls across scale factors."""
-    import os
-    import re
-
-    tag = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    name = f"{base}_{tag}"
-    df.createOrReplaceTempView(name)
-    return name
-
-
 _AGG_STATS_ORACLE = """
 SELECT l_returnflag,
        round(stddev_samp(l_quantity), 6) AS qty_stddev,
@@ -608,16 +596,16 @@ HAVING COUNT(*) > 0
 @register("agg_grouping_sets", "G", oracle=_GROUPING_SETS_ORACLE,
           doc="Explicit GROUPING SETS (beyond rollup/cube shapes)")
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = _view(load(spark, sf_dir, "lineitem"), sf_dir, "gs_lineitem")
     return spark.sql(
-        f"""
+        """
         SELECT l_returnflag, l_linestatus,
                round(SUM(l_quantity), 2) AS sum_qty,
                COUNT(*) AS cnt
         FROM {v}
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
         HAVING COUNT(*) > 0
-        """
+        """,
+        v=load(spark, sf_dir, "lineitem"),
     )
 
 
@@ -632,13 +620,13 @@ WHERE o_totalprice > (SELECT AVG(o_totalprice) FROM orders)
           doc="Scalar subquery in a predicate: orders above the global mean "
               "(Catalyst plans the subquery as a broadcast one-row join)")
 def scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = _view(load(spark, sf_dir, "orders"), sf_dir, "sq_orders")
     return spark.sql(
-        f"""
+        """
         SELECT o_orderkey, o_totalprice
         FROM {v}
         WHERE o_totalprice > (SELECT AVG(o_totalprice) FROM {v})
-        """
+        """,
+        v=load(spark, sf_dir, "orders"),
     )
 
 
@@ -654,14 +642,14 @@ WHERE c_acctbal > (SELECT AVG(c2.c_acctbal) FROM customer c2
           doc="Correlated scalar subquery (above own nation's average) — "
               "Catalyst decorrelates to an aggregate + join")
 def correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = _view(load(spark, sf_dir, "customer"), sf_dir, "cs_customer")
     return spark.sql(
-        f"""
+        """
         SELECT c_custkey, c_acctbal
         FROM {v} c
         WHERE c_acctbal > (SELECT AVG(c2.c_acctbal) FROM {v} c2
                            WHERE c2.c_nationkey = c.c_nationkey)
-        """
+        """,
+        v=load(spark, sf_dir, "customer"),
     )
 
 
@@ -756,8 +744,7 @@ def agg_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     of explicit bit arithmetic because engines disagree on bit order).
     Executes as the same single expand+aggregate as agg_rollup — the
     grouping columns are free metadata, not extra shuffles."""
-    v = _view(load(spark, sf_dir, "lineitem"), sf_dir, "gid_lineitem")
-    return spark.sql(_GROUPING_ID_SQL.format(t=v))
+    return spark.sql(_GROUPING_ID_SQL, t=load(spark, sf_dir, "lineitem"))
 
 
 _REGRESSION_ORACLE = """
@@ -816,9 +803,8 @@ def sql_pivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema data-dependent (breaking downstream plans). With the list
     given, Catalyst compiles this to the same single conditional
     aggregate as pivot_sum — the clause is surface, not a new engine."""
-    v = _view(load(spark, sf_dir, "lineitem"), sf_dir, "pivot_lineitem")
     return spark.sql(
-        f"""
+        """
         SELECT l_returnflag,
                round(o_status, 2) AS qty_open,
                round(f_status, 2) AS qty_filled
@@ -826,7 +812,8 @@ def sql_pivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
           SELECT * FROM (SELECT l_returnflag, l_linestatus, l_quantity FROM {v})
           PIVOT (SUM(l_quantity) FOR l_linestatus IN ('O' AS o_status, 'F' AS f_status))
         )
-        """
+        """,
+        v=load(spark, sf_dir, "lineitem"),
     )
 
 

@@ -267,11 +267,10 @@ def subquery_exists_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash join that emits a synthetic boolean instead of dropping or
     duplicating, still one shuffle on the correlation key. Same SQL text
     on both engines."""
-    from toy_map_reduce_spark.operators.extras import _view
 
-    c = _view(load(spark, sf_dir, "customer"), sf_dir, "ef_c")
-    o = _view(load(spark, sf_dir, "orders"), sf_dir, "ef_o")
-    return spark.sql(_EXISTS_FLAG_SQL.format(c=c, o=o))
+    c = load(spark, sf_dir, "customer")
+    o = load(spark, sf_dir, "orders")
+    return spark.sql(_EXISTS_FLAG_SQL, c=c, o=o)
 
 
 _CROSSTAB_ORACLE = """

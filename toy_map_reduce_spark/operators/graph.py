@@ -322,10 +322,8 @@ def sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     -> ~1.7 s hinted; a pre-cached edges temp view on top measured
     ~2.2 s (InMemoryTableScan fan-out loses to the recomputed subtree
     at this scale), so the hint-only form is kept."""
-    from toy_map_reduce_spark.operators.extras import _view
 
-    v = _view(load(spark, sf_dir, "orders"), sf_dir, "rcte_orders")
-    return spark.sql(_RECURSIVE_CTE_SQL.format(t=v))
+    return spark.sql(_RECURSIVE_CTE_SQL, t=load(spark, sf_dir, "orders"))
 
 
 _CLUSTERING_COEFF_ORACLE = f"""

@@ -330,11 +330,10 @@ def join_dpp_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     by evaluating the dim side first and broadcasting the surviving
     partition keys into the fact scan. At 100 TB with ~daily partitions
     this is the difference between scanning 3 years and 3 days."""
-    from toy_map_reduce_spark.sources.io_ops import _scratch
-    from toy_map_reduce_spark.tables import load
+    from toy_map_reduce_spark import scratch
 
-    path = _scratch(sf_dir, "dpp_fact")
-    dim_path = _scratch(sf_dir, "dpp_dim")
+    path = scratch.path("dpp_fact")
+    dim_path = scratch.path("dpp_dim")
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_returnflag"
     )
@@ -426,11 +425,10 @@ def join_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exactly why exposing LATERAL costs nothing at scale: the
     surface is per-row, the execution is set-oriented. Deterministic
     (o_totalprice, o_orderkey) ordering so LIMIT 2 ties can't flip."""
-    from toy_map_reduce_spark.operators.extras import _view
 
-    c = _view(load(spark, sf_dir, "customer"), sf_dir, "lat_c")
-    o = _view(load(spark, sf_dir, "orders"), sf_dir, "lat_o")
-    return spark.sql(_LATERAL_TOPN_SQL.format(c=c, o=o))
+    c = load(spark, sf_dir, "customer")
+    o = load(spark, sf_dir, "orders")
+    return spark.sql(_LATERAL_TOPN_SQL, c=c, o=o)
 
 
 _JOIN_RIGHT_ORACLE = """

@@ -397,10 +397,8 @@ def agg_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     under shuffle (the same reason agg_string_concat sort_arrays its
     collect_list); state per group is the value list — bounded here by
     group size, the honest cost of any ordered string aggregate."""
-    from toy_map_reduce_spark.operators.extras import _view
 
-    v = _view(load(spark, sf_dir, "nation"), sf_dir, "listagg_nation")
-    return spark.sql(_LISTAGG_SQL.format(t=v))
+    return spark.sql(_LISTAGG_SQL, t=load(spark, sf_dir, "nation"))
 
 
 _FILTER_CLAUSE_SQL = """
@@ -432,10 +430,7 @@ def agg_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     set is NULL not 0) is worth pinning cross-engine."""
     from pyspark.sql import functions as _F
 
-    from toy_map_reduce_spark.operators.extras import _view
-
-    v = _view(load(spark, sf_dir, "lineitem"), sf_dir, "filter_lineitem")
-    df = spark.sql(_FILTER_CLAUSE_SQL.format(t=v))
+    df = spark.sql(_FILTER_CLAUSE_SQL, t=load(spark, sf_dir, "lineitem"))
     return df.select(
         "l_returnflag",
         _F.col("n_bulky").cast("long").alias("n_bulky"),

@@ -12,8 +12,6 @@ lands in the same split). Never ``rand()``.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -278,9 +276,8 @@ def min_label_propagation(
 
     Checkpoint mode: localCheckpoint by default (executor-local blocks —
     fastest, right for local mode). On a real cluster pass
-    ``reliable_checkpoint_dir`` (or set $SPARK_GRAFT_CC_CHECKPOINT_DIR)
-    to use reliable ``checkpoint()`` into that HDFS/object-store path
-    instead: localCheckpoint'ed blocks die with their executor, which at
+    ``reliable_checkpoint_dir`` to use reliable ``checkpoint()`` into
+    that HDFS/object-store path instead: localCheckpoint'ed blocks die with their executor, which at
     1000 executors makes a multi-round CC job restart-prone, while a
     reliable checkpoint survives executor loss. The loop structure and
     the result are identical in both modes (pinned in
@@ -298,9 +295,6 @@ def min_label_propagation(
     TTL/lifecycle rule. Not set session-wide here: the default
     (localCheckpoint) writes no reliable files at all, and a library
     shouldn't flip a global cleaner conf under its caller."""
-    reliable_checkpoint_dir = reliable_checkpoint_dir or os.environ.get(
-        "SPARK_GRAFT_CC_CHECKPOINT_DIR"
-    )
     if reliable_checkpoint_dir:
         docs.sparkSession.sparkContext.setCheckpointDir(reliable_checkpoint_dir)
     edges = scratch.persist(pairs.union(

@@ -248,10 +248,7 @@ GROUP BY l_returnflag, l_linestatus
               "ANSI string runs on both engines (no dialect translation), "
               "proving the SQL entry path end-to-end")
 def sql_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from toy_map_reduce_spark.operators.extras import _view
-
-    v = _view(load(spark, sf_dir, "lineitem"), sf_dir, "q1_lineitem")
-    return spark.sql(_TPCH_Q1_SQL.format(table=v))
+    return spark.sql(_TPCH_Q1_SQL, table=load(spark, sf_dir, "lineitem"))
 
 
 # TPC-H Q3/Q5/Q10 (adapted to the fixture's trimmed column set and
@@ -286,12 +283,10 @@ GROUP BY l_orderkey, o_orderdate, o_orderpriority
               "filter, revenue aggregate — identical ANSI string on both "
               "engines")
 def sql_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from toy_map_reduce_spark.operators.extras import _view
-
-    c = _view(load(spark, sf_dir, "customer"), sf_dir, "q3_customer")
-    o = _view(load(spark, sf_dir, "orders"), sf_dir, "q3_orders")
-    l = _view(load(spark, sf_dir, "lineitem"), sf_dir, "q3_lineitem")
-    return spark.sql(_TPCH_Q3_SQL.format(c=c, o=o, l=l))
+    c = load(spark, sf_dir, "customer")
+    o = load(spark, sf_dir, "orders")
+    l = load(spark, sf_dir, "lineitem")
+    return spark.sql(_TPCH_Q3_SQL, c=c, o=o, l=l)
 
 
 _TPCH_Q5_SQL = """
@@ -318,14 +313,12 @@ GROUP BY n_name
               "dimension chains — the join-reordering stress case; small "
               "dims must broadcast")
 def sql_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from toy_map_reduce_spark.operators.extras import _view
-
-    views = {
-        k: _view(load(spark, sf_dir, t), sf_dir, f"q5_{t}")
+    tables = {
+        k: load(spark, sf_dir, t)
         for k, t in (("c", "customer"), ("o", "orders"), ("l", "lineitem"),
                      ("s", "supplier"), ("n", "nation"), ("r", "region"))
     }
-    return spark.sql(_TPCH_Q5_SQL.format(**views))
+    return spark.sql(_TPCH_Q5_SQL, **tables)
 
 
 _TPCH_Q10_SQL = """
@@ -348,13 +341,11 @@ GROUP BY c_custkey, c_name, n_name
           doc="TPC-H Q10 (returned items): fact-fact join with a quarter "
               "date window and returnflag filter, customer-grain revenue")
 def sql_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from toy_map_reduce_spark.operators.extras import _view
-
-    c = _view(load(spark, sf_dir, "customer"), sf_dir, "q10_customer")
-    o = _view(load(spark, sf_dir, "orders"), sf_dir, "q10_orders")
-    l = _view(load(spark, sf_dir, "lineitem"), sf_dir, "q10_lineitem")
-    n = _view(load(spark, sf_dir, "nation"), sf_dir, "q10_nation")
-    return spark.sql(_TPCH_Q10_SQL.format(c=c, o=o, l=l, n=n))
+    c = load(spark, sf_dir, "customer")
+    o = load(spark, sf_dir, "orders")
+    l = load(spark, sf_dir, "lineitem")
+    n = load(spark, sf_dir, "nation")
+    return spark.sql(_TPCH_Q10_SQL, c=c, o=o, l=l, n=n)
 
 
 _TPCH_Q6_SQL = """
@@ -377,10 +368,8 @@ def sql_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     """No join, no window: at 100 TB this is a scan whose cost is set
     entirely by pushdown (row-group skipping on l_shipdate) and column
     pruning — the plan must show PushedFilters + a 4-column ReadSchema."""
-    from toy_map_reduce_spark.operators.extras import _view
 
-    l = _view(load(spark, sf_dir, "lineitem"), sf_dir, "q6_lineitem")
-    return spark.sql(_TPCH_Q6_SQL.format(l=l))
+    return spark.sql(_TPCH_Q6_SQL, l=load(spark, sf_dir, "lineitem"))
 
 
 _TPCH_Q4_SQL = """
@@ -404,11 +393,10 @@ def sql_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Catalyst rewrites the correlated EXISTS to a left-semi hash join on
     l_orderkey — one shuffle each side, no row explosion, and the date
     filter halves the build side before the join."""
-    from toy_map_reduce_spark.operators.extras import _view
 
-    o = _view(load(spark, sf_dir, "orders"), sf_dir, "q4_orders")
-    l = _view(load(spark, sf_dir, "lineitem"), sf_dir, "q4_lineitem")
-    return spark.sql(_TPCH_Q4_SQL.format(o=o, l=l))
+    o = load(spark, sf_dir, "orders")
+    l = load(spark, sf_dir, "lineitem")
+    return spark.sql(_TPCH_Q4_SQL, o=o, l=l)
 
 
 _TPCH_Q14_SQL = """
@@ -438,11 +426,10 @@ FROM joined
 def sql_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     """part is the small side — AQE broadcasts it, so the month of
     lineitem never shuffles; the CASE folds both sums into one pass."""
-    from toy_map_reduce_spark.operators.extras import _view
 
-    l = _view(load(spark, sf_dir, "lineitem"), sf_dir, "q14_lineitem")
-    p = _view(load(spark, sf_dir, "part"), sf_dir, "q14_part")
-    return spark.sql(_TPCH_Q14_SQL.format(l=l, p=p))
+    l = load(spark, sf_dir, "lineitem")
+    p = load(spark, sf_dir, "part")
+    return spark.sql(_TPCH_Q14_SQL, l=l, p=p)
 
 
 _TPCH_Q18_SQL = """
@@ -470,12 +457,11 @@ def sql_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The aggregate runs FIRST and its survivors (~1% of orders) drive
     the joins — at 100 TB the big-side scan happens once and the join
     probes are against a tiny filtered build, which AQE broadcasts."""
-    from toy_map_reduce_spark.operators.extras import _view
 
-    l = _view(load(spark, sf_dir, "lineitem"), sf_dir, "q18_lineitem")
-    o = _view(load(spark, sf_dir, "orders"), sf_dir, "q18_orders")
-    c = _view(load(spark, sf_dir, "customer"), sf_dir, "q18_customer")
-    return spark.sql(_TPCH_Q18_SQL.format(l=l, o=o, c=c))
+    l = load(spark, sf_dir, "lineitem")
+    o = load(spark, sf_dir, "orders")
+    c = load(spark, sf_dir, "customer")
+    return spark.sql(_TPCH_Q18_SQL, l=l, o=o, c=c)
 
 
 _GROUP_BY_ALL_SQL = """
@@ -498,10 +484,8 @@ def sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     during analysis, so the plan is byte-identical to agg_basic's — what
     the query buys is resilience to select-list edits in maintained
     reports (add a column, the grouping follows)."""
-    from toy_map_reduce_spark.operators.extras import _view
 
-    v = _view(load(spark, sf_dir, "lineitem"), sf_dir, "gba_lineitem")
-    return spark.sql(_GROUP_BY_ALL_SQL.format(t=v))
+    return spark.sql(_GROUP_BY_ALL_SQL, t=load(spark, sf_dir, "lineitem"))
 
 
 _PIPE_SQL = """
@@ -534,10 +518,8 @@ def sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain to the same Aggregate/Filter plan as the HAVING form, so the
     physical shape (partial+final aggregate) is unchanged — the surface
     exists so maintained pipelines read top-to-bottom."""
-    from toy_map_reduce_spark.operators.extras import _view
 
-    v = _view(load(spark, sf_dir, "orders"), sf_dir, "pipe_orders")
-    df = spark.sql(_PIPE_SQL.format(t=v))
+    df = spark.sql(_PIPE_SQL, t=load(spark, sf_dir, "orders"))
     from pyspark.sql import functions as _F
 
     return df.select("o_orderpriority", "revenue", _F.col("n").cast("long").alias("n"))
@@ -605,7 +587,5 @@ def sql_star_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     so Catalyst's column pruning works exactly as if the survivors were
     typed out — worth pinning because wide fact tables (hundreds of
     columns at 100 TB) make explicit select lists unmaintainable."""
-    from toy_map_reduce_spark.operators.extras import _view
 
-    v = _view(load(spark, sf_dir, "orders"), sf_dir, "star_except_orders")
-    return spark.sql(_STAR_EXCEPT_SQL.format(t=v))
+    return spark.sql(_STAR_EXCEPT_SQL, t=load(spark, sf_dir, "orders"))

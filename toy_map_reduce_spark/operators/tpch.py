@@ -31,16 +31,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from toy_map_reduce_spark.operators.extras import _view
 from toy_map_reduce_spark.registry import register
 from toy_map_reduce_spark.tables import load
 
 
-def _views(spark: SparkSession, sf_dir: str, prefix: str, **tables: str) -> dict[str, str]:
-    return {
-        k: _view(load(spark, sf_dir, t), sf_dir, f"{prefix}_{t}")
-        for k, t in tables.items()
-    }
+def _tables(spark: SparkSession, sf_dir: str, **tables: str) -> dict[str, DataFrame]:
+    return {k: load(spark, sf_dir, t) for k, t in tables.items()}
 
 
 _TPCH_Q7_SQL = """
@@ -76,9 +72,9 @@ def sql_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot push below the joins, but each single-nation conjunct CAN and
     Catalyst infers n_name IN (...) filters on both dim scans — at 100 TB
     the fact table shuffles once, on l_orderkey, for the orders join."""
-    v = _views(spark, sf_dir, "q7", s="supplier", l="lineitem", o="orders",
-               c="customer", n="nation")
-    return spark.sql(_TPCH_Q7_SQL.format(n2=v["n"], **v))
+    v = _tables(spark, sf_dir, s="supplier", l="lineitem", o="orders",
+                c="customer", n="nation")
+    return spark.sql(_TPCH_Q7_SQL, n2=v["n"], **v)
 
 
 _TPCH_Q8_SQL = """
@@ -127,9 +123,9 @@ def sql_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     the date window below the joins, so the fact side is pre-filtered
     before its single shuffle; the share division runs on already-rounded
     (bit-identical) doubles so the floor cannot flip cross-engine."""
-    v = _views(spark, sf_dir, "q8", p="part", s="supplier", l="lineitem",
-               o="orders", c="customer", n="nation", r="region")
-    return spark.sql(_TPCH_Q8_SQL.format(n2=v["n"], **v))
+    v = _tables(spark, sf_dir, p="part", s="supplier", l="lineitem",
+                o="orders", c="customer", n="nation", r="region")
+    return spark.sql(_TPCH_Q8_SQL, n2=v["n"], **v)
 
 
 _TPCH_Q12_SQL = """
@@ -161,8 +157,8 @@ GROUP BY latency_bucket
 def sql_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact-fact join on the order key with the year filter pushed to the
     lineitem scan; counts only, so no float discipline is needed."""
-    v = _views(spark, sf_dir, "q12", o="orders", l="lineitem")
-    return spark.sql(_TPCH_Q12_SQL.format(**v))
+    v = _tables(spark, sf_dir, o="orders", l="lineitem")
+    return spark.sql(_TPCH_Q12_SQL, **v)
 
 
 _TPCH_Q13_SQL = """
@@ -187,8 +183,8 @@ def sql_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two cascaded aggregations, each with map-side partials; the outer
     join keeps order-less customers, which COUNT(o_orderkey) — not
     COUNT(*) — correctly scores as 0."""
-    v = _views(spark, sf_dir, "q13", c="customer", o="orders")
-    return spark.sql(_TPCH_Q13_SQL.format(**v))
+    v = _tables(spark, sf_dir, c="customer", o="orders")
+    return spark.sql(_TPCH_Q13_SQL, **v)
 
 
 _TPCH_Q15_SQL = """
@@ -218,8 +214,8 @@ def sql_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar MAX); revenue must be an exact integer because the WHERE is an
     EQUALITY on an aggregate — the one TPC-H query where a ulp of
     cross-engine drift changes the row set, not just a printed digit."""
-    v = _views(spark, sf_dir, "q15", l="lineitem", s="supplier")
-    return spark.sql(_TPCH_Q15_SQL.format(**v))
+    v = _tables(spark, sf_dir, l="lineitem", s="supplier")
+    return spark.sql(_TPCH_Q15_SQL, **v)
 
 
 _TPCH_Q16_SQL = """
@@ -246,8 +242,8 @@ def sql_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DISTINCT pair projection is the expensive step (one shuffle on
     the pair); the NOT IN subquery is a broadcast null-aware anti join
     against a ~dozen-row exclusion list, and part is a broadcast dim."""
-    v = _views(spark, sf_dir, "q16", l="lineitem", p="part", s="supplier")
-    return spark.sql(_TPCH_Q16_SQL.format(**v))
+    v = _tables(spark, sf_dir, l="lineitem", p="part", s="supplier")
+    return spark.sql(_TPCH_Q16_SQL, **v)
 
 
 _TPCH_Q17_SQL = """
@@ -279,8 +275,8 @@ def sql_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-part aggregate shuffles once on l_partkey and joins back
     to the fact on the same key — co-partitioned, so AQE can plan the
     second join shuffle-free; the brand filter broadcasts via part."""
-    v = _views(spark, sf_dir, "q17", l="lineitem", p="part")
-    return spark.sql(_TPCH_Q17_SQL.format(l2=v["l"], **v))
+    v = _tables(spark, sf_dir, l="lineitem", p="part")
+    return spark.sql(_TPCH_Q17_SQL, l2=v["l"], **v)
 
 
 _TPCH_Q19_SQL = """
@@ -305,8 +301,8 @@ def sql_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Catalyst extracts the common p_partkey = l_partkey equi-key so
     this stays a hash join (not nested-loop), and derives IN/range
     filters for each side from the OR arms to prune both scans."""
-    v = _views(spark, sf_dir, "q19", l="lineitem", p="part")
-    return spark.sql(_TPCH_Q19_SQL.format(**v))
+    v = _tables(spark, sf_dir, l="lineitem", p="part")
+    return spark.sql(_TPCH_Q19_SQL, **v)
 
 
 _TPCH_Q22_SQL = """
@@ -344,8 +340,8 @@ def sql_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     strategy; the anti join against orders is the only shuffle. The
     avg comparison must be integer-exact: a strict > on a float average
     is the textbook cross-engine boundary flip."""
-    v = _views(spark, sf_dir, "q22", c="customer", o="orders")
-    return spark.sql(_TPCH_Q22_SQL.format(c2=v["c"], **v))
+    v = _tables(spark, sf_dir, c="customer", o="orders")
+    return spark.sql(_TPCH_Q22_SQL, c2=v["c"], **v)
 
 
 _TPCH_Q2_SQL = """
@@ -392,9 +388,9 @@ def sql_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     double division — so the row set cannot flip cross-engine. All four
     dims broadcast; the derived ps aggregate is the only lineitem
     shuffle, on (partkey, suppkey)."""
-    v = _views(spark, sf_dir, "q2", l="lineitem", p="part", s="supplier",
-               n="nation", r="region")
-    return spark.sql(_TPCH_Q2_SQL.format(s2=v["s"], n2=v["n"], r2=v["r"], **v))
+    v = _tables(spark, sf_dir, l="lineitem", p="part", s="supplier",
+                n="nation", r="region")
+    return spark.sql(_TPCH_Q2_SQL, s2=v["s"], n2=v["n"], r2=v["r"], **v)
 
 
 _TPCH_Q9_SQL = """
@@ -426,9 +422,9 @@ def sql_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier/nation broadcast; the LIKE filter prunes the part build side
     before the join. amount has exact 4-decimal true precision (2-dp
     prices × 2-dp rates), so the 4-dp rounded sum is cross-engine-stable."""
-    v = _views(spark, sf_dir, "q9", p="part", s="supplier", l="lineitem",
-               o="orders", n="nation")
-    return spark.sql(_TPCH_Q9_SQL.format(**v))
+    v = _tables(spark, sf_dir, p="part", s="supplier", l="lineitem",
+                o="orders", n="nation")
+    return spark.sql(_TPCH_Q9_SQL, **v)
 
 
 _TPCH_Q11_SQL = """
@@ -458,8 +454,8 @@ def sql_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     twice (group rows + scalar total); the HAVING-style threshold is
     integer cents × 200 vs total cents — the fraction-of-total filter
     with no float division anywhere."""
-    v = _views(spark, sf_dir, "q11", l="lineitem", s="supplier", n="nation")
-    return spark.sql(_TPCH_Q11_SQL.format(**v))
+    v = _tables(spark, sf_dir, l="lineitem", s="supplier", n="nation")
+    return spark.sql(_TPCH_Q11_SQL, **v)
 
 
 _TPCH_Q20_SQL = """
@@ -499,9 +495,9 @@ def sql_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two stacked integer aggregates on co-partitioned keys (partkey,
     suppkey) → (partkey), then a broadcast semi join into the 10-row
     supplier dim. The majority test is pure BIGINT arithmetic."""
-    v = _views(spark, sf_dir, "q20", l="lineitem", s="supplier", n="nation",
-               p="part")
-    return spark.sql(_TPCH_Q20_SQL.format(**v))
+    v = _tables(spark, sf_dir, l="lineitem", s="supplier", n="nation",
+                p="part")
+    return spark.sql(_TPCH_Q20_SQL, **v)
 
 
 _TPCH_Q21_SQL = """
@@ -537,6 +533,6 @@ def sql_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     three scans of lineitem co-partitioned on one key, so AQE reuses the
     exchange. The NOT EXISTS arm correlates on the outer o_orderdate
     (same order ⇒ same date), which both engines decorrelate exactly."""
-    v = _views(spark, sf_dir, "q21", s="supplier", l="lineitem", o="orders",
-               n="nation")
-    return spark.sql(_TPCH_Q21_SQL.format(l2=v["l"], l3=v["l"], **v))
+    v = _tables(spark, sf_dir, s="supplier", l="lineitem", o="orders",
+                n="nation")
+    return spark.sql(_TPCH_Q21_SQL, l2=v["l"], l3=v["l"], **v)

@@ -140,16 +140,14 @@ def _tokenize_udtf_cls():
               "array-UDF+explode emulation. Empty tokens filtered (UDTF "
               "yields only real words)")
 def udtf_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from toy_map_reduce_spark.operators.extras import _view
-
     spark.udtf.register("tokenize_udtf", _tokenize_udtf_cls())
-    docs_view = _view(load(spark, sf_dir, "documents"), sf_dir, "udtf_docs")
     return spark.sql(
-        f"""
-        SELECT t.word, CAST(COUNT(*) AS BIGINT) AS cnt
-        FROM {docs_view} d, LATERAL tokenize_udtf(d.text) t
-        GROUP BY t.word
         """
+        SELECT t.word, CAST(COUNT(*) AS BIGINT) AS cnt
+        FROM {docs} d, LATERAL tokenize_udtf(d.text) t
+        GROUP BY t.word
+        """,
+        docs=load(spark, sf_dir, "documents"),
     )
 
 
@@ -251,12 +249,10 @@ def udtf_table_arg(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition, streaming rows through eval() — unlike applyInPandas the
     group never materializes as one frame, so per-group state can be O(1)
     even when a group is huge. The oracle is the plain GROUP BY twin."""
-    from toy_map_reduce_spark.operators.extras import _view
-
     spark.udtf.register("tmr_group_summary", _group_summary_udtf_cls())
-    v = _view(load(spark, sf_dir, "documents"), sf_dir, "udtf_ta_docs")
     return spark.sql(
-        f"SELECT * FROM tmr_group_summary(TABLE({v}) PARTITION BY lang)"
+        "SELECT * FROM tmr_group_summary(TABLE({docs}) PARTITION BY lang)",
+        docs=load(spark, sf_dir, "documents"),
     )
 
 

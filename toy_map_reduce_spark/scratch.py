@@ -1,23 +1,38 @@
-"""The one lifetime rule for persisted intermediates: a frame the engine
-persists lives until the query that made it is done.
+"""The one lifetime rule: nothing a query makes outlives the query.
 
-Every ``.persist()`` in the engine goes through :func:`persist`. It
-persists at one storage level (``MEMORY_AND_DISK``) and records the frame
-under the current scope. A caller that runs a query wraps building AND
-materializing it in ``with scope():``; on exit, even on an exception,
-the scope unpersists what was persisted inside it and nothing else.
-Frames persisted outside any scope are released by :func:`release_scratch`,
+A caller that runs a query wraps building AND materializing it in
+``with scope():``. What the query makes through this module belongs to
+the scope, and on exit, even on an exception, the scope undoes it:
+
+- frames persisted with :func:`persist` (at ``MEMORY_AND_DISK``) are
+  unpersisted;
+- directories from :func:`path` are removed. They live under one
+  per-process root, made with ``tempfile.mkdtemp`` on first use and
+  removed at interpreter exit;
+- catalog tables named by :func:`table` are dropped;
+- what was handed to :func:`on_exit` runs, newest first: streams still
+  running in a query's streaming session are stopped
+  (``session.streaming_session``), an embedded database is shut down.
+
+:func:`name` tags a name with the scope, so two clients' streaming
+queries, sinks and tables never share one. Temp views need no rule of
+their own: builders pass DataFrames to ``spark.sql(SQL, t=df)``, which
+registers uuid-named views and drops them once the query is analysed.
+
+What a query makes outside any scope lives until :func:`release_scratch`,
 the barrier call of a harness that runs rounds of queries and knows that
-none is in flight.
+none is in flight. Outside any scope, two calls of one query share its
+paths and names, so concurrent callers of one query each need a scope.
 
-Why the builder cannot release its own frames: a query returns a LAZY
-DataFrame. The persisted intermediates are read only when the caller
-materializes that result (``toPandas``, a write), after the builder has
-returned. Releasing earlier makes the result recompute them, and for the
-distributed rank (``functions/ranks.with_global_order``) breaks the
-partition-id stamp both of its passes must see. So the frames stay alive
-until the scope around the materialization ends. Spark's CacheManager
-holds strong references; nothing is dropped by garbage collection.
+Why the builder cannot release what it made: a query returns a LAZY
+DataFrame. Persisted intermediates, written files and catalog tables are
+read only when the caller materializes that result (``toPandas``, a
+write), after the builder has returned. Releasing earlier makes the
+result recompute or lose them, and for the distributed rank
+(``functions/ranks.with_global_order``) breaks the partition-id stamp both
+of its passes must see. So they stay alive until the scope around the
+materialization ends. Spark's CacheManager holds strong references;
+nothing is dropped by garbage collection.
 
 Concurrent clients of one session: Spark keeps one CacheManager entry
 per plan, so two clients that persist equal plans share an entry. A
@@ -30,33 +45,68 @@ iterative loop) is let go early with :func:`release`.
 
 from __future__ import annotations
 
+import atexit
 import contextlib
 import contextvars
 import dataclasses
+import os
+import shutil
+import tempfile
 import threading
+import uuid
 
 from py4j.protocol import Py4JError
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["persist", "scope", "release", "release_scratch", "unheld"]
+__all__ = ["persist", "scope", "path", "name", "table", "on_exit", "release",
+           "release_scratch", "unheld"]
 
 LEVEL = StorageLevel.MEMORY_AND_DISK
 
-_scope: contextvars.ContextVar[object | None] = contextvars.ContextVar(
+
+class _Scope:
+    """One query's lifetime: its id tags its directory and names."""
+
+    def __init__(self) -> None:
+        self.id = uuid.uuid4().hex[:12]
+        self.exits = contextlib.ExitStack()
+        self.dir: str | None = None
+
+    def close(self) -> None:
+        """Undo what the scope made, newest first: what was handed to
+        on_exit, then the directory, then the persisted frames."""
+        try:
+            self.exits.close()
+        finally:
+            if self.dir:
+                shutil.rmtree(self.dir, ignore_errors=True)
+            with _lock:
+                _open.discard(self)
+                _drop([h for h in _held if h.scope is self])
+
+
+_scope: contextvars.ContextVar[_Scope | None] = contextvars.ContextVar(
     "scratch_scope", default=None
 )
 _lock = threading.Lock()
+_unscoped = _Scope()  # what is made outside any scope, until release_scratch
+_open: set[_Scope] = set()
+_root: str | None = None
+
+
+def _current() -> _Scope:
+    return _scope.get() or _unscoped
 
 
 @dataclasses.dataclass(eq=False)
 class _Hold:
     """One holder of a CacheManager entry: the frame that persisted it,
-    the scope it lives in (None: until release_scratch) and the identity
-    of the entry's cache builder when the hold was taken."""
+    the scope it lives in and the identity of the entry's cache builder
+    when the hold was taken."""
 
     df: DataFrame
-    scope: object | None
+    scope: _Scope
     entry: int | None
 
 
@@ -84,8 +134,43 @@ def persist(df: DataFrame) -> DataFrame:
             entry = _entry(df)
         elif all(h.entry != entry for h in _held):
             return df  # cached by someone else, who releases it
-        _held.append(_Hold(df, _scope.get(), entry))
+        _held.append(_Hold(df, _current(), entry))
     return df
+
+
+def path(name: str) -> str:
+    """The path of directory ``name`` in the current scope: the same path
+    for the same name within one scope. The scope's directory exists;
+    the caller (usually Spark's writer) makes ``name`` inside it."""
+    global _root
+    s = _current()
+    with _lock:
+        if s.dir is None:
+            if _root is None:
+                _root = tempfile.mkdtemp(prefix="spark-graft-")
+                atexit.register(shutil.rmtree, _root, True)
+            s.dir = os.path.join(_root, s.id)
+            os.mkdir(s.dir)
+    return os.path.join(s.dir, name)
+
+
+def name(base: str) -> str:
+    """``base`` tagged with the current scope: no other scope's name."""
+    return f"{base}_{_current().id}"
+
+
+def on_exit(fn, *args) -> None:
+    """Call ``fn(*args)`` when the current scope exits, before what was
+    registered earlier and before its directory is removed."""
+    _current().exits.callback(fn, *args)
+
+
+def table(spark: SparkSession, base: str) -> str:
+    """A catalog table name for the current scope; the scope drops the
+    table on exit (its files go with the scope's directory)."""
+    table_name = name(base)
+    on_exit(spark.sql, f"DROP TABLE IF EXISTS {table_name}")
+    return table_name
 
 
 def _drop(holds: list[_Hold]) -> None:
@@ -107,16 +192,17 @@ def _drop(holds: list[_Hold]) -> None:
 
 @contextlib.contextmanager
 def scope():
-    """Run one query: what :func:`persist` records inside the block is
-    unpersisted when the block exits, however it exits."""
-    mine = object()
+    """Run one query: what it makes inside the block is released when
+    the block exits, however it exits."""
+    mine = _Scope()
+    with _lock:
+        _open.add(mine)
     token = _scope.set(mine)
     try:
         yield
     finally:
         _scope.reset(token)
-        with _lock:
-            _drop([h for h in _held if h.scope is mine])
+        mine.close()
 
 
 def release(df: DataFrame) -> None:
@@ -127,18 +213,37 @@ def release(df: DataFrame) -> None:
 
 
 def release_scratch() -> int:
-    """Release the frames persisted outside any scope; returns how many.
+    """Release what was made outside any scope; returns how many frames.
     Call it only when no unscoped query is in flight."""
+    global _unscoped
     with _lock:
-        holds = [h for h in _held if h.scope is None]
-        _drop(holds)
-    return len(holds)
+        done, _unscoped = _unscoped, _Scope()
+        frames = sum(1 for h in _held if h.scope is done)
+    done.close()
+    return frames
 
 
-def unheld(spark: SparkSession) -> int:
-    """The number of CacheManager entries that no open scope holds:
-    taken under the lock, so no persist or release is half done."""
+def unheld(spark: SparkSession) -> dict[str, int]:
+    """What no open scope holds, by kind: cached relations, temp views,
+    catalog tables, active streams (of any session) and scope
+    directories. Taken under the lock, so no scope is half closed; the
+    views ``spark.sql`` registers for the length of one call are not
+    counted."""
     with _lock:
-        live = {_entry(h.df) for h in _held if h.scope is not None} - {None}
-        cm = spark._jsparkSession.sharedState().cacheManager()
-        return cm.numCachedEntries() - len(live)
+        ids = [s.id for s in _open]
+
+        def free(names) -> int:
+            return sum(1 for n in names if not any(i in (n or "") for i in ids))
+
+        live = {_entry(h.df) for h in _held if h.scope in _open} - {None}
+        jss = spark._jsparkSession
+        shown = [r for r in spark.sql("SHOW TABLES").collect()
+                 if not r.tableName.startswith("_pyspark_")]
+        return {
+            "cached": jss.sharedState().cacheManager().numCachedEntries() - len(live),
+            "views": free(r.tableName for r in shown if r.isTemporary),
+            "tables": free(r.tableName for r in shown if not r.isTemporary),
+            "streams": free(q.name() for q in
+                            jss.sharedState().activeStreamingQueries().values()),
+            "dirs": free(os.listdir(_root) if _root else []),
+        }

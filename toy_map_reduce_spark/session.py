@@ -42,6 +42,9 @@ from typing import NamedTuple
 
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
+from pyspark.sql.session import _monkey_patch_RDD
+
+from toy_map_reduce_spark import scratch
 
 
 def default_parallelism() -> int:
@@ -288,6 +291,47 @@ def _ship_package(spark: SparkSession) -> None:
     _SHIPPED.add(app_id)
 
 
+# Confs every result depends on: timestamps are read and shown in UTC
+# (parquet stores naive micros, DuckDB reads naive), and an events.ts
+# stored as TIMESTAMP(NANOS), which Spark's vectorized reader rejects
+# outright, reads as a raw nanos BIGINT that tables.load converts.
+_PINNED = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
+
+def pin_conf(spark: SparkSession) -> None:
+    """Set the confs every result depends on where ``spark``'s differ: the
+    external driver may hand in a session that get_spark did not build."""
+    for k, v in _PINNED.items():
+        if spark.conf.get(k, None) != v:
+            spark.conf.set(k, v)
+
+
+def streaming_session(spark: SparkSession) -> SparkSession:
+    """A child of ``spark`` for one query's streams; the query's scope
+    stops what still runs in it. The child shares the SparkContext and
+    the cache, carries ``spark``'s runtime SQL conf as it is now and has
+    its own temp views (a memory sink registers one). It plans with 4
+    shuffle partitions and leaves the parent's alone: each stateful
+    partition carries a state store with a fixed set-up cost (a
+    stream-stream join holds four a partition), and the results do not
+    depend on the count."""
+    child = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    _monkey_patch_RDD(spark)  # the constructor pointed RDD.toDF at the child
+    child.conf.set("spark.sql.shuffle.partitions", "4")
+    scratch.on_exit(_stop_streams, child)
+    return child
+
+
+def _stop_streams(child: SparkSession) -> None:
+    for q in child.streams.active:
+        q.stop()
+    # every session's stream listener joins the SparkContext's bus for good
+    child._jsc.sc().removeSparkListener(child._jsparkSession.streams().listenerBus())
+
+
 def get_spark(
     app_name: str = "toy_map_reduce_spark",
     cores: int | None = None,
@@ -300,9 +344,9 @@ def get_spark(
     the Spark default of 200 just fragments tiny datasets; on a real
     cluster AQE coalesces to the right size at runtime anyway.
 
-    ``extra_conf`` lets a measurement harness layer startup-only confs
-    (e.g. scripts/skew_bench.py re-enables the UI for the task-metrics
-    REST API) — remember the FIRST session in a process wins its config.
+    ``extra_conf`` lets a caller layer startup-only confs (perfbench sets
+    the warehouse directory and the heap options) — remember the FIRST
+    session in a process wins its config.
     An ``extra_conf`` that sets ``spark.driver.extraJavaOptions`` replaces
     the class-data-sharing flags, and that JVM runs without the archive.
     """
@@ -329,12 +373,8 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=_PINNED)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # events.ts is TIMESTAMP(NANOS) parquet, which Spark's vectorized
-        # reader rejects outright; read it as raw nanos (BIGINT) and convert
-        # in tables.load_events.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Size file splits to the machine, not to the 128 MB cloud-store
         # default: the sf0.1 tables are single ~2-11 MB parquet files,
         # which the default openCost (4 MiB) slices into only 1-3 input

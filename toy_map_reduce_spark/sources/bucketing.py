@@ -12,35 +12,30 @@ the bucket key.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from toy_map_reduce_spark import scratch
 from toy_map_reduce_spark.registry import register
-from toy_map_reduce_spark.sources.io_ops import _scratch
 from toy_map_reduce_spark.tables import load
 
 N_BUCKETS = 8
 
 
-def _bucketed_table(spark: SparkSession, sf_dir: str, table: str, key: str, select) -> str:
-    """Write `table` bucketed by `key` as an external table (idempotent per
-    sf_dir) and return the catalog name."""
-    tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    name = f"tmr_bkt_{table}_{tag}"
-    path = _scratch(sf_dir, f"bucketed_{table}")
-    if not spark.catalog.tableExists(name):
-        (
-            load(spark, sf_dir, table)
-            .select(*select)
-            .write.bucketBy(N_BUCKETS, key)
-            .sortBy(key)
-            .option("path", path)
-            .mode("overwrite")
-            .saveAsTable(name)
-        )
-    return name
+def _bucketed_table(spark: SparkSession, sf_dir: str, table: str, key: str, select) -> DataFrame:
+    """Write `table` bucketed by `key` as an external table of the query
+    and return the table."""
+    name = scratch.table(spark, f"tmr_bkt_{table}")
+    (
+        load(spark, sf_dir, table)
+        .select(*select)
+        .write.bucketBy(N_BUCKETS, key)
+        .sortBy(key)
+        .option("path", scratch.path(f"bucketed_{table}"))
+        .mode("overwrite")
+        .saveAsTable(name)
+    )
+    return spark.table(name)
 
 
 _JOIN_BUCKETED_ORACLE = """
@@ -58,14 +53,12 @@ GROUP BY l.l_orderkey, o.o_custkey
               "join (and the downstream groupBy on the same key) plans with "
               "zero Exchange — asserted in tests/test_plans.py")
 def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li_t = _bucketed_table(
+    li = _bucketed_table(
         spark, sf_dir, "lineitem", "l_orderkey", ["l_orderkey", "l_extendedprice"]
     )
-    o_t = _bucketed_table(
+    orders = _bucketed_table(
         spark, sf_dir, "orders", "o_orderkey", ["o_orderkey", "o_custkey"]
     )
-    li = spark.table(li_t)
-    orders = spark.table(o_t)
     # merge hint: at test scale AQE would broadcast the small side, which
     # hides exactly the property this operator exists to prove — with the
     # sort-merge path, matching bucket schemes mean NO Exchange anywhere

@@ -10,9 +10,6 @@ format is a ``spark.read``/``df.write`` pair with explicit schemas (never
 ``inferSchema`` on a 100 TB feed) and ``mode("overwrite")`` sinks — the
 reference's append-mode re-run duplication hazard (SURVEY.md §4.3) is
 deliberately NOT reproduced.
-
-Roundtrips write under the repo-local scratch dir (driver may invoke from
-any cwd; nothing outside the repo is touched).
 """
 
 from __future__ import annotations
@@ -23,15 +20,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from toy_map_reduce_spark import scratch
 from toy_map_reduce_spark.registry import register
 from toy_map_reduce_spark.tables import load
-
-SCRATCH = os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
-
-
-def _scratch(sf_dir: str, name: str) -> str:
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(SCRATCH, tag, name)
 
 
 _CSV_ROUNDTRIP_ORACLE = """
@@ -50,7 +41,7 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", F.round("l_extendedprice", 2).alias("price")
     )
-    path = _scratch(sf_dir, "csv_roundtrip")
+    path = scratch.path("csv_roundtrip")
     li.write.mode("overwrite").option("header", "true").csv(path)
     schema = T.StructType(
         [
@@ -81,7 +72,7 @@ def source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", F.round("o_totalprice", 2).alias("price")
     )
-    path = _scratch(sf_dir, "json_roundtrip")
+    path = scratch.path("json_roundtrip")
     orders.write.mode("overwrite").json(path)
     schema = T.StructType(
         [
@@ -114,7 +105,7 @@ def sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", F.round("o_totalprice", 2).alias("price")
     )
-    path = _scratch(sf_dir, "part_parquet")
+    path = scratch.path("part_parquet")
     orders.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
     # explicit schema: a zero-row write leaves no part files to infer from
     back = spark.read.schema(orders.schema).parquet(path)
@@ -146,7 +137,7 @@ def source_kv_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from toy_map_reduce_spark.operators.wordcount import wordcount
 
     wc = wordcount(spark, sf_dir)
-    path = _scratch(sf_dir, "kv_text")
+    path = scratch.path("kv_text")
     wc.select(F.concat_ws(",", "word", "cnt").alias("value")).write.mode(
         "overwrite"
     ).text(path)
@@ -240,7 +231,7 @@ FROM (
               "table relies on")
 def source_parquet_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders")
-    path = _scratch(sf_dir, "merge_schema")
+    path = scratch.path("merge_schema")
     orders.select(
         "o_orderkey", F.round("o_totalprice", 2).alias("price")
     ).write.mode("overwrite").parquet(f"{path}/batch=1")
@@ -290,7 +281,7 @@ def source_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("value")
     )
-    path = _scratch(sf_dir, "csv_malformed")
+    path = scratch.path("csv_malformed")
     corrupted.write.mode("overwrite").text(path)
 
     schema = T.StructType(
@@ -335,8 +326,8 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     to target-size + rewrite. Here repartition(2) stands in for
     repartitioning to ~128 MB targets; the aggregate proves the rewrite
     lost nothing."""
-    frag = _scratch(sf_dir, "compact/frag")
-    tight = _scratch(sf_dir, "compact/tight")
+    frag = scratch.path("compact/frag")
+    tight = scratch.path("compact/tight")
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity", "l_returnflag")
     li.repartition(32).write.mode("overwrite").parquet(frag)
     spark.read.parquet(frag).repartition(COMPACT_TARGET_FILES).write.mode(
@@ -379,7 +370,7 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linestatus", "l_quantity", "l_extendedprice", "l_discount"
     )
-    path = _scratch(sf_dir, "orc_roundtrip")
+    path = scratch.path("orc_roundtrip")
     li.write.mode("overwrite").option("compression", "snappy").orc(path)
     back = spark.read.orc(path)
     return back.groupBy("l_linestatus").agg(
@@ -485,7 +476,7 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
     duplicate). This is also the semantics the reference's append-mode
     FileWriter hazard (SURVEY.md §4.3) needs replaced with at scale."""
     li = load(spark, sf_dir, "lineitem").select("l_returnflag", "l_quantity")
-    path = _scratch(sf_dir, "dyn_overwrite")
+    path = scratch.path("dyn_overwrite")
     li.write.mode("overwrite").partitionBy("l_returnflag").parquet(path)
     patch = (
         li.where(F.col("l_returnflag") == "A")
@@ -524,7 +515,7 @@ def source_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus contains no embedded newlines (pinned by the write below
     staying lossless), so line count equals doc count."""
     docs = load(spark, sf_dir, "documents").select("text")
-    path = _scratch(sf_dir, "text_lines")
+    path = scratch.path("text_lines")
     docs.write.mode("overwrite").text(path)
     back = spark.read.text(path)
     return back.agg(
@@ -563,7 +554,7 @@ def sink_sorted_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_shipdate", "l_extendedprice", "l_discount"
     )
-    path = _scratch(sf_dir, "sorted_clustered")
+    path = scratch.path("sorted_clustered")
     (
         li.repartition(4)
         .sortWithinPartitions("l_shipdate")
@@ -613,7 +604,7 @@ def source_csv_quoted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_mktsegment",
         F.concat(F.col("c_name"), F.lit(',"'), F.col("c_mktsegment"), F.lit('"')).alias("tricky"),
     )
-    path = _scratch(sf_dir, "csv_quoted")
+    path = scratch.path("csv_quoted")
     # explicit nullValue token: without it CSV writes NULL and '' both as
     # an empty field and the read collapses '' to NULL — the one lossy
     # corner of the codec, closed exactly the way a production feed does
@@ -666,7 +657,7 @@ def source_json_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("o_orderkey") % 89 == 7,
                F.substring(good, 1, 20)).otherwise(good).alias("value")
     )
-    path = _scratch(sf_dir, "json_corrupt")
+    path = scratch.path("json_corrupt")
     lines.write.mode("overwrite").text(path)
 
     schema = T.StructType(
@@ -709,7 +700,7 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", F.round("o_totalprice", 2).alias("price")
     )
-    path = _scratch(sf_dir, "xml_roundtrip")
+    path = scratch.path("xml_roundtrip")
     orders.write.mode("overwrite").format("xml").option("rowTag", "order").save(path)
     schema = T.StructType(
         [
@@ -748,19 +739,19 @@ def sink_table_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", F.round("o_totalprice", 2).alias("price")
     )
-    path = _scratch(sf_dir, "catalog_table")
+    tbl = scratch.table(spark, "orders_cataloged")
     (
         orders.write.mode("overwrite")
-        .option("path", path)
+        .option("path", scratch.path("catalog_table"))
         .format("parquet")
-        .saveAsTable("orders_cataloged")
+        .saveAsTable(tbl)
     )
     return spark.sql(
-        """
+        f"""
         SELECT o_orderpriority,
                COUNT(*) AS n,
                round(SUM(price), 2) AS total
-        FROM orders_cataloged
+        FROM {tbl}
         GROUP BY o_orderpriority
         """
     )
@@ -795,22 +786,16 @@ def source_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     recompute length and md5 from the table side. The corpus-setup
     collect is bounded at BINARYFILE_DOCS rows by the pushed-down
     doc_id filter — setup-side only, never the query path."""
-    import os as _os
-
-    from pyspark.sql import functions as F
-
-    from toy_map_reduce_spark.tables import load
-
     docs = (
         load(spark, sf_dir, "documents")
         .where(F.col("doc_id") < BINARYFILE_DOCS)
         .select("doc_id", "text")
         .collect()
     )
-    outdir = _scratch(sf_dir, "binaryfile_corpus")
-    _os.makedirs(outdir, exist_ok=True)
+    outdir = scratch.path("binaryfile_corpus")
+    os.makedirs(outdir, exist_ok=True)
     for r in docs:
-        with open(_os.path.join(outdir, f"doc_{r.doc_id:06d}.bin"), "wb") as fh:
+        with open(os.path.join(outdir, f"doc_{r.doc_id:06d}.bin"), "wb") as fh:
             fh.write(r.text.encode("utf-8"))
     read = (
         spark.read.format("binaryFile")
@@ -850,20 +835,12 @@ def catalog_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (join reordering, broadcast choice, DPP benefit estimates) from
     guesses into measurements — at 100 TB an un-analyzed fact table is
     a wrong-join-order incident waiting to happen. ANALYZE needs a
-    catalog table (not a view), so the fixture is registered once per
-    sf; the DESCRIBE output is parsed back into typed rows."""
-    import os as _os
-
-    from pyspark.sql import functions as F
-
-    from toy_map_reduce_spark.tables import load
-
-    tag = _os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    tbl = f"analyze_orders_{tag}"
-    if not spark.catalog.tableExists(tbl):
-        load(spark, sf_dir, "orders").write.mode("overwrite").option(
-            "path", _scratch(sf_dir, "analyze_orders_tbl")
-        ).saveAsTable(tbl)
+    catalog table (not a view), so the fixture is written as one for
+    the query; the DESCRIBE output is parsed back into typed rows."""
+    tbl = scratch.table(spark, "analyze_orders")
+    load(spark, sf_dir, "orders").write.mode("overwrite").option(
+        "path", scratch.path("analyze_orders_tbl")
+    ).saveAsTable(tbl)
     spark.sql(
         f"ANALYZE TABLE {tbl} COMPUTE STATISTICS FOR COLUMNS o_custkey, o_orderkey"
     )
@@ -944,7 +921,7 @@ def sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         zval = term if zval is None else zval + term
     staged = li.select(x.alias("x"), y.alias("y"), zval.alias("zval"))
 
-    path = _scratch(sf_dir, "zorder")
+    path = scratch.path("zorder")
     (
         staged.repartitionByRange(8, "zval")
         .sortWithinPartitions("zval")

@@ -7,8 +7,12 @@ drop the jar on the classpath and they work unchanged.
 
 from __future__ import annotations
 
+import contextlib
+
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
+from toy_map_reduce_spark import scratch
 from toy_map_reduce_spark.registry import register
 
 
@@ -71,22 +75,12 @@ def write_jdbc(
 _DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
 
 
-def _derby_base(sf_dir: str) -> str:
-    """Per-process Derby database root (r8 verdict task 5): embedded
-    Derby takes an exclusive filesystem lock on its database directory,
-    so a single shared ``.scratch/<sf>/derby`` made pytest and a parity
-    sweep mutually exclusive on one SF dir. Keying the path by pid (or
-    SPARK_GRAFT_DERBY_KEY for a stable override) gives every process its
-    own database — concurrent runs can't collide, and re-runs within one
-    process (same pid, same JVM) still reuse one engine as Derby
-    requires. The per-pid dirs live under the scratch root and go away
-    with it."""
-    import os as _os
-
-    from toy_map_reduce_spark.sources.io_ops import _scratch
-
-    key = _os.environ.get("SPARK_GRAFT_DERBY_KEY", str(_os.getpid()))
-    return _scratch(sf_dir, f"derby_{key}")
+def _shut_down_derby(spark: SparkSession, url: str) -> None:
+    """Close the query's embedded database before its directory goes.
+    Derby reports a clean shutdown as an error (SQLState 08006), and one
+    of a database that never booted (XJ004)."""
+    with contextlib.suppress(Py4JJavaError):
+        spark._jvm.java.sql.DriverManager.getConnection(f"{url};shutdown=true")  # type: ignore[union-attr]
 
 
 def _derby_roundtrip_driver_side(
@@ -199,11 +193,13 @@ def source_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not _jvm_class_exists(spark, _DERBY_DRIVER):
         raise ConnectorUnavailable("JDBC (Derby)", "org.apache.derby:derby:<ver>")
 
-    base = _derby_base(sf_dir)
-    # keep derby.log inside the scratch dir (set once per JVM, before the
-    # engine boots on first connection)
+    base = scratch.path("derby")
+    # keep derby.log out of the working directory (read once per JVM,
+    # when the engine boots on first connection)
     spark._jvm.java.lang.System.setProperty("derby.system.home", base)  # type: ignore[union-attr]
-    url = f"jdbc:derby:{base}/db;create=true"
+    db = f"jdbc:derby:{base}/db"
+    scratch.on_exit(_shut_down_derby, spark, db)
+    url = f"{db};create=true"
 
     nation = load(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"

@@ -27,8 +27,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from toy_map_reduce_spark import scratch
 from toy_map_reduce_spark.registry import register
-from toy_map_reduce_spark.tables import table_path
+from toy_map_reduce_spark.session import pin_conf, streaming_session
+from toy_map_reduce_spark.tables import _read_path, load, table_path
 
 # events.ts parquet physical type per fixture file (see read_events_stream).
 # Keyed on (path, mtime, size) — not path alone — so a fixture regenerated
@@ -51,7 +53,8 @@ def _events_schema(ts_type: T.DataType) -> T.StructType:
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events parquet with a proper event-time column.
+    """readStream over the events parquet with a proper event-time column,
+    in a new streaming session of the query (session.streaming_session).
 
     The events fixture's ``ts`` has shipped both as TIMESTAMP(NANOS)
     (readable only as a raw nanos long) and TIMESTAMP(MICROS) (native
@@ -61,10 +64,8 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    from toy_map_reduce_spark.tables import _read_path
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    pin_conf(spark)
+    spark = streaming_session(spark)
     # the footer sniff costs a ~0.2s batch-read per call and its answer is
     # a property of the fixture FILE, so memoize per path — every S-tier
     # query (× every bench pass) otherwise re-pays it
@@ -91,30 +92,10 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def _sink_name(base: str, sf_dir: str) -> str:
-    """sf-scoped sink/query name, mirroring extras._view: a bare global name
-    would silently serve the SECOND scale factor's data to the first caller
-    if the driver builds the same streaming query for two sf dirs before
-    collecting the first result."""
-    import os
-    import re
-
-    tag = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    return f"{base}_{tag}"
-
-
-def run_to_table(stream_df: DataFrame, base_name: str, output_mode: str, sf_dir: str) -> DataFrame:
+def run_to_table(stream_df: DataFrame, base_name: str, output_mode: str) -> DataFrame:
     """Drive a streaming DataFrame to completion into a memory sink and
-    return the sink table (sink name scoped by scale factor).
-
-    Shuffle partitions are scoped down for the run: each stateful streaming
-    partition carries a state store (RocksDB/HDFS-backed at scale, ~fixed
-    setup cost each), and the partition count is frozen into the checkpoint
-    at query start. 4 stores is right-sized for the bench tier (a
-    stream-stream join holds FOUR stores per partition, so partitions are
-    the multiplier on fixed setup cost); results are
-    partition-count-invariant. (On a real cluster you'd size this to
-    executor count × a small factor, once, at first deployment.)
+    return the sink table, a temp view of the stream's session; the query
+    and its sink are named for the query's scope.
 
     Fixed-cost floor (r7 audit): a bare availableNow COUNT(*) on the same
     source — no windows, no state — costs ~0.5 s warm, i.e. more than
@@ -136,25 +117,16 @@ def run_to_table(stream_df: DataFrame, base_name: str, output_mode: str, sf_dir:
     reused checkpoint re-emits nothing in append mode). So every call
     pays the floor; it is not shaved here.
     """
-    name = _sink_name(base_name, sf_dir)
-    spark = stream_df.sparkSession
-    for q in spark.streams.active:
-        if q.name == name:
-            q.stop()
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        query = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    return spark.table(name)
+    name = scratch.name(base_name)
+    query = (
+        stream_df.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(name)
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination()
+    return stream_df.sparkSession.table(name)
 
 
 _STREAM_TUMBLING_ORACLE = """
@@ -178,7 +150,7 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "5 minutes"), "event_type")
         .agg(F.count(F.lit(1)).alias("cnt"), F.round(F.sum("value"), 2).alias("sum_value"))
     )
-    out = run_to_table(agg, "stream_tumbling_sink", "complete", sf_dir)
+    out = run_to_table(agg, "stream_tumbling_sink", "complete")
     return out.select(
         F.col("window.start").alias("window_start"), "event_type", "cnt", "sum_value"
     )
@@ -211,7 +183,7 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "10 minutes", "5 minutes"), "event_type")
         .agg(F.count(F.lit(1)).alias("cnt"), F.round(F.sum("value"), 2).alias("sum_value"))
     )
-    out = run_to_table(agg, "stream_sliding_sink", "complete", sf_dir)
+    out = run_to_table(agg, "stream_sliding_sink", "complete")
     return out.select(
         F.col("window.start").alias("window_start"), "event_type", "cnt", "sum_value"
     )
@@ -251,7 +223,7 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.session_window("ts", "5 minutes"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    out = run_to_table(agg, "stream_session_sink", "complete", sf_dir)
+    out = run_to_table(agg, "stream_session_sink", "complete")
     return out.select(
         "user_id",
         F.date_trunc("second", F.col("session_window.start")).alias("session_start"),
@@ -274,7 +246,7 @@ def stream_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    return run_to_table(deduped, "stream_dedup_sink", "append", sf_dir)
+    return run_to_table(deduped, "stream_dedup_sink", "append")
 
 
 _STREAM_STREAM_JOIN_ORACLE = """
@@ -310,7 +282,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("v_ts") <= F.col("c_ts")),
         "inner",
     ).select("click_id", "view_id", F.col("c_user").alias("user_id"))
-    return run_to_table(joined, "stream_ss_join_sink", "append", sf_dir)
+    return run_to_table(joined, "stream_ss_join_sink", "append")
 
 
 _STREAM_FOREACHBATCH_ORACLE = """
@@ -328,11 +300,7 @@ GROUP BY event_type
               "the reference's append-mode FileWriter got wrong, SURVEY.md "
               "§4.3); result read back from the sink files")
 def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from toy_map_reduce_spark.sources.io_ops import _scratch
-
-    target = _scratch(sf_dir, "stream_febatch")
+    target = scratch.path("stream_febatch")
     ev = read_events_stream(spark, sf_dir)
     agg = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("cnt"), F.round(F.sum("value"), 2).alias("sum_value")
@@ -343,15 +311,11 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         # observable state), unlike append-mode accumulation
         batch_df.write.mode("overwrite").parquet(target)
 
-    fb_name = _sink_name("stream_febatch_q", sf_dir)
-    for q in spark.streams.active:
-        if q.name == fb_name:
-            q.stop()
     query = (
         agg.writeStream.outputMode("complete")
         .foreachBatch(write_epoch)
-        .queryName(fb_name)
-        .option("checkpointLocation", os.path.join(target + "_ckpt"))
+        .queryName(scratch.name("stream_febatch_q"))
+        .option("checkpointLocation", scratch.path("stream_febatch_ckpt"))
         .trigger(availableNow=True)
         .start()
     )
@@ -403,7 +367,7 @@ def stream_stateful_custom(spark: SparkSession, sf_dir: str) -> DataFrame:
             update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
         )
     )
-    out = run_to_table(result, "stream_stateful_sink", "update", sf_dir)
+    out = run_to_table(result, "stream_stateful_sink", "update")
     # update-mode memory sink keeps every emitted row; the last emit per key
     # is the final state
     from pyspark.sql import Window
@@ -448,29 +412,21 @@ GROUP BY event_type
 def stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The file sink + checkpoint pair is what makes this real: a memory
     sink cannot resume a checkpoint, and without resumption batch 2 would
-    be processed under a fresh (zero) watermark and nothing would drop.
-    Scratch dirs are recreated per call so re-runs are deterministic."""
-    import shutil
-
-    from pyspark.sql import functions as SF
-
-    from toy_map_reduce_spark.sources.io_ops import _scratch
-    from toy_map_reduce_spark.tables import load
-
-    base = _scratch(sf_dir, "late_drop")
+    be processed under a fresh (zero) watermark and nothing would drop."""
+    streams = streaming_session(spark)
+    base = scratch.path("late_drop")
     indir, outdir, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
-    shutil.rmtree(base, ignore_errors=True)
 
     ev = load(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    ev.where(SF.col("event_id") % 2 == 0).coalesce(1).write.mode("append").parquet(indir)
+    ev.where(F.col("event_id") % 2 == 0).coalesce(1).write.mode("append").parquet(indir)
 
     schema = ev.schema
 
     def run_once() -> None:
         stream = (
-            spark.readStream.schema(schema)
+            streams.readStream.schema(schema)
             .parquet(indir)
             .withWatermark("ts", "10 minutes")
             # ts MUST be in the dedup key set: only then does streaming
@@ -484,19 +440,20 @@ def stream_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             .format("parquet")
             .option("path", outdir)
             .option("checkpointLocation", ckpt)
+            .queryName(scratch.name("late_drop"))
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
 
     run_once()  # batch 1: establishes watermark in the checkpoint
-    ev.where(SF.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(indir)
+    ev.where(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(indir)
     run_once()  # batch 2: resumed — late rows dropped
 
     out = spark.read.parquet(outdir)
     return out.groupBy("event_type").agg(
-        SF.count(SF.lit(1)).alias("cnt"),
-        SF.round(SF.sum("value"), 2).alias("sum_value"),
+        F.count(F.lit(1)).alias("cnt"),
+        F.round(F.sum("value"), 2).alias("sum_value"),
     )
 
 
@@ -581,7 +538,7 @@ def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeMode="None",
         )
     )
-    out = run_to_table(result, "stream_tws_sink", "update", sf_dir)
+    out = run_to_table(result, "stream_tws_sink", "update")
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
@@ -615,7 +572,7 @@ def stream_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (which are batching-dependent)."""
     ev = read_events_stream(spark, sf_dir)
     counts = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("cnt"))
-    sink = run_to_table(counts, "stream_update_sink", "update", sf_dir)
+    sink = run_to_table(counts, "stream_update_sink", "update")
     return sink.groupBy("event_type").agg(F.max("cnt").alias("cnt"))
 
 
@@ -640,8 +597,6 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     at scale (each batch sees the dim's current snapshot; no join state
     accumulates). The % 150 key maps synthetic user ids onto the
     customer table's key space."""
-    from toy_map_reduce_spark.tables import load
-
     ev = read_events_stream(spark, sf_dir)
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     joined = ev.join(cust, ev["user_id"] % 150 == cust["c_custkey"])
@@ -649,7 +604,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 2).alias("total_value"),
     )
-    return run_to_table(agg, "stream_static_sink", "complete", sf_dir)
+    return run_to_table(agg, "stream_static_sink", "complete")
 
 
 # Chained-window oracle: 5-min counts rolled up to hours, emitted only
@@ -707,7 +662,7 @@ def stream_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.max("c").alias("max_5min_cnt"), F.sum("c").alias("total_cnt"))
     )
-    out = run_to_table(hourly, "stream_chained_sink", "append", sf_dir)
+    out = run_to_table(hourly, "stream_chained_sink", "append")
     return out.select(
         F.col("hwin.start").alias("window_start"),
         "event_type",

@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from toy_map_reduce_spark.session import pin_conf
+
 TABLES = (
     "region",
     "nation",
@@ -220,10 +222,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    # the external driver supplies its own session; timestamps must be
-    # interpreted as UTC (parquet stores naive micros, DuckDB reads naive)
-    # or every timestamp-bearing query shifts by the host timezone
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    pin_conf(spark)
     path = _read_path(sf_dir, name)
     try:
         st = os.stat(path)
@@ -246,7 +245,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         from pyspark.sql import functions as F
 
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         ev = spark.read.parquet(path)
         ts_type = dict(ev.dtypes)["ts"]
         if ts_type == "bigint":  # TIMESTAMP(NANOS) read as raw nanos long
