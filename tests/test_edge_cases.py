@@ -12,7 +12,16 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.parity import assert_frames_match
+from toy_map_reduce_spark import scratch
 from toy_map_reduce_spark.registry import get_spec
+
+
+@pytest.fixture(autouse=True)
+def _query_scope():
+    """What a test's queries persist is released when the test ends, so no
+    cached frame outlives it (toy_map_reduce_spark/scratch.py)."""
+    with scratch.scope():
+        yield
 
 EDGE_DOCS = [
     (0, "hello"),                       # 1 token — below shingle width
@@ -108,7 +117,6 @@ def test_compaction_actually_reduces_file_count(spark, sf_dir):
     just return correct aggregates."""
     import glob
 
-    from toy_map_reduce_spark import scratch
     from toy_map_reduce_spark.registry import get_spec
     from toy_map_reduce_spark.sources.io_ops import COMPACT_TARGET_FILES
 
@@ -509,7 +517,6 @@ def test_two_scopes_get_two_derby_databases_both_shut_down_and_removed(spark, sf
     its database down and removes it."""
     from py4j.protocol import Py4JJavaError
 
-    from toy_map_reduce_spark import scratch
     from toy_map_reduce_spark.registry import get_spec
     from toy_map_reduce_spark.sources import lakehouse
 
@@ -533,31 +540,86 @@ def test_two_scopes_get_two_derby_databases_both_shut_down_and_removed(spark, sf
             spark._jvm.java.sql.DriverManager.getConnection(f"jdbc:derby:{db}")
         assert err.value.java_exception.getSQLState() == "XJ004"
 
+def test_derby_home_outlives_the_scope_that_set_it(spark, sf_dir):
+    """Derby reads derby.system.home once, when its engine boots, and
+    keeps writing derby.log there; the directory must still exist after
+    the query scope that ran source_jdbc_roundtrip has exited."""
+    from toy_map_reduce_spark.registry import get_spec
+    from toy_map_reduce_spark.sources import lakehouse
+
+    if not lakehouse._jvm_class_exists(spark, lakehouse._DERBY_DRIVER):
+        pytest.skip("derby driver jar absent")
+    with scratch.scope():
+        assert len(get_spec("source_jdbc_roundtrip").builder(spark, sf_dir).collect()) == 5
+    home = spark._jvm.java.lang.System.getProperty("derby.system.home")
+    assert home and os.path.isdir(home), home
+
+
 def test_load_evicts_stale_memo_entries(spark, sf_dir, monkeypatch):
     """Both tables.py memos stay bounded: inserting a relation drops the
-    relations of other applications (a stopped session's handles), and
-    inserting a read path drops the same source's entries under an older
-    (size, mtime_ns) stamp."""
+    relations of sessions of other applications (a stopped session's
+    handles), and inserting a read path drops the same source's entries
+    under an older (size, mtime_ns) stamp."""
     import os
 
     from toy_map_reduce_spark import tables
+
+    class StoppedSession:  # a session of an application that has ended
+        _sc = object()
 
     monkeypatch.delenv("SPARK_GRAFT_LAYOUT_CACHE", raising=False)
     src = tables.table_path(sf_dir, "region")
     s = os.stat(src)
     path = tables._read_path(sf_dir, "region")
     p = os.stat(path)
-    live = (spark.sparkContext.applicationId, path, (p.st_size, p.st_mtime_ns))
+    live = (path, (p.st_size, p.st_mtime_ns))
     # force both inserts, with a stale key seeded beside each
-    tables._RELATION_CACHE.pop(live, None)
+    tables._RELATION_CACHE.get(spark, {}).pop(live, None)
     tables._READ_PATH_MEMO.pop((src, s.st_size, s.st_mtime_ns), None)
-    stale_app = ("app-of-a-stopped-session", path, live[2])
+    stopped = StoppedSession()
     stale_stamp = (src, s.st_size + 1, s.st_mtime_ns - 1)
-    tables._RELATION_CACHE[stale_app] = None
+    tables._RELATION_CACHE[stopped] = {live: None}
     tables._READ_PATH_MEMO[stale_stamp] = src
 
     assert tables.load(spark, sf_dir, "region").count() > 0
-    assert stale_app not in tables._RELATION_CACHE
-    assert live in tables._RELATION_CACHE
+    assert stopped not in tables._RELATION_CACHE
+    assert live in tables._RELATION_CACHE[spark]
     assert stale_stamp not in tables._READ_PATH_MEMO
     assert (src, s.st_size, s.st_mtime_ns) in tables._READ_PATH_MEMO
+
+
+def test_load_binds_relations_to_the_loading_session(spark, sf_dir):
+    """Sessions of one application get relations bound to themselves,
+    with their own conf, whichever session loaded a table first — also
+    when eight of them load at once with a short switch interval."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from toy_map_reduce_spark import tables
+
+    tables.load(spark, sf_dir, "region")  # the parent loads it first
+    sessions = [spark]
+    for n in range(3, 10):
+        child = spark.newSession()
+        child.conf.set("spark.sql.shuffle.partitions", str(n))
+        sessions.append(child)
+
+    def load_all(session) -> list[bool]:
+        want = session.conf.get("spark.sql.shuffle.partitions")
+        out = []
+        for _ in range(3):
+            for name in ("region", "nation", "part"):
+                df = tables.load(session, sf_dir, name)
+                got = df._jdf.sparkSession().conf().get("spark.sql.shuffle.partitions")
+                out.append(df.sparkSession is session and got == want)
+        return out
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(len(sessions)) as pool:
+            results = [f.result(timeout=300) for f in
+                       [pool.submit(load_all, s) for s in sessions]]
+    finally:
+        sys.setswitchinterval(old)
+    assert all(all(r) for r in results), results

@@ -8,8 +8,17 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from toy_map_reduce_spark import scratch
 from toy_map_reduce_spark.registry import get_spec
 from toy_map_reduce_spark.tables import load
+
+
+@pytest.fixture(autouse=True)
+def _query_scope():
+    """What a test's queries persist is released when the test ends, so no
+    cached frame outlives it (toy_map_reduce_spark/scratch.py)."""
+    with scratch.scope():
+        yield
 
 
 def _planted_docs(spark):
@@ -796,12 +805,10 @@ def test_knn_graph_bounded_on_skewed_corpus(spark):
         rows, "vec_id long, label int, e array<double>"
     ).withColumn("nrm", _norm(F.col("e")))
 
-    from toy_map_reduce_spark.plans import explain_str
+    from toy_map_reduce_spark.plans import plan_tree
 
     bounded = knn_graph_blocked(d, cap=16)
-    plan = explain_str(bounded, "formatted")
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    assert not plan_tree(bounded).has("CartesianProduct", "BroadcastNestedLoopJoin")
 
     got = {(r.src, r.rnk): (r.dst, r.sim) for r in bounded.collect()}
     want = {

@@ -570,14 +570,15 @@ def meta_plan_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan and diff its scale-critical properties against the expected
     shape, catching silent regressions (a lost broadcast after a stats
     change, a new exchange after a refactor) before they cost a cluster-
-    day. Uses the same extractor as tests/test_plans.py, so the pinned
-    properties and the reported ones cannot drift apart."""
-    from toy_map_reduce_spark.plans import plan_properties
+    day. Reads the same plan tree as tests/test_plans.py, so the pinned
+    properties and the reported ones cannot drift apart; each operator
+    is counted once."""
+    from toy_map_reduce_spark.plans import plan_properties, plan_tree
     from toy_map_reduce_spark.registry import get_spec
 
     rows = []
     for name in _PLAN_REPORT_QUERIES:
-        p = plan_properties(get_spec(name).builder(spark, sf_dir))
+        p = plan_properties(plan_tree(get_spec(name).builder(spark, sf_dir)))
         rows.append(
             (
                 name,

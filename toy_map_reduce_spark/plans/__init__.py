@@ -1,8 +1,9 @@
 from toy_map_reduce_spark.plans.explain import (  # noqa: F401
+    PlanNode,
     build_side_risk,
     explain_str,
     missed_broadcast,
-    parse_plan_tree,
     plan_properties,
+    plan_tree,
     single_partition_sites,
 )

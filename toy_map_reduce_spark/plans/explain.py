@@ -1,106 +1,196 @@
-"""Plan inspection helpers — the engine's replacement for hand-checking
-``.explain()`` output. Used by tests/test_plans.py to pin the physical-plan
-properties that matter at 100 TB (pruning, pushdown, broadcast, partial
-aggregation, top-k).
+"""Plan inspection: one walk of Spark's executed physical plan.
+
+:func:`plan_tree` walks ``df._jdf.queryExecution().executedPlan()`` over
+py4j, once, into a tree of :class:`PlanNode` that holds only the facts the
+checks here and in tests/test_plans.py read: the operator kind, aggregate
+and window keys, project renames, join type and build side, exchange
+partitioning and the tables a file scan reads. The walk reaches every
+operator the query runs, each once:
+
+- through ``AdaptiveSparkPlanExec.executedPlan()`` (it has no children),
+  its current plan, the final one once it has run;
+- through each ``*QueryStageExec.plan()``;
+- from ``InMemoryTableScanExec`` into its relation's cached plan;
+- and through every other node's ``children()`` plus ``subqueries()``.
+
+:func:`explain_str` is kept for reading one node's printed arguments
+(ReadSchema, PushedFilters, PartitionFilters, join key names); no check
+here reads plan structure from text.
 """
 
 from __future__ import annotations
 
-import contextlib
-import io
+import dataclasses
+import os
+import re
 
 from pyspark.sql import DataFrame
 
 
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:
-    """Capture ``df.explain(mode)`` output as a string."""
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain(mode)
-    return buf.getvalue()
+    """The text ``df.explain(mode)`` prints, returned without touching
+    ``sys.stdout`` (safe from concurrent threads)."""
+    qe = df._jdf.queryExecution()
+    return df.sparkSession._jvm.PythonSQLUtils.explainString(qe, mode)
 
 
-def plan_properties(df: DataFrame) -> dict[str, bool | int | list[str]]:
-    """Summarize scale-relevant properties of the physical plan."""
-    plan = explain_str(df)
-    read_schemas = [l.strip() for l in plan.splitlines() if "ReadSchema" in l]
-    pushed = [l.strip() for l in plan.splitlines() if "PushedFilters" in l]
+@dataclasses.dataclass(eq=False)
+class PlanNode:
+    """One physical operator. ``kind`` is its class name without the
+    ``Exec`` suffix (``HashAggregate``, ``ShuffleExchange``,
+    ``FileSourceScan``); ``children`` follow Spark's order (a join's left
+    input first), then the node's subqueries and, for an
+    ``InMemoryTableScan``, the cached plan. The other fields are set only
+    on the kinds named beside them."""
+
+    kind: str
+    children: list[PlanNode] = dataclasses.field(default_factory=list)
+    # aggregate: grouping columns; window: partition columns. Each
+    # (name, exprId): the key itself, then the columns it reads
+    keys: tuple[tuple[str, int], ...] = ()
+    # window: names of the columns it orders by
+    order: tuple[str, ...] = ()
+    # project: (alias exprId, source name, source exprId) of each
+    # ``col AS alias`` whose source is a bare column
+    renames: tuple[tuple[int, str, int], ...] = ()
+    join_type: str = ""  # join: "Inner", "LeftSemi", "LeftAnti", ...
+    build: str = ""  # hash / nested-loop join: "left" or "right"
+    partitioning: str = ""  # shuffle exchange: "SinglePartition", ...
+    tables: tuple[str, ...] = ()  # file scan: fixture tables it reads
+
+    def walk(self):
+        yield self
+        for c in self.children:
+            yield from c.walk()
+
+    def count(self, *kinds: str) -> int:
+        return sum(1 for n in self.walk() if n.kind in kinds)
+
+    def has(self, *kinds: str) -> bool:
+        return any(n.kind in kinds for n in self.walk())
+
+
+AGGREGATES = ("HashAggregate", "SortAggregate", "ObjectHashAggregate")
+# Nodes that bound output cardinality regardless of what sits below.
+_LIMITS = ("TakeOrderedAndProject", "CollectLimit", "GlobalLimit")
+# The only unbounded leaf: a file scan. LocalTableScan, Range,
+# ReusedExchange and RDD scans are driver literals or references.
+_FILE_SCAN = "FileSourceScan"
+_JOINS = ("BroadcastHashJoin", "BroadcastNestedLoopJoin", "ShuffledHashJoin", "SortMergeJoin")
+
+
+def _seq(s) -> list:
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _name(obj) -> str:
+    return obj.getClass().getSimpleName().rstrip("$")
+
+
+def _columns(expr) -> list[tuple[str, int]]:
+    """(name, exprId) of a named expression, then of each column it reads."""
+    cols = []
+    if _name(expr) in ("AttributeReference", "Alias"):
+        cols.append((expr.name(), expr.exprId().id()))
+    cols += [(a.name(), a.exprId().id()) for a in _seq(expr.references().toSeq())]
+    return list(dict.fromkeys(cols))
+
+
+_TABLE_FILE_RE = re.compile(r"([A-Za-z_][A-Za-z0-9_]*?)(?:_\d+_\d+_\d+)?\.parquet")
+
+
+def _fixture_table(path: str) -> str | None:
+    """The fixture table a scan root reads: from the raw
+    ``{table}.parquet`` form or the layout cache's
+    ``{table}_{size}_{mtime}_{k}.parquet``; None for any other path."""
+    m = _TABLE_FILE_RE.fullmatch(os.path.basename(path))
+    return m.group(1) if m else None
+
+
+def _node(p) -> PlanNode:
+    kind = _name(p).removesuffix("Exec")
+    n = PlanNode(kind)
+    if kind == "AdaptiveSparkPlan":
+        kids = [p.executedPlan()]
+    elif kind.endswith("QueryStage"):
+        kids = [p.plan()]
+    else:
+        kids = _seq(p.children()) + _seq(p.subqueries())
+        if kind == "InMemoryTableScan":
+            kids.append(p.relation().cachedPlan())
+    if kind in AGGREGATES:
+        n.keys = tuple(c for e in _seq(p.groupingExpressions()) for c in _columns(e))
+    elif kind == "Window":
+        n.keys = tuple(c for e in _seq(p.partitionSpec()) for c in _columns(e))
+        n.order = tuple(c for o in _seq(p.orderSpec()) for c, _ in _columns(o.child()))
+    elif kind == "Project":
+        n.renames = tuple(
+            (e.exprId().id(), e.child().name(), e.child().exprId().id())
+            for e in _seq(p.projectList())
+            if _name(e) == "Alias" and _name(e.child()) == "AttributeReference"
+        )
+    elif kind == "ShuffleExchange":
+        n.partitioning = _name(p.outputPartitioning())
+    elif kind == _FILE_SCAN:
+        roots = [_fixture_table(r.toString()) for r in _seq(p.relation().location().rootPaths())]
+        n.tables = tuple(t for t in roots if t)
+    elif kind in _JOINS:
+        n.join_type = _name(p.joinType())
+        if kind != "SortMergeJoin":
+            n.build = _name(p.buildSide()).removeprefix("Build").lower()
+    n.children = [_node(k) for k in kids]
+    return n
+
+
+def plan_tree(df: DataFrame) -> PlanNode:
+    """The executed physical plan of ``df`` as a :class:`PlanNode` tree."""
+    return _node(df._jdf.queryExecution().executedPlan())
+
+
+def plan_properties(tree: PlanNode) -> dict[str, bool | int]:
+    """Scale-relevant operator facts of one plan tree."""
     return {
-        "broadcast_join": "BroadcastHashJoin" in plan,
-        "sort_merge_join": "SortMergeJoin" in plan,
-        "topk": "TakeOrderedAndProject" in plan,
-        "hash_aggregates": plan.count("HashAggregate"),
-        "exchanges": plan.count("Exchange"),
-        "read_schemas": read_schemas,
-        "pushed_filters": pushed,
-        "has_cartesian": "CartesianProduct" in plan,
-        "python_udf": "BatchEvalPython" in plan or "ArrowEvalPython" in plan,
+        "broadcast_join": tree.has("BroadcastHashJoin"),
+        "sort_merge_join": tree.has("SortMergeJoin"),
+        "topk": tree.has("TakeOrderedAndProject"),
+        "hash_aggregates": tree.count("HashAggregate", "ObjectHashAggregate"),
+        "exchanges": tree.count("ShuffleExchange", "BroadcastExchange"),
+        "has_cartesian": tree.has("CartesianProduct"),
+        "python_udf": tree.has("BatchEvalPython", "ArrowEvalPython"),
     }
 
 
-def single_partition_sites(plan: str) -> list[dict]:
-    """Classify every ``Exchange SinglePartition`` in a simple-mode plan.
+def single_partition_sites(tree: PlanNode) -> list[dict]:
+    """Classify every single-partition shuffle exchange in a plan.
 
-    A single-partition exchange funnels its entire input through ONE task —
-    the canonical scale-killer when fed by raw corpus rows (the shape
-    functions/ranks.py exists to eliminate), but perfectly fine when an
+    A single-partition exchange funnels its entire input through ONE
+    task: the canonical scale-killer when fed by raw corpus rows (the
+    shape functions/ranks.py exists to eliminate), but fine when an
     aggregate below it bounds the rows crossing the wire to the group-key
     cardinality (one-row bounds tables, per-pid offset tables, final
     global summaries). ``raw_corpus_risk`` marks the former: a file scan
-    in the exchange's subtree with NO intervening aggregate.
+    in the exchange's subtree with NO aggregate anywhere in it.
 
-    KNOWN FALSE-NEGATIVE CLASS (r6 advisor): "aggregate below" is treated
-    as cardinality-bounding, but an aggregate whose GROUP KEYS are
-    corpus-grain (word, doc_id, custkey, ...) bounds nothing — e.g. the
-    pre-fix text_zipf_slope shape (a row_number window over the full
-    vocabulary aggregate) classifies as benign under ``raw_corpus_risk``.
-    ``corpus_grain_keys`` closes most of that gap (r7): it lists the
-    corpus-grain column names appearing in the BOUNDING aggregate's group
-    keys, UNLESS a TakeOrderedAndProject sits between the aggregate and
-    the exchange (a top-k bounds the rows regardless of key grain).
-    r8 hardening: group keys are resolved through ``AS`` alias chains by
-    expression id (``custkey#1 AS ck#9`` can't slip the check under a
-    rename), and the TakeOrdered exemption only applies on the
-    exchange's DIRECT child chain — a top-k in a sibling join branch
-    bounds that branch, not the rows crossing this exchange.
-    r9: the classifier walks a REAL indentation-parsed plan tree
-    (``parse_plan_tree``) instead of the old flat pre-order fallback, so
-    boundedness is judged per join branch: a branch's aggregate or top-k
-    bounds only that branch, and a branch that reaches a file scan with
-    no bounding node at all marks the site ``<unbounded-branch>`` in
-    ``corpus_grain_keys`` — the shape the r8 verdict called out, where a
-    sibling branch's bounded aggregate used to camouflage a raw branch.
-    scripts/plan_audit.py reports both fields; the CI pin keeps BOTH the
-    ``raw_corpus_risk`` set and the ``corpus_grain_keys`` site set
-    strictly empty (tests/test_plans.py — there is no allowlist; a new
-    site must be rewritten or the pin fails).
-
-    Used by scripts/plan_audit.py (human triage over the full registry)
-    and tests/test_plans.py (CI pin: the risky set stays empty).
+    An aggregate whose GROUP KEYS are corpus-grain (word, doc_id,
+    custkey, ...) bounds nothing, so ``corpus_grain_keys`` lists the
+    corpus-grain columns in the keys of the aggregates that actually
+    bound the exchange's input (see :func:`_corpus_grain_keys`), and
+    ``<unbounded-branch>`` when some join branch reaches a file scan with
+    no bound of its own. tests/test_plans.py keeps both the
+    ``raw_corpus_risk`` set and the ``corpus_grain_keys`` set empty
+    registry-wide; there is no allowlist.
     """
-    lines = plan.splitlines()
     sites: list[dict] = []
-    for i, line in enumerate(lines):
-        if "Exchange SinglePartition" not in line:
+    for n in tree.walk():
+        if n.kind != "ShuffleExchange" or n.partitioning != "SinglePartition":
             continue
-        indent = len(line) - len(line.lstrip(" +-:*("))
-        subtree: list[str] = []
-        for nxt in lines[i + 1:]:
-            nind = len(nxt) - len(nxt.lstrip(" +-:*("))
-            if nxt.strip() and nind <= indent:
-                break
-            subtree.append(nxt)
-        sub = "\n".join(subtree)
-        scan = "Scan parquet" in sub or "FileScan" in sub or "Scan csv" in sub \
-            or "Scan json" in sub or "Scan text" in sub
-        agg = bool(_re.search(r"HashAggregate|SortAggregate|ObjectHashAggregate", sub))
+        (child,) = n.children
+        scan, agg = child.has(_FILE_SCAN), child.has(*AGGREGATES)
         sites.append({
-            "line": line.strip(),
             "feeds_from_scan": scan,
             "aggregated_below": agg,
             "raw_corpus_risk": scan and not agg,
-            "corpus_grain_keys": _corpus_grain_keys(subtree) if (scan and agg) else [],
-            "subtree_head": [l.strip() for l in subtree[:6]],
+            "corpus_grain_keys": _corpus_grain_keys(child) if scan and agg else [],
         })
     return sites
 
@@ -116,100 +206,15 @@ _CORPUS_GRAIN_COLS = frozenset({
 })
 
 
-import re as _re
-
-_AGG_KEYS_RE = _re.compile(r"(?:Hash|Sort|ObjectHash)Aggregate\(keys=\[([^\]]*)\]")
-_ALIAS_RE = _re.compile(r"(\w+)#(\d+)[A-Za-z]*\s+AS\s+(\w+)#(\d+)")
-_COL_RE = _re.compile(r"(\w+)#(\d+)")
-_MARKER_RE = _re.compile(r"^([ :|]*)[+:]-\s?(.*)$")
-
-# Physical-plan substrings that mark a node as a corpus file scan (the
-# only unbounded leaves — LocalTableScan / Range / ReusedExchange /
-# OneRowRelation are driver literals or references, never the corpus).
-_SCAN_MARKS = (
-    "FileScan", "Scan parquet", "Scan csv", "Scan json", "Scan text",
-    "Scan orc",
-)
-# Nodes that bound output cardinality regardless of what sits below.
-_LIMIT_MARKS = ("TakeOrderedAndProject", "CollectLimit", "GlobalLimit")
-
-
-class PlanNode:
-    """One physical-plan operator parsed out of ``df.explain("simple")``
-    text. ``children`` follow explain's print order (a join's left/probe
-    input first). Built by :func:`parse_plan_tree`."""
-
-    __slots__ = ("text", "children")
-
-    def __init__(self, text: str) -> None:
-        self.text = text
-        self.children: list[PlanNode] = []
-
-    def walk(self):
-        yield self
-        for c in self.children:
-            yield from c.walk()
-
-    def __repr__(self) -> str:  # debugging aid only
-        return f"PlanNode({self.text[:60]!r}, kids={len(self.children)})"
-
-
-def parse_plan_tree(lines: list[str] | str) -> list[PlanNode]:
-    """Parse explain text into a forest by indentation.
-
-    Spark prints each child at +3 columns behind a ``+-`` (single/last
-    child) or ``:-`` (non-last join input) marker, with ``:`` rails in
-    the leading columns; cached plans inside ``InMemoryRelation`` embed a
-    whole nested plan (including bare ``== Final Plan ==`` /
-    ``ResultQueryStage`` lines with no marker) at deeper indentation.
-    Depth is therefore derived purely from column position — marker
-    lines at ``len(prefix)//3 + 1``, bare lines at ``len(ws)//3`` — and
-    each node attaches to the nearest shallower predecessor, which keeps
-    the tree correct across the marker-free embedded sections."""
-    if isinstance(lines, str):
-        lines = lines.splitlines()
-    roots: list[PlanNode] = []
-    stack: list[tuple[int, PlanNode]] = []
-    for raw in lines:
-        if not raw.strip():
-            continue
-        m = _MARKER_RE.match(raw)
-        if m:
-            depth = len(m.group(1)) // 3 + 1
-            text = m.group(2)
-        else:
-            text = raw.strip()
-            depth = (len(raw) - len(raw.lstrip(" :|"))) // 3
-        node = PlanNode(text)
-        while stack and stack[-1][0] >= depth:
-            stack.pop()
-        if stack:
-            stack[-1][1].children.append(node)
-        else:
-            roots.append(node)
-        stack.append((depth, node))
-    return roots
-
-
-def _alias_map(lines: list[str]) -> dict[str, tuple[str, str]]:
-    amap: dict[str, tuple[str, str]] = {}
-    for ln in lines:
-        for m in _ALIAS_RE.finditer(ln):
-            # first writer wins: ids are unique per plan, re-prints of
-            # cached subtrees repeat the same mapping
-            amap.setdefault(m.group(4), (m.group(1), m.group(2)))
-    return amap
-
-
-def _resolve(amap: dict[str, tuple[str, str]], name: str, eid: str) -> str:
-    seen: set[str] = set()
-    while eid in amap and eid not in seen:
+def _resolve(renames: dict[int, tuple[str, int]], name: str, eid: int) -> str:
+    seen: set[int] = set()
+    while eid in renames and eid not in seen:
         seen.add(eid)
-        name, eid = amap[eid]
+        name, eid = renames[eid]
     return name
 
 
-def _branch_bound(node: PlanNode, amap: dict) -> tuple[bool, set[str]]:
+def _branch_bound(node: PlanNode, renames: dict) -> tuple[bool, set[str]]:
     """Is this subtree's output cardinality bounded by something other
     than corpus size, and through which corpus-grain group keys?
 
@@ -217,67 +222,54 @@ def _branch_bound(node: PlanNode, amap: dict) -> tuple[bool, set[str]]:
     node on each branch:
       * top-k / limit  -> bounded, no grain leak;
       * aggregate      -> bounded, leaking its corpus-grain group keys
-        (alias-resolved) — a corpus-grain-keyed aggregate "bounds" to
-        corpus cardinality, which the caller flags;
+        (resolved through renames) — a corpus-grain-keyed aggregate
+        "bounds" to corpus cardinality, which the caller flags;
       * file scan      -> UNBOUNDED (raw corpus reaches this point);
       * other leaf     -> bounded (driver literals, Range, reused refs);
-      * semi/anti join -> output is a subset of the LEFT input, so only
-        the first-printed child bounds it;
+      * semi/anti/existence join -> output is a subset of the LEFT
+        input, so only the left child bounds it;
       * join/union     -> bounded iff EVERY input branch is bounded
         (an inner join's output is as coarse as its coarsest input),
         grain keys unioned across branches.
     """
-    t = node.text
-    if any(b in t for b in _LIMIT_MARKS):
+    if node.kind in _LIMITS:
         return True, set()
-    m = _AGG_KEYS_RE.search(t)
-    if m:
-        names = {
-            _resolve(amap, c.group(1), c.group(2))
-            for c in _COL_RE.finditer(m.group(1))
-        }
+    if node.kind in AGGREGATES:
+        names = {_resolve(renames, name, eid) for name, eid in node.keys}
         return True, names & _CORPUS_GRAIN_COLS
-    if any(s in t for s in _SCAN_MARKS):
+    if node.kind == _FILE_SCAN:
         return False, set()
     kids = node.children
     if not kids:
         return True, set()
-    if len(kids) > 1 and ("LeftSemi" in t or "LeftAnti" in t or "ExistenceJoin" in t):
-        return _branch_bound(kids[0], amap)
+    if len(kids) > 1 and node.join_type in ("LeftSemi", "LeftAnti", "ExistenceJoin"):
+        return _branch_bound(kids[0], renames)
     bounded, keys = True, set()
     for k in kids:
-        b, ks = _branch_bound(k, amap)
+        b, ks = _branch_bound(k, renames)
         bounded = bounded and b
         keys |= ks
     return bounded, keys
 
 
-def _corpus_grain_keys(subtree: list[str]) -> list[str]:
-    """Corpus-grain column names in the group keys actually BOUNDING a
-    single-partition exchange's input — the r6 advisor's false-negative
-    class, computed on the parsed plan tree (r9; the r8 form walked a
-    flat direct-chain + pre-order fallback that could misattribute a
-    sibling join branch's aggregate as the bound).
+def _corpus_grain_keys(root: PlanNode) -> list[str]:
+    """Corpus-grain column names in the group keys BOUNDING the rows that
+    cross a single-partition exchange whose input is ``root``.
 
-    Alias-robust (r7 verdict task 6): every ``src#id AS tgt#id`` in the
-    subtree contributes to an expression-id rename map, and each group
-    key is resolved through that chain back to its root name before the
-    grain check, so ``custkey AS ck`` still classifies as corpus grain.
+    Every project rename below contributes to an exprId map, and each
+    group key is resolved through it back to its source column before
+    the grain check, so ``custkey AS ck`` still counts as corpus grain.
     A TakeOrderedAndProject bounds exactly the branch it sits on: on the
     exchange's direct child chain it exempts the site, in a sibling join
     branch it exempts only that branch. A branch that reaches a file
     scan with NO bounding node returns the sentinel
-    ``<unbounded-branch>`` — raw corpus rows cross the funnel even
-    though some other branch aggregates."""
-    roots = parse_plan_tree(subtree)
-    if not roots:
-        return []
-    amap = _alias_map(subtree if isinstance(subtree, list) else subtree.splitlines())
-    bounded, keys = True, set()
-    for r in roots:
-        b, ks = _branch_bound(r, amap)
-        bounded = bounded and b
-        keys |= ks
+    ``<unbounded-branch>``: raw corpus rows cross the funnel even though
+    some other branch aggregates."""
+    renames: dict[int, tuple[str, int]] = {}
+    for n in root.walk():
+        for eid, src, src_id in n.renames:
+            renames.setdefault(eid, (src, src_id))
+    bounded, keys = _branch_bound(root, renames)
     if not bounded:
         keys.add("<unbounded-branch>")
     return sorted(keys)
@@ -291,28 +283,14 @@ def _corpus_grain_keys(subtree: list[str]) -> list[str]:
 # threshold question the planner answers from stats, not a plan bug.
 _ALWAYS_SMALL_DIMS = frozenset({"region", "nation"})
 
-_SCAN_TABLE_RE = _re.compile(r"([A-Za-z_][A-Za-z0-9_]*?)(?:_\d+_\d+_\d+)?\.parquet")
 
-
-def _scan_tables(node: PlanNode) -> set[str]:
-    """Fixture-table names scanned anywhere in this subtree, parsed from
-    FileScan location paths (both the raw ``{table}.parquet`` fixture
-    form and the layout cache's ``{table}_{size}_{mtime}_{k}.parquet``)."""
-    out: set[str] = set()
-    for n in node.walk():
-        if any(s in n.text for s in _SCAN_MARKS):
-            out.update(m.group(1) for m in _SCAN_TABLE_RE.finditer(n.text))
-    return out
-
-
-def missed_broadcast(plan: str, small_tables: frozenset[str] = _ALWAYS_SMALL_DIMS) -> list[dict]:
+def missed_broadcast(tree: PlanNode, small_tables: frozenset[str] = _ALWAYS_SMALL_DIMS) -> list[dict]:
     """Shuffle joins whose one side only scans always-small dimension
-    tables — the INVERSE of :func:`build_side_risk` (r9 verdict task 4):
-    that audit catches broadcasting the BIG side; this one catches
-    SHUFFLING a side that is bounded at any scale and should have been
-    broadcast. At 100 TB a SortMergeJoin shuffles the fact table on the
-    join key purely to meet a 5-row region table that a broadcast would
-    have met for free at the scan.
+    tables — the inverse of :func:`build_side_risk`: that check catches
+    broadcasting the BIG side; this one catches SHUFFLING a side that is
+    bounded at any scale and should have been broadcast. At 100 TB a
+    SortMergeJoin shuffles the fact table on the join key purely to meet
+    a 5-row region table that a broadcast would have met at the scan.
 
     Signature: a SortMergeJoin / ShuffledHashJoin where one input
     branch's file-scan leaves are all in ``small_tables`` (non-empty) —
@@ -320,32 +298,21 @@ def missed_broadcast(plan: str, small_tables: frozenset[str] = _ALWAYS_SMALL_DIM
     where BOTH sides reach a scaling table (the bucketed lineitem ⋈
     orders merge join, big-big skew joins) are exempt by construction,
     as are branches with no file scan at all (loop-carried frames).
-
-    tests/test_plans.py pins the set empty registry-wide;
-    scripts/plan_audit.py reports it."""
+    tests/test_plans.py pins the set empty registry-wide."""
     risks: list[dict] = []
-    for root in parse_plan_tree(plan):
-        for node in root.walk():
-            t = node.text
-            if "SortMergeJoin" not in t and "ShuffledHashJoin" not in t:
-                continue
-            if len(node.children) != 2:
-                continue
-            for side, child in zip(("left", "right"), node.children):
-                tabs = _scan_tables(child)
-                if tabs and tabs <= small_tables:
-                    risks.append({
-                        "join": t.strip()[:160],
-                        "side": side,
-                        "tables": sorted(tabs),
-                    })
+    for n in tree.walk():
+        if n.kind not in ("SortMergeJoin", "ShuffledHashJoin") or len(n.children) != 2:
+            continue
+        for side, child in zip(("left", "right"), n.children):
+            tabs = {t for d in child.walk() if d.kind == _FILE_SCAN for t in d.tables}
+            if tabs and tabs <= small_tables:
+                risks.append({"join": n.kind, "side": side, "tables": sorted(tabs)})
     return risks
 
 
-def build_side_risk(plan: str) -> list[dict]:
-    """Broadcast joins that hash-build from a persisted CORPUS relation —
-    the r7 graph_bfs_levels bug class, generalized registry-wide (r8
-    verdict task 2).
+def build_side_risk(tree: PlanNode) -> list[dict]:
+    """Broadcast joins that hash-build from a persisted CORPUS relation
+    (the graph_bfs_levels bug class, generalized registry-wide).
 
     Spark costs build-side choice from statistics; a persisted relation
     HAS stats while the tiny loop-carried frame (frontier, visited,
@@ -353,50 +320,32 @@ def build_side_risk(plan: str) -> list[dict]:
     ``BuildLeft`` over the cached corpus and hash-builds millions of rows
     to stream a 1-row table past them — exactly backwards at 100 TB.
     Signature flagged here: a BroadcastHashJoin / BroadcastNestedLoopJoin
-    whose BUILD side reaches an ``InMemoryRelation`` backed by a file
+    whose BUILD side reaches an ``InMemoryTableScan`` backed by a file
     scan with NO bounding node (aggregate / top-k / limit) in between,
-    while the PROBE side touches no file scan at all (if the probe side
-    scans the corpus too, building from a bounded cached side is the
-    normal broadcast-dim pattern and stays exempt — e.g. the GOOD BFS
-    plan broadcasts the persisted frontier over the cached edge scan).
+    inside the cached plan too, while the PROBE side touches no file scan
+    at all (if the probe side scans the corpus too, building from a
+    bounded cached side is the normal broadcast-dim pattern and stays
+    exempt — e.g. the GOOD BFS plan broadcasts the persisted frontier
+    over the cached edge scan).
 
     Returns one record per risky join; tests/test_plans.py pins the set
-    empty across the registry and scripts/plan_audit.py reports it."""
+    empty across the registry."""
 
     def cached_corpus_unbounded(node: PlanNode, in_cache: bool = False) -> bool:
-        # Top-down per-node walk that keeps applying the bounding-node
-        # check INSIDE the cached plan too (r9 advisor): an
-        # InMemoryRelation whose embedded plan aggregates before its scan
-        # (a persisted aggregated frontier) is bounded and exempt — the
-        # old form stopped checking at the cache boundary and flagged it.
-        t = node.text
-        if any(b in t for b in _LIMIT_MARKS) or _AGG_KEYS_RE.search(t):
+        if node.kind in _LIMITS or node.kind in AGGREGATES:
             return False
-        if in_cache and any(s in t for s in _SCAN_MARKS):
+        if in_cache and node.kind == _FILE_SCAN:
             return True
-        in_cache = in_cache or "InMemoryRelation" in t or "InMemoryTableScan" in t
+        in_cache = in_cache or node.kind == "InMemoryTableScan"
         return any(cached_corpus_unbounded(c, in_cache) for c in node.children)
 
-    def has_corpus_scan(node: PlanNode) -> bool:
-        return any(any(s in n.text for s in _SCAN_MARKS) for n in node.walk())
-
     risks: list[dict] = []
-    for root in parse_plan_tree(plan):
-        for node in root.walk():
-            t = node.text
-            if "BroadcastHashJoin" not in t and "BroadcastNestedLoopJoin" not in t:
-                continue
-            if len(node.children) != 2:
-                continue
-            if "BuildLeft" in t:
-                build, probe = node.children
-            elif "BuildRight" in t:
-                probe, build = node.children
-            else:
-                continue
-            if cached_corpus_unbounded(build) and not has_corpus_scan(probe):
-                risks.append({
-                    "join": t.strip()[:160],
-                    "build_head": build.text.strip()[:160],
-                })
+    for n in tree.walk():
+        if n.kind not in ("BroadcastHashJoin", "BroadcastNestedLoopJoin"):
+            continue
+        if len(n.children) != 2 or n.build not in ("left", "right"):
+            continue
+        build, probe = n.children if n.build == "left" else n.children[::-1]
+        if cached_corpus_unbounded(build) and not probe.has(_FILE_SCAN):
+            risks.append({"join": n.kind, "build": n.build, "build_head": build.kind})
     return risks

@@ -7,7 +7,11 @@ drop the jar on the classpath and they work unchanged.
 
 from __future__ import annotations
 
+import atexit
 import contextlib
+import functools
+import shutil
+import tempfile
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
@@ -73,6 +77,16 @@ def write_jdbc(
 
 
 _DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
+
+
+@functools.cache
+def _derby_home() -> str:
+    """``derby.system.home``: Derby reads it once per JVM, when its engine
+    boots, and writes ``derby.log`` there from then on, so it lives as
+    long as the process, not in a query scope."""
+    home = tempfile.mkdtemp(prefix="spark-graft-derby-")
+    atexit.register(shutil.rmtree, home, True)
+    return home
 
 
 def _shut_down_derby(spark: SparkSession, url: str) -> None:
@@ -193,11 +207,9 @@ def source_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not _jvm_class_exists(spark, _DERBY_DRIVER):
         raise ConnectorUnavailable("JDBC (Derby)", "org.apache.derby:derby:<ver>")
 
-    base = scratch.path("derby")
-    # keep derby.log out of the working directory (read once per JVM,
-    # when the engine boots on first connection)
-    spark._jvm.java.lang.System.setProperty("derby.system.home", base)  # type: ignore[union-attr]
-    db = f"jdbc:derby:{base}/db"
+    # keep derby.log out of the working directory
+    spark._jvm.java.lang.System.setProperty("derby.system.home", _derby_home())  # type: ignore[union-attr]
+    db = f"jdbc:derby:{scratch.path('derby')}/db"
     scratch.on_exit(_shut_down_derby, spark, db)
     url = f"{db};create=true"
 

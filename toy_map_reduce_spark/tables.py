@@ -10,6 +10,8 @@ reference's whole-file-per-task model had.
 from __future__ import annotations
 
 import os
+import threading
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -200,13 +202,20 @@ def _read_path(sf_dir: str, name: str) -> str:
 # does this once: Spark's own `spark.table()` path keeps a relation
 # cache keyed on the table identifier, which bare-path `read.parquet`
 # calls forfeit. This dict is that cache for the fixture catalog: the
-# value is the LAZY analyzed DataFrame (an immutable plan handle — no
+# value is the LAZY analyzed relation (an immutable plan handle — no
 # rows, no results; every action still computes from the parquet
-# files), keyed on (application, resolved path, file size+mtime_ns) so
-# a new session, a different sf_dir, a refreshed fixture, or a layout-
-# cache toggle each get a fresh relation. An insert drops the entries of
-# other applications, so the dict holds only the live session's tables.
-_RELATION_CACHE: dict[tuple, DataFrame] = {}
+# files). It is kept per session, so a relation is bound to the session
+# that loads it (its conf and shuffle partitions), and within a session
+# keyed on (resolved path, file size+mtime_ns), so a different sf_dir, a
+# refreshed fixture, or a layout-cache toggle each get a fresh relation.
+# A value holds the JVM Dataset and its column names, not a Python
+# DataFrame, so it does not keep its session alive: a child session's
+# entries go with it. An insert drops the sessions of other applications
+# (their handles point into stopped JVMs).
+_RELATION_CACHE: weakref.WeakKeyDictionary[SparkSession, dict[tuple, tuple]] = (
+    weakref.WeakKeyDictionary()
+)
+_RELATION_LOCK = threading.Lock()  # inserts: concurrent clients share a session
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -229,8 +238,8 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         stamp: tuple | None = (st.st_size, st.st_mtime_ns)
     except OSError:
         stamp = None
-    key = (spark.sparkContext.applicationId, path, stamp)
-    cached = _RELATION_CACHE.get(key)
+    key = (path, stamp)
+    cached = _RELATION_CACHE.get(spark, {}).get(key)
     if cached is not None:
         # toDF(*columns): a zero-cost Project whose aliases mint FRESH
         # output expression ids and a fresh dataset id per call. Handing
@@ -241,7 +250,8 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # alias layer restores that property at ~1% of the cost, and
         # DeduplicateRelations handles the shared underlying relation
         # exactly as it does for any df.join(df) self-join.
-        return cached.toDF(*cached.columns)
+        jdf, columns = cached
+        return DataFrame(jdf, spark).toDF(*columns)
     if name == "events":
         from pyspark.sql import functions as F
 
@@ -255,8 +265,9 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = ev.withColumn("ts", F.col("ts").cast("timestamp"))
     else:
         df = spark.read.parquet(path)
-    # relations of stopped sessions hold py4j handles into dead JVMs
-    for k in [k for k in list(_RELATION_CACHE) if k[0] != key[0]]:
-        _RELATION_CACHE.pop(k, None)
-    _RELATION_CACHE[key] = df
-    return df.toDF(*df.columns)
+    columns = df.columns
+    with _RELATION_LOCK:
+        for other in [s for s in list(_RELATION_CACHE) if s._sc is not spark._sc]:
+            _RELATION_CACHE.pop(other, None)
+        _RELATION_CACHE.setdefault(spark, {})[key] = (df._jdf, columns)
+    return df.toDF(*columns)
