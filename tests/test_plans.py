@@ -831,8 +831,8 @@ def _scan(*tables: str) -> PlanNode:
     return PlanNode("FileSourceScan", tables=tables)
 
 
-def _agg(keys, *kids: PlanNode, kind: str = "HashAggregate") -> PlanNode:
-    return PlanNode(kind, list(kids), keys=tuple(keys))
+def _agg(keys, *kids: PlanNode, kind: str = "HashAggregate", distinct_only=False) -> PlanNode:
+    return PlanNode(kind, list(kids), keys=tuple(keys), distinct_only=distinct_only)
 
 
 def _rename(renames, *kids: PlanNode) -> PlanNode:
@@ -977,6 +977,17 @@ def test_build_side_risk_classifier_parsing():
     )
     assert build_side_risk(agg_in_cache) == []
 
+    # ...except a distinct, which computes no function and bounds
+    # nothing: the distinct edge list is as large as the edge list
+    distinct_in_cache = _join(
+        "BroadcastHashJoin",
+        _one("BroadcastExchange", _one(
+            "InMemoryTableScan", _agg([("k", 3)], _scan(), distinct_only=True),
+        )),
+        PlanNode("LocalTableScan"), build="left",
+    )
+    assert [r["build"] for r in build_side_risk(distinct_in_cache)] == ["left"]
+
     # ...but an UN-cached plain file scan on the build side is not the
     # flagged class either (Spark has real stats for it); only a cached
     # corpus with no bounding node in between is the bug signature
@@ -1071,16 +1082,17 @@ def test_join_classifiers_catch_live_bug_shapes(spark, sf_dir):
 
     from toy_map_reduce_spark.tables import load
 
-    with scratch.scope():
-        edges = scratch.persist(
-            load(spark, sf_dir, "orders").select(
+    # the edge list as is, and as graph_bfs_levels persists it: distinct
+    for distinct in (False, True):
+        with scratch.scope():
+            edges = load(spark, sf_dir, "orders").select(
                 F.col("o_orderkey").alias("src"), F.col("o_custkey").alias("dst")
             )
-        )
-        frontier = spark.createDataFrame([(1,)], "f_node long")
-        bfs = F.broadcast(edges).join(frontier, F.col("src") == F.col("f_node"))
-        risks = build_side_risk(plan_tree(bfs))
-    assert [r["build"] for r in risks] == ["left"], risks
+            edges = scratch.persist(edges.distinct() if distinct else edges)
+            frontier = spark.createDataFrame([(1,)], "f_node long")
+            bfs = F.broadcast(edges).join(frontier, F.col("src") == F.col("f_node"))
+            risks = build_side_risk(plan_tree(bfs))
+        assert [r["build"] for r in risks] == ["left"], (distinct, risks)
 
     customer = load(spark, sf_dir, "customer")
     nation = load(spark, sf_dir, "nation")

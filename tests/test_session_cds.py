@@ -12,6 +12,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import re
 import subprocess
 import sys
 
@@ -157,4 +158,7 @@ def test_real_conf_file_leaves_conf_dir_alone(tmp_path):
     first, _, _ = _session(_env(tmp_path / "cache", SPARK_HOME=str(home)))
     assert first["conf_dir"] is None
     assert not [a for a in first["args"] if "Archive" in a]
-    assert not (tmp_path / "cache" / "spark-graft").exists()
+    # the cache holds the shipped package zip and nothing else: no conf
+    # directory, no archive
+    cache = tmp_path / "cache" / "spark-graft"
+    assert [n for n in os.listdir(cache) if not re.fullmatch(r"pkg_[0-9a-f]{16}\.zip", n)] == []

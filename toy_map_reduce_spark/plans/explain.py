@@ -48,6 +48,9 @@ class PlanNode:
     # aggregate: grouping columns; window: partition columns. Each
     # (name, exprId): the key itself, then the columns it reads
     keys: tuple[tuple[str, int], ...] = ()
+    # aggregate: it computes no aggregate function (a distinct, or one
+    # step of a distinct aggregate's expansion)
+    distinct_only: bool = False
     # window: names of the columns it orders by
     order: tuple[str, ...] = ()
     # project: (alias exprId, source name, source exprId) of each
@@ -120,6 +123,7 @@ def _node(p) -> PlanNode:
             kids.append(p.relation().cachedPlan())
     if kind in AGGREGATES:
         n.keys = tuple(c for e in _seq(p.groupingExpressions()) for c in _columns(e))
+        n.distinct_only = p.aggregateExpressions().isEmpty()
     elif kind == "Window":
         n.keys = tuple(c for e in _seq(p.partitionSpec()) for c in _columns(e))
         n.order = tuple(c for o in _seq(p.orderSpec()) for c, _ in _columns(o.child()))
@@ -326,13 +330,15 @@ def build_side_risk(tree: PlanNode) -> list[dict]:
     at all (if the probe side scans the corpus too, building from a
     bounded cached side is the normal broadcast-dim pattern and stays
     exempt — e.g. the GOOD BFS plan broadcasts the persisted frontier
-    over the cached edge scan).
+    over the cached edge scan). A distinct (an aggregate that computes no
+    function) is not a bound: the distinct edge list is as large as the
+    edge list.
 
     Returns one record per risky join; tests/test_plans.py pins the set
     empty across the registry."""
 
     def cached_corpus_unbounded(node: PlanNode, in_cache: bool = False) -> bool:
-        if node.kind in _LIMITS or node.kind in AGGREGATES:
+        if node.kind in _LIMITS or (node.kind in AGGREGATES and not node.distinct_only):
             return False
         if in_cache and node.kind == _FILE_SCAN:
             return True

@@ -8,6 +8,17 @@ path. Python workers start from ``daemon/graft_daemon.py``, which keeps
 each task from re-reading every zip archive on the worker PYTHONPATH
 (about 0.2 s a task on CPython 3.11).
 
+A session that runs many queries keeps two things between them. RDD and
+SQL Python jobs share one pool of workers: the SQL runners'
+simplified-traceback env var is set for every worker, so it no longer
+splits Spark's pool key, and the first Python UDF job after a warm RDD
+pool took 0.6-0.8 s instead of 1.9-2.5 s (two sessions each, 4 cores).
+Spark's cache of generated classes holds 8192 instead of 100, more than
+one pass over the whole registry compiles (4258 at sf0.001): a warm
+round of perfbench interactive_mix's queries recompiled about 380
+classes with the default and now compiles 0-16, and the workload's
+queries_per_s rose from 4.0 to 5.3 (medians of ten seeds, 4 cores).
+
 The driver JVM maps Spark's classes from an AppCDS (application
 class-data sharing) archive instead of parsing and verifying them from the
 287 jars on every start. There is one archive per JDK + Spark install, in
@@ -239,24 +250,16 @@ _SHIPPED: set[str] = set()  # application ids the package zip was added to
 def _ship_package(spark: SparkSession) -> None:
     """Ship this package to executor Python workers via ``addPyFile``.
 
-    local[N] hides a whole bug class: driver and executors share one
-    process, so executor-side Python workers inherit the driver's
-    sys.path and any ``from toy_map_reduce_spark...`` import inside a UDF
-    resolves by accident. On real executor processes (local-cluster, a
-    real cluster) nothing ships the package, and every deferred in-UDF
-    import dies with ModuleNotFoundError — exactly what the r12
-    full-registry local-cluster sweep caught on the multimodal codec
-    family. The fix is the canonical deployment pattern (spark-submit
-    --py-files): zip the package once (cached under .layout_cache/) and
-    addPyFile it at session build, so the code travels with the job no
-    matter where the worker runs.
+    Under local[N], driver and executors share one process and workers
+    inherit the driver's sys.path, so an import inside a UDF resolves
+    by accident; on real executor processes (local-cluster, a cluster)
+    nothing ships the package. So the package is zipped once, as
+    spark-submit --py-files would ship it, into ``_cache_dir()`` and
+    added to every session.
 
-    The cache key is a digest over every file's (relpath, size,
-    mtime_ns): max(mtime) truncated to seconds (the old key) reused a
-    stale zip for two edits landing in the same second and never changed
-    at all when a file was deleted — executors silently running
-    different code than the driver, falsifying the local-cluster parity
-    gate this exists to serve.
+    The zip's name is a digest over every file's (relpath, size,
+    mtime_ns), so an edit, a deleted file or two edits within one second
+    give a new zip, and executors never run other code than the driver.
     """
     sc = spark.sparkContext
     app_id = sc.applicationId
@@ -279,7 +282,7 @@ def _ship_package(spark: SparkSession) -> None:
                 digest.update(
                     f"{os.path.relpath(p, root)}\0{st.st_size}\0{st.st_mtime_ns}\n".encode()
                 )
-    out = os.path.join(root, ".layout_cache", f"pkg_{digest.hexdigest()[:16]}.zip")
+    out = os.path.join(_cache_dir(), f"pkg_{digest.hexdigest()[:16]}.zip")
     if not os.path.exists(out):
         os.makedirs(os.path.dirname(out), exist_ok=True)
         tmp = f"{out}.tmp{os.getpid()}"
@@ -396,6 +399,27 @@ def get_spark(
         # from sys.path, so the engine comes from _ship_package's zip.
         .config("spark.python.daemon.module", "graft_daemon")
         .config("spark.executorEnv.PYTHONPATH", _DAEMON_DIR)
+        # Spark keeps one worker pool per (python, worker module, daemon
+        # module, env vars). The SQL runners (Python and pandas UDFs,
+        # mapInPandas, UDTFs) add SPARK_SIMPLIFIED_TRACEBACK=1 to the env
+        # vars, as spark.sql.execution.pyspark.udf.simplifiedTraceback
+        # .enabled is on by default, and PythonRDD does not; with it set
+        # here both paths share one pool, so the first SQL Python job
+        # after an RDD job boots no second set of workers.
+        .config("spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK", "1")
+        # Spark's JVM-wide cache of generated classes holds 100 by
+        # default. One round of perfbench interactive_mix compiles about
+        # 400 distinct classes, so in a session that repeats its queries
+        # the LRU evicts each class before its next use: on one client,
+        # four rounds compiled 409, 373, 377 and 379 classes with the
+        # default and 387, 16, 0 and 4 with this cap, and a warm round
+        # took 11.7-13.1 s instead of 15.5-16.0 s. One pass over every
+        # registry query at sf0.001 compiles 4258 distinct classes, and a
+        # second pass 78 more (code that differs between builds of one
+        # query); the cap holds both with room for the registry to grow.
+        # Kept classes cost memory: over that pass the JVM's peak RSS
+        # rose from 3329 to 3892 MB.
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
         # local mode = one JVM holding driver + every executor thread +
         # the persisted staging tables (shingles, windows, knn vectors),
         # so the heap defaults to half the host's RAM (_default_driver_mem);
