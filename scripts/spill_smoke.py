@@ -1,37 +1,35 @@
 #!/usr/bin/env python
-"""Memory-pressure spill smoke (r10 verdict task 6).
+"""Memory-pressure spill smoke.
 
 A default-sized heap (half the host's RAM) hides spill bugs: at the
 fixture scales nothing ever spills, so external-sort/agg spill paths,
-spill-file cleanup, and result correctness UNDER spill were exercised
-zero times before r11.
+spill-file cleanup, and result correctness UNDER spill go unexercised.
 This smoke starves the engine on purpose:
 
     driver memory 2g (local mode: the one heap everything shares)
     spark.memory.fraction 0.2  (execution+storage ≈ 350 MB total)
     spark.sql.shuffle.partitions 8 (bigger per-task working sets)
 
-then runs a widened selection (r11 verdict task 3 — the r11 smoke
-covered 10 dedup/percentile-heavy queries; the sort-based-shuffle
-families had never executed under pressure):
+then runs
 
     * the heavy-tail queries (HEAVY_TAIL below),
-    * the big-sort shuffle families the first smoke missed —
+    * the big-sort shuffle families (SHUFFLE_FAMILIES below) —
       window_median, window_gaps_islands, sort_limit_offset,
       graph_pagerank, stream_chained_windows (streaming state store
       under a starved heap),
-    * the external driver's full 50-key CORRECTNESS window (first 50
-      registry keys alphabetically — the same selection rule),
+    * the first WINDOW registry keys alphabetically,
 
-over the amplified corpus, asserting (a) completion, (b) oracle parity —
-answers must be IDENTICAL under memory pressure, the whole point of a
-spillable operator — and (c) that pressure actually happened: the REST
-API's per-stage memory/disk spill counters must be nonzero across the
-run, otherwise the smoke silently proved nothing.
+over the amplified corpus, checking each through ``tests/parity.py``'s
+``run_parity`` — (a) completion, (b) oracle parity: answers must be
+IDENTICAL under memory pressure, the whole point of a spillable
+operator, (c) nothing left behind by the query's scope — and (d) that
+pressure actually happened: the REST API's per-stage memory/disk spill
+counters must be nonzero across the run, otherwise the smoke silently
+proved nothing. It is a script, not a test, because it needs a session
+of its own: a 2g heap and a static ``spark.memory.fraction``.
 
 Usage:
     python scripts/spill_smoke.py SPILL.json
-    WINDOW=50 python scripts/spill_smoke.py out.json
 """
 
 from __future__ import annotations
@@ -39,11 +37,11 @@ from __future__ import annotations
 import json
 import os
 import sys
+import time
 import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
-sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "tests"))
 
 # sf0.1 alone never spills a 350 MB pool (first attempt measured 0 bytes
 # spilled — a smoke that proves nothing); the 16x-amplified skewed bench
@@ -55,9 +53,8 @@ SF_DIR = os.path.join(
 )
 
 
-# The ten slowest non-streaming queries in round 9's sf0.1 per-query
-# timings (BENCH_DETAIL_r9.json, since removed; git history keeps it).
-# The gate used to re-derive this list from that file on every run.
+# The ten slowest non-streaming queries in an earlier sf0.1 per-query
+# timing of the whole registry.
 HEAVY_TAIL = [
     "agg_weighted",
     "tokenize_bpe_apply",
@@ -71,8 +68,8 @@ HEAVY_TAIL = [
     "dedup_ngram_jaccard",
 ]
 
-# sort-based-shuffle families added in r12: per-key window sorts, a
-# global order-by, an iterative join loop, and a stateful stream
+# sort-based-shuffle families: per-key window sorts, a global order-by,
+# an iterative join loop, and a stateful stream
 SHUFFLE_FAMILIES = [
     "window_median",
     "window_gaps_islands",
@@ -81,37 +78,30 @@ SHUFFLE_FAMILIES = [
     "stream_chained_windows",
 ]
 
+WINDOW = 50
+
 
 def main() -> int:
     out_path = sys.argv[1] if len(sys.argv) > 1 else "SPILL.json"
-    window = int(os.environ.get("WINDOW", "50"))
 
     os.environ["SPARK_GRAFT_DRIVER_MEM"] = "2g"
 
-    import duckdb
-
-    from parity import canonical_rows, fetch_oracle
-    from toy_map_reduce_spark import scratch
-    from toy_map_reduce_spark.registry import all_specs
-    from toy_map_reduce_spark.session import get_spark
-    from toy_map_reduce_spark.tables import TABLES, table_path
-
     from make_skewed import ensure_skewed_bench
 
-    ensure_skewed_bench()
-    from toy_map_reduce_spark.registry import all_specs as _specs_fn
+    from tests.parity import oracle_db, run_parity
+    from toy_map_reduce_spark.registry import all_specs
+    from toy_map_reduce_spark.session import get_spark
 
-    driver_window = sorted(_specs_fn())[:window]
-    names = list(dict.fromkeys(
-        HEAVY_TAIL + SHUFFLE_FAMILIES + driver_window
-    ))
+    ensure_skewed_bench()
+    specs = all_specs()
+    names = list(dict.fromkeys(HEAVY_TAIL + SHUFFLE_FAMILIES + sorted(specs)[:WINDOW]))
     # 8 cores, not local[32]: a 2g heap at 32 concurrent tasks is
     # 64 MB/task — no production executor runs that ratio, and the
     # unmanaged per-task allocations (spill-merge read-ahead buffers,
     # codegen) OOM the JVM before the managed memory ever spills.
     # 8 cores / 2g mirrors a genuinely starved but production-shaped
-    # executor (the r12 widened run OOMed at 32 threads; the point of
-    # the smoke is parity UNDER spill, not death by thread count).
+    # executor; the point of the smoke is parity UNDER spill, not death
+    # by thread count.
     spark = get_spark(
         "tmr-spill-smoke",
         cores=8,
@@ -127,45 +117,20 @@ def main() -> int:
         f"{spark.sparkContext.applicationId}"
     )
 
-    duck = duckdb.connect()
-    for t in TABLES:
-        duck.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(SF_DIR, t)}')"
-        )
-
-    specs = all_specs()
     report: dict[str, dict] = {}
-    n_pass = n_rows_only = n_fail = 0
-    import time as _time
-
-    for name in names:
-        print(f"spill_smoke: {name} ...", file=sys.stderr, flush=True)
-        _t0 = _time.time()
-        spec = specs[name]
-        rec: dict = {"hash_match": None, "err": None}
-        try:
-            with scratch.scope():
-                sdf = spec.builder(spark, SF_DIR).toPandas()
-            rec["spark_rows"] = int(len(sdf))
-            if spec.oracle is None:
-                rec["err"] = "no_oracle"
-                n_rows_only += 1
-            else:
-                odf = fetch_oracle(duck, spec.oracle)
-                rec["hash_match"] = (
-                    sorted(sdf.columns) == sorted(odf.columns)
-                    and canonical_rows(sdf) == canonical_rows(odf)
-                )
-                if rec["hash_match"]:
-                    n_pass += 1
-                else:
-                    n_fail += 1
-        except Exception as exc:  # noqa: BLE001 — record, don't abort
-            rec["err"] = f"{type(exc).__name__}: {exc}"[:300]
-            n_fail += 1
-        rec["sec"] = round(_time.time() - _t0, 1)
-        report[name] = rec
-    duck.close()
+    with oracle_db(SF_DIR) as duck:
+        for name in names:
+            print(f"spill_smoke: {name} ...", file=sys.stderr, flush=True)
+            t0 = time.time()
+            rec: dict = {"pass": False, "err": None}
+            try:
+                run_parity(spark, duck, specs[name], SF_DIR)
+                rec["pass"] = True
+            except Exception as exc:  # noqa: BLE001 — record, don't abort
+                rec["err"] = f"{type(exc).__name__}: {exc}"[:300]
+            rec["sec"] = round(time.time() - t0, 1)
+            report[name] = rec
+    n_fail = sum(not r["pass"] for r in report.values())
 
     # did anything actually spill? (sum over all completed stages) —
     # fetched defensively: if the starved JVM died mid-run, the parity
@@ -184,8 +149,8 @@ def main() -> int:
         "driver_mem": "2g",
         "memory_fraction": 0.2,
         "queries": names,
-        "oracle_pass": n_pass,
-        "rows_only": n_rows_only,
+        "pass": len(report) - n_fail,
+        "rows_only": sum(specs[n].oracle is None for n in names),
         "fail": n_fail,
         "memory_bytes_spilled": mem_spill,
         "disk_bytes_spilled": disk_spill,

@@ -2,15 +2,14 @@ from __future__ import annotations
 
 import os
 
-import duckdb
 import pytest
 
+from tests.parity import oracle_db
 from toy_map_reduce_spark.session import get_spark
-from toy_map_reduce_spark.tables import TABLES, table_path
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
-# Plan-perturbation knob (r9 verdict task 2): comma-separated k=v session
+# Plan-perturbation knob: comma-separated k=v session
 # confs applied to the test session, e.g.
 #   SPARK_GRAFT_TEST_CONF="spark.sql.autoBroadcastJoinThreshold=-1"
 # lets scripts/parity_gate.sh re-run the full parity sweep under a forced
@@ -36,10 +35,5 @@ def sf_dir() -> str:
 
 @pytest.fixture(scope="session")
 def duck(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')"
-        )
-    yield con
-    con.close()
+    with oracle_db(sf_dir) as con:
+        yield con

@@ -17,6 +17,19 @@ from datetime import date, datetime
 import pandas as pd
 
 
+def oracle_db(sf_dir: str):
+    """A DuckDB connection with one view per fixture table, each reading
+    that table's parquet file under ``sf_dir``: what every oracle runs on."""
+    import duckdb
+
+    from toy_map_reduce_spark.tables import TABLES, table_path
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')")
+    return con
+
+
 def fetch_oracle(duck, sql: str) -> pd.DataFrame:
     """Run oracle SQL and fetch WITHOUT pandas' int64->float64 NULL
     coercion: a BIGINT column containing one NULL silently becomes

@@ -1,4 +1,4 @@
-"""Degenerate-input totality sweep (r9 verdict task 3).
+"""Degenerate-input totality sweep and oracle stability.
 
 Every oracle-backed query must agree with its DuckDB twin — and every
 rows-only query must at least RUN — on three pathological fixture dirs
@@ -16,39 +16,28 @@ rows-only query must at least RUN — on three pathological fixture dirs
           FIRST vs DuckDB NULLS LAST), concat/split/hash NULL semantics,
           struct comparison with NULL members.
 
-The r10 sweep found and fixed ~90 such divergences (try_divide adoption,
-NULL-ordering pins, empty-input row-cardinality contracts, NULL-aware
-UDF batches); this suite is the tripwire that keeps the whole class
-closed. All fixes are no-ops at real scale — the standard parity gates
-pin that separately.
-
-The file is in the sweep tier (pytest.ini deselects it by default): run
-it with ``-m sweep``, e.g. ``python -m pytest tests/test_degenerate.py -m
-sweep``. Without the flag pytest collects 0 tests and exits 5.
+The parity and stability tests are in the sweep tier (pytest.ini
+deselects them by default): run them with ``-m sweep``, e.g. ``python -m
+pytest tests/test_degenerate.py -m sweep``. The NULL-day lint runs in
+the default tier.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
-import duckdb
 import pytest
 
-from tests.parity import run_parity
+from tests.parity import canonical_rows, fetch_oracle, oracle_db, run_parity
 from toy_map_reduce_spark.registry import all_specs
-from toy_map_reduce_spark.tables import TABLES, table_path
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts"))
 
-# sweep tier (r14): 414 queries x 3 variants + 399 oracle-stability
-# repeats — deselected from the default run (pytest.ini), executed by
-# scripts/handoff_gate.sh gate 1b; the same degenerate dirs are also
-# swept 30x by handoff gate 4 (scripts/oracle_stability.py).
-pytestmark = pytest.mark.sweep
-
 SPECS = all_specs()
 VARIANTS = ("empty", "one", "edge")
+ORACLE_NAMES = sorted(n for n, s in SPECS.items() if s.oracle is not None)
 
 
 @pytest.fixture(scope="session")
@@ -60,20 +49,13 @@ def degen_root() -> str:
 
 @pytest.fixture(scope="session")
 def degen_ducks(degen_root):
-    cons = {}
-    for variant in VARIANTS:
-        con = duckdb.connect()
-        d = os.path.join(degen_root, variant)
-        for t in TABLES:
-            con.sql(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(d, t)}')"
-            )
-        cons[variant] = con
+    cons = {v: oracle_db(os.path.join(degen_root, v)) for v in VARIANTS}
     yield cons
     for con in cons.values():
         con.close()
 
 
+@pytest.mark.sweep
 @pytest.mark.parametrize("variant", VARIANTS)
 @pytest.mark.parametrize("name", sorted(SPECS), ids=sorted(SPECS))
 def test_degenerate_parity(spark, degen_root, degen_ducks, variant, name):
@@ -82,30 +64,67 @@ def test_degenerate_parity(spark, degen_root, degen_ducks, variant, name):
     )
 
 
-# --- oracle-evaluation stability (r10 verdict task 1/2) ---------------
-# A parity gate is only as trustworthy as its oracle: r10's edge-dir
-# "0 fail" was a coin flip because DuckDB 1.0 evaluates sorts with NULL
-# keys nondeterministically (explicit NULLS FIRST/LAST notwithstanding) —
-# five NULL-day-rollup argmax oracles flipped answers 2-13% of runs.
-# Those rollups now filter NULL timestamps on both engines (pinned
-# rule); this test is the tripwire: every oracle must produce ONE
-# canonical result across 20 repeated evaluations on the edge corpus
-# (the only dir with NULL-bearing time/sort columns). Static companion
-# lint + 30x sweep: scripts/oracle_stability.py.
+# --- oracle-evaluation stability ----------------------------------------
+# A parity check is only as trustworthy as its oracle: DuckDB 1.0 can
+# misplace the NULL row of a sort with NULL keys, explicit NULLS
+# FIRST/LAST notwithstanding, and it does so on some runs and not on
+# others. Five NULL-day-rollup argmax oracles once flipped answers in
+# 2-13% of runs on the edge corpus. Every oracle must give ONE canonical
+# result across 30 evaluations per degenerate dir, alternating DuckDB's
+# thread count between the host's cores and 2 to change how a parallel
+# sort splits its work.
 
-ORACLE_NAMES = sorted(n for n, s in SPECS.items() if s.oracle is not None)
+REPEATS = 30
 
 
+@pytest.mark.sweep
+@pytest.mark.parametrize("variant", VARIANTS)
 @pytest.mark.parametrize("name", ORACLE_NAMES, ids=ORACLE_NAMES)
-def test_oracle_stability_edge(degen_root, degen_ducks, name):
-    from tests.parity import canonical_rows, fetch_oracle
-
-    con = degen_ducks["edge"]
+def test_oracle_stability(degen_root, variant, name):
+    max_threads = os.cpu_count() or 8
     sql = SPECS[name].oracle
-    first = canonical_rows(fetch_oracle(con, sql))
-    for rep in range(19):
-        again = canonical_rows(fetch_oracle(con, sql))
-        assert again == first, (
-            f"{name}: oracle nondeterministic on edge corpus "
-            f"(rep {rep + 2} diverged) — NULL sort key reintroduced?"
-        )
+    with oracle_db(os.path.join(degen_root, variant)) as con:
+        seen = set()
+        for rep in range(REPEATS):
+            con.sql(f"SET threads={max_threads if rep % 2 == 0 else 2}")
+            seen.add(tuple(canonical_rows(fetch_oracle(con, sql))))
+    assert len(seen) == 1, (
+        f"{name}: oracle gives {len(seen)} different results in {REPEATS} "
+        f"evaluations on the {variant} corpus — a sort that leaves ties "
+        "or NULL keys to chance?"
+    )
+
+
+# --- NULL-day lint -------------------------------------------------------
+# The shape that flaked: a CTE rolls a nullable timestamp/date up to day
+# grain (date_trunc over ts / o_orderdate, both NULL in the edge corpus),
+# and a window ORDER BY or ORDER BY ... LIMIT then sorts by that day (or
+# by an expression that is NULL on the NULL-day row). Such rollups must
+# filter the NULL timestamp BEFORE grouping (`WHERE ts IS NOT NULL`).
+
+_NULLABLE_SRC = {"ts", "o_orderdate", "l_shipdate", "l_receiptdate", "l_commitdate"}
+_TRUNC_RE = re.compile(r"date_trunc\(\s*'(?:day|month|week|hour)'\s*,\s*(\w+)\s*\)", re.I)
+_SORTED_LATER_RE = re.compile(r"(OVER\s*\(\s*[^)]*ORDER\s+BY|ORDER\s+BY[^;]*?LIMIT\s+\d)", re.I | re.S)
+
+
+def unguarded_null_day_sorts(sql: str) -> list[str]:
+    """The nullable columns ``sql`` truncates to a day-or-coarser grain,
+    then sorts downstream, without ever filtering their NULLs."""
+    cols = {m.group(1) for m in _TRUNC_RE.finditer(sql)} & _NULLABLE_SRC
+    if not cols or not _SORTED_LATER_RE.search(sql):
+        return []
+    return [c for c in sorted(cols) if not re.search(rf"\b{c}\s+IS\s+NOT\s+NULL", sql, re.I)]
+
+
+def test_lint_flags_an_unguarded_null_day_sort():
+    rollup = (
+        "WITH d AS (SELECT date_trunc('day', ts) AS day, COUNT(*) AS n "
+        "FROM events {where} GROUP BY 1) SELECT day FROM d ORDER BY n DESC, day LIMIT 1"
+    )
+    assert unguarded_null_day_sorts(rollup.format(where="")) == ["ts"]
+    assert unguarded_null_day_sorts(rollup.format(where="WHERE ts IS NOT NULL")) == []
+
+
+def test_no_oracle_sorts_an_unguarded_null_day_rollup():
+    hits = {n: c for n in ORACLE_NAMES if (c := unguarded_null_day_sorts(SPECS[n].oracle))}
+    assert not hits, f"oracles sort a NULL-bearing day rollup: {hits}"

@@ -588,6 +588,36 @@ def test_load_evicts_stale_memo_entries(spark, sf_dir, monkeypatch):
     assert (src, s.st_size, s.st_mtime_ns) in tables._READ_PATH_MEMO
 
 
+def test_rechunked_table_lands_in_the_user_cache(tmp_path, monkeypatch):
+    """A one-row-group table that needs re-chunking is rewritten under the
+    per-user cache, not under the checkout."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from toy_map_reduce_spark import session, tables
+
+    monkeypatch.delenv("SPARK_GRAFT_LAYOUT_CACHE", raising=False)
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "cache"))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    # documents re-chunks into one group per 256 rows, up to 8
+    pq.write_table(pa.table({"doc_id": list(range(1024))}), sf / "documents.parquet")
+    path = tables._read_path(str(sf), "documents")
+    assert path.startswith(os.path.join(session._cache_dir(), "layout") + os.sep), path
+    assert pq.ParquetFile(path).metadata.num_row_groups == 4
+
+
+def test_registry_raises_for_a_missing_operator_module(monkeypatch):
+    """A renamed or deleted operator module fails the registry load
+    instead of silently dropping its queries."""
+    from toy_map_reduce_spark import registry
+
+    missing = "toy_map_reduce_spark.operators.no_such_module"
+    monkeypatch.setattr(registry, "_OPERATOR_MODULES", (*registry._OPERATOR_MODULES, missing))
+    with pytest.raises(ModuleNotFoundError, match="no_such_module"):
+        registry.all_specs()
+
+
 def test_load_binds_relations_to_the_loading_session(spark, sf_dir):
     """Sessions of one application get relations bound to themselves,
     with their own conf, whichever session loaded a table first — also

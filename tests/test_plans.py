@@ -1025,7 +1025,7 @@ def test_missed_broadcast_classifier_parsing():
     # the layout-cache path form ({table}_{size}_{mtime}_{k}.parquet)
     # must resolve to the same table name as the raw fixture file
     raw = _fixture_table("file:/data/sf0.001/nation.parquet")
-    cached = _fixture_table("file:/repo/.layout_cache/_data_sf0_001/nation_8192_1755200000_4.parquet")
+    cached = _fixture_table("file:/home/u/.cache/spark-graft/layout/_data_sf0_001/nation_8192_1755200000_4.parquet")
     assert raw == cached == "nation"
     miss_cached = _join("SortMergeJoin", shuffled("customer"), shuffled(cached))
     assert [r["tables"] for r in missed_broadcast(miss_cached)] == [["nation"]]

@@ -24,10 +24,12 @@ from toy_map_reduce_spark.session import _Cds, _archive_key, _promote
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Starts a session and prints its JVM's input arguments, the archives the
-# JVM has mapped, SPARK_CONF_DIR and a query result as one JSON line; the
-# `after` snippet then decides how the process ends.
+# JVM has mapped, SPARK_CONF_DIR, the package zip it shipped and a query
+# result as one JSON line; the `after` snippet then decides how the
+# process ends.
 SESSION = """
 import json, os, sys, time
+from toy_map_reduce_spark import session
 from toy_map_reduce_spark.session import get_spark
 spark = get_spark("cds-test", cores=2)
 sc = spark.sparkContext
@@ -40,6 +42,7 @@ print(json.dumps({"args": args, "mapped": mapped,
                   "conf_dir": os.environ.get("SPARK_CONF_DIR"),
                   "java": sc._jvm.System.getProperty("java.home") + "/bin/java",
                   "classpath": sc._jvm.System.getProperty("java.class.path"),
+                  "pkg": session._package_zip(),
                   "sum": spark.range(10).selectExpr("sum(id)").first()[0]}), flush=True)
 """
 
@@ -158,7 +161,8 @@ def test_real_conf_file_leaves_conf_dir_alone(tmp_path):
     first, _, _ = _session(_env(tmp_path / "cache", SPARK_HOME=str(home)))
     assert first["conf_dir"] is None
     assert not [a for a in first["args"] if "Archive" in a]
-    # the cache holds the shipped package zip and nothing else: no conf
-    # directory, no archive
-    cache = tmp_path / "cache" / "spark-graft"
-    assert [n for n in os.listdir(cache) if not re.fullmatch(r"pkg_[0-9a-f]{16}\.zip", n)] == []
+    # the cache holds nothing: no conf directory, no archive, no package
+    # zip; the zip's own directory went at exit
+    assert _cache_files(tmp_path / "cache", "*") == []
+    assert re.fullmatch(r"pkg_[0-9a-f]+\.zip", os.path.basename(first["pkg"]))
+    assert not os.path.exists(os.path.dirname(first["pkg"]))

@@ -1,4 +1,4 @@
-"""Skewed-corpus parity sweep (r10 verdict task 3).
+"""Skewed-corpus parity sweep.
 
 All committed fixtures are benign-distribution, so the skew machinery
 (salted join/wordcount, AQE skew handling, hot-partition windows) was
@@ -23,18 +23,16 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import pytest
 
-from tests.parity import run_parity
+from tests.parity import oracle_db, run_parity
 from toy_map_reduce_spark.registry import all_specs
-from toy_map_reduce_spark.tables import TABLES, table_path
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts"))
 
-# sweep tier (r14): full registry vs a skew-regenerated corpus —
-# deselected from the default run (pytest.ini), executed by
-# scripts/handoff_gate.sh gate 1b.
+# sweep tier: full registry vs a skew-regenerated corpus — deselected
+# from the default run (pytest.ini), run by scripts/handoff_gate.sh
+# step 1b.
 pytestmark = pytest.mark.sweep
 
 SPECS = all_specs()
@@ -49,13 +47,8 @@ def skew_dir() -> str:
 
 @pytest.fixture(scope="session")
 def skew_duck(skew_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(skew_dir, t)}')"
-        )
-    yield con
-    con.close()
+    with oracle_db(skew_dir) as con:
+        yield con
 
 
 @pytest.mark.parametrize("name", sorted(SPECS), ids=sorted(SPECS))

@@ -108,10 +108,10 @@ def timeseries_forecast_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NULL-timestamp rows are excluded from the time-grain rollup
     BEFORE any ordered step, identically on both engines (pinned
-    rule, r11): a NULL sort key anywhere downstream is evaluated
+    rule): a NULL sort key anywhere downstream is evaluated
     nondeterministically by DuckDB 1.0 even under explicit NULLS
     FIRST/LAST (reproduced ~2-13%% per run on the edge corpus) —
-    see scripts/oracle_stability.py.
+    see tests/test_degenerate.py (oracle stability, NULL-day lint).
     """
     monthly = (
         load(spark, sf_dir, "orders")
@@ -250,10 +250,10 @@ def timeseries_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NULL-timestamp rows are excluded from the time-grain rollup
     BEFORE any ordered step, identically on both engines (pinned
-    rule, r11): a NULL sort key anywhere downstream is evaluated
+    rule): a NULL sort key anywhere downstream is evaluated
     nondeterministically by DuckDB 1.0 even under explicit NULLS
     FIRST/LAST (reproduced ~2-13%% per run on the edge corpus) —
-    see scripts/oracle_stability.py.
+    see tests/test_degenerate.py (oracle stability, NULL-day lint).
     """
     ev = load(spark, sf_dir, "events")
     daily = ev.where(F.col("ts").isNotNull()).groupBy(
@@ -385,10 +385,10 @@ def events_error_budget_slo(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NULL-timestamp rows are excluded from the time-grain rollup
     BEFORE any ordered step, identically on both engines (pinned
-    rule, r11): a NULL sort key anywhere downstream is evaluated
+    rule): a NULL sort key anywhere downstream is evaluated
     nondeterministically by DuckDB 1.0 even under explicit NULLS
     FIRST/LAST (reproduced ~2-13%% per run on the edge corpus) —
-    see scripts/oracle_stability.py.
+    see tests/test_degenerate.py (oracle stability, NULL-day lint).
     """
     ev = load(spark, sf_dir, "events")
     daily = ev.where(F.col("ts").isNotNull()).groupBy(

@@ -278,10 +278,10 @@ def timeseries_lag_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NULL-timestamp rows are excluded from the time-grain rollup
     BEFORE any ordered step, identically on both engines (pinned
-    rule, r11): a NULL sort key anywhere downstream is evaluated
+    rule): a NULL sort key anywhere downstream is evaluated
     nondeterministically by DuckDB 1.0 even under explicit NULLS
     FIRST/LAST (reproduced ~2-13%% per run on the edge corpus) —
-    see scripts/oracle_stability.py.
+    see tests/test_degenerate.py (oracle stability, NULL-day lint).
     """
     ev = load(spark, sf_dir, "events")
     hourly = ev.where(F.col("ts").isNotNull()).groupBy(

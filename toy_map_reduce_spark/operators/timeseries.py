@@ -753,10 +753,10 @@ def timeseries_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NULL-timestamp rows are excluded from the time-grain rollup
     BEFORE any ordered step, identically on both engines (pinned
-    rule, r11): a NULL sort key anywhere downstream is evaluated
+    rule): a NULL sort key anywhere downstream is evaluated
     nondeterministically by DuckDB 1.0 even under explicit NULLS
     FIRST/LAST (reproduced ~2-13%% per run on the edge corpus) —
-    see scripts/oracle_stability.py.
+    see tests/test_degenerate.py (oracle stability, NULL-day lint).
     """
     ev = load(spark, sf_dir, "events")
     daily = ev.where(F.col("ts").isNotNull()).groupBy(
@@ -999,10 +999,10 @@ def timeseries_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NULL-timestamp rows are excluded from the time-grain rollup
     BEFORE any ordered step, identically on both engines (pinned
-    rule, r11): a NULL sort key anywhere downstream is evaluated
+    rule): a NULL sort key anywhere downstream is evaluated
     nondeterministically by DuckDB 1.0 even under explicit NULLS
     FIRST/LAST (reproduced ~2-13%% per run on the edge corpus) —
-    see scripts/oracle_stability.py.
+    see tests/test_degenerate.py (oracle stability, NULL-day lint).
     """
     orders = load(spark, sf_dir, "orders")
     daily = orders.where(F.col("o_orderdate").isNotNull()).groupBy(
@@ -1057,10 +1057,10 @@ def timeseries_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NULL-timestamp rows are excluded from the time-grain rollup
     BEFORE any ordered step, identically on both engines (pinned
-    rule, r11): a NULL sort key anywhere downstream is evaluated
+    rule): a NULL sort key anywhere downstream is evaluated
     nondeterministically by DuckDB 1.0 even under explicit NULLS
     FIRST/LAST (reproduced ~2-13%% per run on the edge corpus) —
-    see scripts/oracle_stability.py.
+    see tests/test_degenerate.py (oracle stability, NULL-day lint).
     """
     ev = load(spark, sf_dir, "events")
     daily = ev.where(F.col("ts").isNotNull()).groupBy(

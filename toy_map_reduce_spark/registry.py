@@ -97,13 +97,7 @@ def register(
 
 def _load_all() -> None:
     for mod in _OPERATOR_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError as exc:
-            # Modules land incrementally across build rounds; only swallow
-            # the "module itself missing" case, not broken imports inside it.
-            if exc.name != mod:
-                raise
+        importlib.import_module(mod)
 
 
 def all_specs() -> dict[str, QuerySpec]:

@@ -43,6 +43,7 @@ from __future__ import annotations
 
 import atexit
 import contextlib
+import functools
 import hashlib
 import os
 import shutil
@@ -247,51 +248,43 @@ _DAEMON_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "daemon")
 _SHIPPED: set[str] = set()  # application ids the package zip was added to
 
 
+@functools.cache
+def _package_zip() -> str:
+    """Zip this package's modules, once per process, into a directory of
+    its own that is removed at interpreter exit (zipping takes about
+    5 ms). Not under ``_cache_dir()``: a zip per process would pile up
+    there."""
+    import zipfile
+
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    root = os.path.dirname(pkg_dir)
+    tmp_dir = tempfile.mkdtemp(prefix="spark-graft-pkg-")
+    atexit.register(shutil.rmtree, tmp_dir, ignore_errors=True)
+    out = os.path.join(tmp_dir, f"pkg_{os.getpid():x}.zip")
+    with zipfile.ZipFile(out, "w") as z:
+        for dirpath, dirs, files in os.walk(pkg_dir):
+            dirs[:] = [d for d in dirs if d != "__pycache__"]
+            for f in sorted(files):
+                if f.endswith(".py"):
+                    p = os.path.join(dirpath, f)
+                    z.write(p, os.path.relpath(p, root))
+    return out
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Ship this package to executor Python workers via ``addPyFile``.
 
     Under local[N], driver and executors share one process and workers
     inherit the driver's sys.path, so an import inside a UDF resolves
     by accident; on real executor processes (local-cluster, a cluster)
-    nothing ships the package. So the package is zipped once, as
-    spark-submit --py-files would ship it, into ``_cache_dir()`` and
-    added to every session.
-
-    The zip's name is a digest over every file's (relpath, size,
-    mtime_ns), so an edit, a deleted file or two edits within one second
-    give a new zip, and executors never run other code than the driver.
+    nothing ships the package. So the package is zipped, as
+    spark-submit --py-files would ship it, and added to every session.
     """
     sc = spark.sparkContext
-    app_id = sc.applicationId
-    if app_id in _SHIPPED:
+    if sc.applicationId in _SHIPPED:
         return
-    import hashlib
-    import zipfile
-
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    root = os.path.dirname(pkg_dir)
-    paths: list[str] = []
-    digest = hashlib.sha256()
-    for dirpath, dirs, files in os.walk(pkg_dir):
-        dirs[:] = [d for d in dirs if d != "__pycache__"]
-        for f in sorted(files):
-            if f.endswith(".py"):
-                p = os.path.join(dirpath, f)
-                paths.append(p)
-                st = os.stat(p)
-                digest.update(
-                    f"{os.path.relpath(p, root)}\0{st.st_size}\0{st.st_mtime_ns}\n".encode()
-                )
-    out = os.path.join(_cache_dir(), f"pkg_{digest.hexdigest()[:16]}.zip")
-    if not os.path.exists(out):
-        os.makedirs(os.path.dirname(out), exist_ok=True)
-        tmp = f"{out}.tmp{os.getpid()}"
-        with zipfile.ZipFile(tmp, "w") as z:
-            for p in paths:
-                z.write(p, os.path.relpath(p, root))
-        os.replace(tmp, out)
-    sc.addPyFile(out)
-    _SHIPPED.add(app_id)
+    sc.addPyFile(_package_zip())
+    _SHIPPED.add(sc.applicationId)
 
 
 # Confs every result depends on: timestamps are read and shown in UTC
@@ -355,11 +348,11 @@ def get_spark(
     """
     cores = cores or default_parallelism()
     shuffle_partitions = shuffle_partitions or cores
-    # SPARK_GRAFT_MASTER overrides the master URL (scripts/
-    # localcluster_smoke.py sets local-cluster[2,4,2048]: real executor
-    # PROCESSES, real serialization boundary — the one execution surface
-    # in-process local[N] threads can't exercise). Default stays
-    # local[cores,2].
+    # SPARK_GRAFT_MASTER overrides the master URL: scripts/handoff_gate.sh
+    # runs the daemon tests and the parity sweep under
+    # local-cluster[2,4,2048], real executor PROCESSES and a real
+    # serialization boundary, which in-process local[N] threads can't
+    # exercise. Default stays local[cores,2].
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cores},2]")
     builder = (
         # local[cores, 2] = maxFailures 2: local mode defaults to
@@ -386,8 +379,7 @@ def get_spark(
         # 16 MiB splits ≈ 6.5M tasks is too many — there you'd RAISE
         # maxPartitionBytes); the point is sizing splits so every core
         # has work, which is exactly what these values do at local scale.
-        .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"))
+        .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.sql.files.openCostInBytes", "65536")
         .config("spark.ui.enabled", "false")
         # Every Python task calls importlib.invalidate_caches(), which on

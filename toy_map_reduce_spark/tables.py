@@ -15,7 +15,7 @@ import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
-from toy_map_reduce_spark.session import pin_conf
+from toy_map_reduce_spark.session import _cache_dir, pin_conf
 
 TABLES = (
     "region",
@@ -41,10 +41,9 @@ DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 # exactly what Delta/Iceberg OPTIMIZE or any bulk-load path does. The
 # rewrite is a byte-faithful pyarrow copy (same schema incl. nano
 # timestamps, same row order, same values — only row-group boundaries
-# added), cached once per source file under the repo's .layout_cache/ and
+# added), cached once per source file under _layout_cache_root() and
 # keyed on (size, mtime, chunking) so a fixture refresh invalidates it.
-# Any failure falls back to the original path. Disable with
-# SPARK_GRAFT_LAYOUT_CACHE=off.
+# Any failure falls back to the original path.
 _ROWS_PER_GROUP_DIVISOR = {
     # heavy-per-row tables (long text / float vectors): far fewer rows
     # per group so downstream explode/vector work parallelizes too.
@@ -115,13 +114,9 @@ def row_count(sf_dir: str, name: str) -> int | None:
 
 
 def _layout_cache_root() -> str:
-    env = os.environ.get("SPARK_GRAFT_LAYOUT_CACHE", "")
-    if env and env != "off":
-        return env
-    return os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        ".layout_cache",
-    )
+    """``$SPARK_GRAFT_LAYOUT_CACHE``, else ``layout`` in the per-user cache
+    next to the class-data-sharing archive, shared by every checkout."""
+    return os.environ.get("SPARK_GRAFT_LAYOUT_CACHE") or os.path.join(_cache_dir(), "layout")
 
 
 _READ_PATH_MEMO: dict[tuple, str] = {}
@@ -137,8 +132,6 @@ def _read_path(sf_dir: str, name: str) -> str:
     fixture changes the stamp and re-decides; the insert drops the
     source's entries under older stamps."""
     src = table_path(sf_dir, name)
-    if os.environ.get("SPARK_GRAFT_LAYOUT_CACHE", "") == "off":
-        return src
     try:
         st0 = os.stat(src)
         memo_key = (src, st0.st_size, st0.st_mtime_ns)
@@ -207,7 +200,7 @@ def _read_path(sf_dir: str, name: str) -> str:
 # files). It is kept per session, so a relation is bound to the session
 # that loads it (its conf and shuffle partitions), and within a session
 # keyed on (resolved path, file size+mtime_ns), so a different sf_dir, a
-# refreshed fixture, or a layout-cache toggle each get a fresh relation.
+# refreshed fixture, or another layout-cache root each get a fresh relation.
 # A value holds the JVM Dataset and its column names, not a Python
 # DataFrame, so it does not keep its session alive: a child session's
 # entries go with it. An insert drops the sessions of other applications
