@@ -474,40 +474,18 @@ def test_bracketed_stats_null_contract(spark):
 
 
 def test_row_count_matches_footer_and_handles_layouts(spark, sf_dir, tmp_path):
-    """tables.row_count must return the exact fixture row count from
-    parquet footers (single-file AND directory layouts) without a Spark
-    job, and degrade to None on junk paths — it sizes range-partition
-    widths, so a wrong count would mis-shape rank shuffles silently."""
+    """tables.row_count must return the exact fixture row count from the
+    parquet footer without a Spark job, and degrade to None on junk paths
+    — it sizes range-partition widths, so a wrong count would mis-shape
+    rank shuffles silently."""
     from toy_map_reduce_spark.tables import load, row_count
 
     n = row_count(sf_dir, "lineitem")
     assert n == load(spark, sf_dir, "lineitem").count()
 
-    # directory-of-part-files layout (how Spark itself writes tables)
-    load(spark, sf_dir, "region").write.mode("overwrite").parquet(
-        str(tmp_path / "region.parquet")
-    )
-    assert row_count(str(tmp_path), "region") == load(
-        spark, sf_dir, "region"
-    ).count()
-
     # junk paths -> None, never an exception
     assert row_count("/nonexistent", "lineitem") is None
     assert row_count(str(tmp_path), "no_such_table") is None
-
-    # a zero-length part file left by an aborted write must not break or
-    # inflate the count (r8 advisor)
-    (tmp_path / "region.parquet" / "part-99999-stale.parquet").touch()
-    assert row_count(str(tmp_path), "region") == load(
-        spark, sf_dir, "region"
-    ).count()
-
-    # hive-partitioned (nested-subdir) layout: the top-level glob finds
-    # no part files -> None, the documented safe fallback
-    load(spark, sf_dir, "region").write.mode("overwrite").partitionBy(
-        "r_regionkey"
-    ).parquet(str(tmp_path / "region_part.parquet"))
-    assert row_count(str(tmp_path), "region_part") is None
 
 
 def test_two_scopes_get_two_derby_databases_both_shut_down_and_removed(spark, sf_dir):
@@ -556,10 +534,11 @@ def test_derby_home_outlives_the_scope_that_set_it(spark, sf_dir):
 
 
 def test_load_evicts_stale_memo_entries(spark, sf_dir, monkeypatch):
-    """Both tables.py memos stay bounded: inserting a relation drops the
+    """Both tables.py caches stay bounded: inserting a relation drops the
     relations of sessions of other applications (a stopped session's
-    handles), and inserting a read path drops the same source's entries
-    under an older (size, mtime_ns) stamp."""
+    handles), and a source file's record under an older (size, mtime_ns)
+    stamp is replaced by the current one, whose key the relation cache
+    uses too."""
     import os
 
     from toy_map_reduce_spark import tables
@@ -570,22 +549,53 @@ def test_load_evicts_stale_memo_entries(spark, sf_dir, monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_LAYOUT_CACHE", raising=False)
     src = tables.table_path(sf_dir, "region")
     s = os.stat(src)
-    path = tables._read_path(sf_dir, "region")
-    p = os.stat(path)
-    live = (path, (p.st_size, p.st_mtime_ns))
-    # force both inserts, with a stale key seeded beside each
+    live = (src, s.st_size, s.st_mtime_ns)
+    # force both inserts, with a stale entry seeded beside each
     tables._RELATION_CACHE.get(spark, {}).pop(live, None)
-    tables._READ_PATH_MEMO.pop((src, s.st_size, s.st_mtime_ns), None)
+    stale = tables._Record((src, s.st_size + 1, s.st_mtime_ns - 1), src, 0)
+    tables._RECORDS[src] = stale
     stopped = StoppedSession()
-    stale_stamp = (src, s.st_size + 1, s.st_mtime_ns - 1)
     tables._RELATION_CACHE[stopped] = {live: None}
-    tables._READ_PATH_MEMO[stale_stamp] = src
 
-    assert tables.load(spark, sf_dir, "region").count() > 0
+    assert tables.load(spark, sf_dir, "region").count() == 5
     assert stopped not in tables._RELATION_CACHE
     assert live in tables._RELATION_CACHE[spark]
-    assert stale_stamp not in tables._READ_PATH_MEMO
-    assert (src, s.st_size, s.st_mtime_ns) in tables._READ_PATH_MEMO
+    assert tables._RECORDS[src].key == live
+    assert tables._RECORDS[src].rows == 5
+
+
+def test_load_stats_one_file(spark, sf_dir, monkeypatch):
+    """A warm load stats the source file once and parses no footer."""
+    import pyarrow.parquet as pq
+
+    from toy_map_reduce_spark import tables
+
+    tables.load(spark, sf_dir, "events")
+    stats, footers = [], []
+    real_stat = os.stat
+    with monkeypatch.context() as m:
+        m.setattr(os, "stat", lambda p, *a, **k: stats.append(p) or real_stat(p, *a, **k))
+        m.setattr(pq, "ParquetFile", lambda *a, **k: footers.append(a))
+        df = tables.load(spark, sf_dir, "events")
+    assert df.count() > 0
+    assert stats == [tables.table_path(sf_dir, "events")]
+    assert footers == []
+
+
+def test_nanos_events_fail_loudly(spark, tmp_path):
+    """An events file that stores ts as TIMESTAMP(NANOS) is refused with
+    Spark's error, never read as wrong values."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from toy_map_reduce_spark.tables import load
+
+    ts = pa.array([datetime.datetime(2024, 1, 1, 12)], pa.timestamp("ns"))
+    pq.write_table(pa.table({"event_id": [1], "ts": ts}), tmp_path / "events.parquet")
+    with pytest.raises(Exception, match=r"Illegal Parquet type: INT64 \(TIMESTAMP\(NANOS"):
+        load(spark, str(tmp_path), "events").collect()
 
 
 def test_rechunked_table_lands_in_the_user_cache(tmp_path, monkeypatch):
@@ -605,6 +615,7 @@ def test_rechunked_table_lands_in_the_user_cache(tmp_path, monkeypatch):
     path = tables._read_path(str(sf), "documents")
     assert path.startswith(os.path.join(session._cache_dir(), "layout") + os.sep), path
     assert pq.ParquetFile(path).metadata.num_row_groups == 4
+    assert tables.fixture_table(path) == "documents"
 
 
 def test_registry_raises_for_a_missing_operator_module(monkeypatch):

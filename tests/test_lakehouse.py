@@ -6,6 +6,11 @@ real instead."""
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
+
 import pytest
 
 from toy_map_reduce_spark.sources import lakehouse
@@ -65,6 +70,43 @@ def test_jdbc_real_roundtrip_via_embedded_derby(spark, sf_dir):
     assert r1 == r2
     assert len(r1) == 5  # TPC-H: 5 regions
     assert sum(n for _, n, _ in r1) == 25  # 25 nations
+
+
+# Runs source_jdbc_roundtrip in a fresh JVM and reports where derby.log
+# went, before the process (and with it the Derby home) goes.
+_DERBY_LOG = """
+import json, os, sys
+from toy_map_reduce_spark import scratch
+from toy_map_reduce_spark.registry import get_spec
+from toy_map_reduce_spark.session import get_spark
+from toy_map_reduce_spark.sources import lakehouse
+spark = get_spark("derby-log-test", cores=1)
+if not lakehouse._jvm_class_exists(spark, lakehouse._DERBY_DRIVER):
+    print(json.dumps(None))
+    sys.exit(0)
+with scratch.scope():
+    n = len(get_spec("source_jdbc_roundtrip").builder(spark, sys.argv[1]).collect())
+home = spark._jvm.java.lang.System.getProperty("derby.system.home")
+print(json.dumps({"n": n, "home_log": os.path.isfile(os.path.join(home, "derby.log")),
+                  "cwd": sorted(os.listdir("."))}))
+"""
+
+
+def test_derby_log_goes_to_the_derby_home_not_the_working_directory(sf_dir, tmp_path):
+    """Probing for Derby's driver must not boot Derby: a booted engine
+    opens derby.log in the working directory before derby.system.home is
+    set, and keeps writing it there."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=root, SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run([sys.executable, "-c", _DERBY_LOG, sf_dir], cwd=tmp_path, env=env,
+                         capture_output=True, text=True, timeout=300)
+    assert out.returncode == 0, out.stderr[-3000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    if got is None:
+        pytest.skip("derby driver jar absent")
+    assert got["n"] == 5
+    assert got["home_log"]
+    assert "derby.log" not in got["cwd"], got["cwd"]
 
 
 def _avro_available(spark) -> bool:

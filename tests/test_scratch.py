@@ -11,6 +11,7 @@ from __future__ import annotations
 import ast
 import os
 import pathlib
+import subprocess
 import sys
 import threading
 import time
@@ -331,3 +332,62 @@ def test_no_conf_set_outside_session():
     sites = [where for where, node in _engine_calls(("set",), "session.py")
              if isinstance(node.func.value, ast.Attribute) and node.func.value.attr == "conf"]
     assert not sites, f".conf.set outside session.py: {sites}"
+
+
+def test_a_fresh_process_removes_the_directories_of_exited_pids(tmp_path):
+    """A process killed before interpreter exit leaves its directory in
+    $TMPDIR; the next process to make its own removes it, and leaves the
+    directory of a pid that still runs alone."""
+    exited = subprocess.Popen([sys.executable, "-c", "pass"])
+    exited.wait()
+    stale = tmp_path / f"spark-graft-{exited.pid}-killed"
+    (stale / "scopes").mkdir(parents=True)
+    (stale / f"pkg_{exited.pid:x}.zip").write_bytes(b"zip")
+    alive = tmp_path / f"spark-graft-{os.getpid()}-running"
+    alive.mkdir()
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = ("import os\nfrom toy_map_reduce_spark import scratch\n"
+            "with scratch.scope():\n    print(os.getpid(), scratch.path('x'))")
+    out = subprocess.run([sys.executable, "-c", code], capture_output=True, text=True,
+                         env=dict(os.environ, TMPDIR=str(tmp_path), PYTHONPATH=root),
+                         timeout=120, check=True)
+    assert not stale.exists()
+    pid, made = out.stdout.split()
+    own = pathlib.Path(made).parents[2]  # <own>/scopes/<scope>/x
+    assert own.parent == tmp_path and own.name.startswith(f"spark-graft-{pid}-")
+    # the process removed its own directory at exit
+    assert sorted(p.name for p in tmp_path.iterdir()) == [alive.name]
+
+
+def test_unheld_counts_streams_while_other_clients_start_and_stop_them(spark):
+    """unheld reads the JVM's active streams while other clients' streams
+    start and stop; it must never see a query half gone."""
+    stop, errors = threading.Event(), []
+
+    def churn() -> None:
+        try:
+            while not stop.is_set():
+                with scratch.scope():
+                    child = streaming_session(spark)
+                    for _ in range(8):
+                        (child.readStream.format("rate").load()
+                         .writeStream.format("noop").start())
+        except Exception as exc:  # noqa: BLE001 - reported below
+            errors.append(f"streams: {exc!r}")
+
+    clients = [threading.Thread(target=churn) for _ in range(2)]
+    for t in clients:
+        t.start()
+    try:
+        deadline = time.monotonic() + 20
+        while time.monotonic() < deadline and not errors:
+            try:
+                scratch.unheld(spark)
+            except Exception as exc:  # noqa: BLE001 - reported below
+                errors.append(f"unheld: {exc!r}")
+    finally:
+        stop.set()
+        for t in clients:
+            t.join(120)
+    assert not any(t.is_alive() for t in clients)
+    assert not errors, errors

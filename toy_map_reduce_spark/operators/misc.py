@@ -146,7 +146,8 @@ def sort_limit_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
 _AGG_CONDITIONAL_ORACLE = """
 SELECT l_returnflag,
        CAST(COUNT(*) FILTER (WHERE l_discount > 0.05) AS BIGINT) AS n_high_disc,
-       round(SUM(l_extendedprice) FILTER (WHERE l_quantity >= 25), 2) AS rev_bulk,
+       CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,2))) FILTER (WHERE l_quantity >= 25)
+            AS DOUBLE) AS rev_bulk,
        bool_and(l_quantity > 0) AS all_positive_qty,
        bool_or(l_discount > 0.09) AS any_deep_disc,
        round(AVG(l_tax) FILTER (WHERE l_linestatus = 'F'), 6) AS avg_tax_finished
@@ -163,9 +164,11 @@ def agg_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.count_if(F.col("l_discount") > 0.05).alias("n_high_disc"),
-        F.round(
-            F.sum(F.when(F.col("l_quantity") >= 25, F.col("l_extendedprice"))), 2
-        ).alias("rev_bulk"),
+        # summed in DECIMAL: exact, so independent of the order of
+        # accumulation (a double sum of ~9e10 is not, at 2 decimals)
+        F.sum(
+            F.when(F.col("l_quantity") >= 25, F.col("l_extendedprice").cast("decimal(38,2)"))
+        ).cast("double").alias("rev_bulk"),
         F.bool_and(F.col("l_quantity") > 0).alias("all_positive_qty"),
         F.bool_or(F.col("l_discount") > 0.09).alias("any_deep_disc"),
         F.round(
@@ -404,8 +407,8 @@ def agg_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FILTER_CLAUSE_SQL = """
 SELECT l_returnflag,
        COUNT(*) FILTER (WHERE l_quantity > 25) AS n_bulky,
-       round(SUM(l_extendedprice) FILTER (WHERE l_discount = 0), 2)
-         AS rev_no_discount,
+       CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,2))) FILTER (WHERE l_discount = 0)
+            AS DOUBLE) AS rev_no_discount,
        round(AVG(l_extendedprice) FILTER (WHERE l_tax > 0.05), 4)
          AS avg_price_taxed,
        CAST(COUNT(*) AS BIGINT) AS n

@@ -132,10 +132,10 @@ WINDOW w AS (PARTITION BY event_type ORDER BY epoch(date_trunc('second', ts))
               "and sum (RANGE over epoch seconds — value-based peers, so "
               "results are independent of intra-second tie order)")
 def window_time_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ts is truncated to seconds BEFORE framing on both engines: the
-    parquet carries nanosecond timestamps that Spark reads at microsecond
-    precision while DuckDB keeps nanos, so any raw-ts frame boundary could
-    disagree; second-truncated epochs are identical by construction."""
+    """ts is truncated to seconds BEFORE framing on both engines, and the
+    frame runs over whole epoch seconds, so a frame boundary never
+    depends on sub-second precision or on how an engine turns a
+    timestamp into a number."""
     ev = load(spark, sf_dir, "events").withColumn(
         "ts_sec", F.date_trunc("second", "ts")
     )

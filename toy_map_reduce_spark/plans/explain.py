@@ -21,10 +21,10 @@ here reads plan structure from text.
 from __future__ import annotations
 
 import dataclasses
-import os
-import re
 
 from pyspark.sql import DataFrame
+
+from toy_map_reduce_spark.tables import fixture_table
 
 
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:
@@ -99,17 +99,6 @@ def _columns(expr) -> list[tuple[str, int]]:
     return list(dict.fromkeys(cols))
 
 
-_TABLE_FILE_RE = re.compile(r"([A-Za-z_][A-Za-z0-9_]*?)(?:_\d+_\d+_\d+)?\.parquet")
-
-
-def _fixture_table(path: str) -> str | None:
-    """The fixture table a scan root reads: from the raw
-    ``{table}.parquet`` form or the layout cache's
-    ``{table}_{size}_{mtime}_{k}.parquet``; None for any other path."""
-    m = _TABLE_FILE_RE.fullmatch(os.path.basename(path))
-    return m.group(1) if m else None
-
-
 def _node(p) -> PlanNode:
     kind = _name(p).removesuffix("Exec")
     n = PlanNode(kind)
@@ -136,7 +125,7 @@ def _node(p) -> PlanNode:
     elif kind == "ShuffleExchange":
         n.partitioning = _name(p.outputPartitioning())
     elif kind == _FILE_SCAN:
-        roots = [_fixture_table(r.toString()) for r in _seq(p.relation().location().rootPaths())]
+        roots = [fixture_table(r.toString()) for r in _seq(p.relation().location().rootPaths())]
         n.tables = tuple(t for t in roots if t)
     elif kind in _JOINS:
         n.join_type = _name(p.joinType())

@@ -7,8 +7,7 @@ the scope, and on exit, even on an exception, the scope undoes it:
 - frames persisted with :func:`persist` (at ``MEMORY_AND_DISK``) are
   unpersisted;
 - directories from :func:`path` are removed. They live under one
-  per-process root, made with ``tempfile.mkdtemp`` on first use and
-  removed at interpreter exit;
+  root in :func:`process_dir`, made on first use;
 - catalog tables named by :func:`table` are dropped;
 - what was handed to :func:`on_exit` runs, newest first: streams still
   running in a query's streaming session are stopped
@@ -50,6 +49,7 @@ import contextlib
 import contextvars
 import dataclasses
 import os
+import re
 import shutil
 import tempfile
 import threading
@@ -93,6 +93,40 @@ _lock = threading.Lock()
 _unscoped = _Scope()  # what is made outside any scope, until release_scratch
 _open: set[_Scope] = set()
 _root: str | None = None
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
+
+
+_PROCESS_DIR_RE = re.compile(r"spark-graft-(\d+)-")
+_process_dir: str | None = None
+_process_lock = threading.Lock()
+
+
+def process_dir() -> str:
+    """This process's temporary directory, ``spark-graft-<pid>-<random>``
+    in ``tempfile.gettempdir()``, removed at interpreter exit. It holds
+    the scope root, the shipped package zip and the Derby home. A process
+    killed before exit leaves its directory behind, so making one removes
+    the directories of pids that no longer run."""
+    global _process_dir
+    with _process_lock:
+        if _process_dir is None:
+            tmp = tempfile.gettempdir()
+            for entry in os.listdir(tmp):
+                m = _PROCESS_DIR_RE.match(entry)
+                if m and not _pid_alive(int(m.group(1))):
+                    shutil.rmtree(os.path.join(tmp, entry), ignore_errors=True)
+            _process_dir = tempfile.mkdtemp(prefix=f"spark-graft-{os.getpid()}-")
+            atexit.register(shutil.rmtree, _process_dir, True)
+        return _process_dir
 
 
 def _current() -> _Scope:
@@ -147,8 +181,8 @@ def path(name: str) -> str:
     with _lock:
         if s.dir is None:
             if _root is None:
-                _root = tempfile.mkdtemp(prefix="spark-graft-")
-                atexit.register(shutil.rmtree, _root, True)
+                _root = os.path.join(process_dir(), "scopes")
+                os.mkdir(_root)
             s.dir = os.path.join(_root, s.id)
             os.mkdir(s.dir)
     return os.path.join(s.dir, name)
@@ -243,7 +277,9 @@ def unheld(spark: SparkSession) -> dict[str, int]:
             "cached": jss.sharedState().cacheManager().numCachedEntries() - len(live),
             "views": free(r.tableName for r in shown if r.isTemporary),
             "tables": free(r.tableName for r in shown if not r.isTemporary),
-            "streams": free(q.name() for q in
-                            jss.sharedState().activeStreamingQueries().values()),
+            # one snapshot of the JVM map: py4j's values() looks each key
+            # up again, and finds None once another client's stream stopped
+            "streams": free(e.getValue().name() for e in
+                            jss.sharedState().activeStreamingQueries().entrySet().toArray()),
             "dirs": free(os.listdir(_root) if _root else []),
         }

@@ -183,16 +183,6 @@ def _archive_maps(java: str, archive: str, classpath: str) -> bool:
         shutil.rmtree(cwd, ignore_errors=True)
 
 
-def _pid_alive(pid: int) -> bool:
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        pass
-    return True
-
-
 def _promote(returncode: int, tmp: str, cds: _Cds, classpath: str) -> None:
     """Rename a dumped archive into place if its JVM exited cleanly and a
     JVM maps it; delete it otherwise. Then delete archives with other keys
@@ -209,7 +199,7 @@ def _promote(returncode: int, tmp: str, cds: _Cds, classpath: str) -> None:
                 continue
             if name.endswith(".tmp"):
                 writer = name.rsplit(".", 2)[1]
-                if writer.isdigit() and _pid_alive(int(writer)):
+                if writer.isdigit() and scratch._pid_alive(int(writer)):
                     continue
             with contextlib.suppress(FileNotFoundError):
                 os.remove(path)
@@ -250,17 +240,14 @@ _SHIPPED: set[str] = set()  # application ids the package zip was added to
 
 @functools.cache
 def _package_zip() -> str:
-    """Zip this package's modules, once per process, into a directory of
-    its own that is removed at interpreter exit (zipping takes about
-    5 ms). Not under ``_cache_dir()``: a zip per process would pile up
-    there."""
+    """Zip this package's modules, once per process, into
+    ``scratch.process_dir()`` (zipping takes about 5 ms). Not under
+    ``_cache_dir()``: a zip per process would pile up there."""
     import zipfile
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     root = os.path.dirname(pkg_dir)
-    tmp_dir = tempfile.mkdtemp(prefix="spark-graft-pkg-")
-    atexit.register(shutil.rmtree, tmp_dir, ignore_errors=True)
-    out = os.path.join(tmp_dir, f"pkg_{os.getpid():x}.zip")
+    out = os.path.join(scratch.process_dir(), f"pkg_{os.getpid():x}.zip")
     with zipfile.ZipFile(out, "w") as z:
         for dirpath, dirs, files in os.walk(pkg_dir):
             dirs[:] = [d for d in dirs if d != "__pycache__"]
@@ -288,12 +275,9 @@ def _ship_package(spark: SparkSession) -> None:
 
 
 # Confs every result depends on: timestamps are read and shown in UTC
-# (parquet stores naive micros, DuckDB reads naive), and an events.ts
-# stored as TIMESTAMP(NANOS), which Spark's vectorized reader rejects
-# outright, reads as a raw nanos BIGINT that tables.load converts.
+# (parquet stores naive micros, DuckDB reads naive).
 _PINNED = {
     "spark.sql.session.timeZone": "UTC",
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
 

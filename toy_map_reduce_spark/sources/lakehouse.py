@@ -7,11 +7,9 @@ drop the jar on the classpath and they work unchanged.
 
 from __future__ import annotations
 
-import atexit
 import contextlib
 import functools
-import shutil
-import tempfile
+import os
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
@@ -29,8 +27,14 @@ class ConnectorUnavailable(RuntimeError):
 
 
 def _jvm_class_exists(spark: SparkSession, cls: str) -> bool:
+    """Whether ``cls`` is on the driver's classpath. The class is not
+    initialised: Derby's driver boots its engine, and opens ``derby.log``
+    in the working directory, when its class initialises."""
+    jvm = spark._jvm
     try:
-        spark._jvm.java.lang.Class.forName(cls)  # type: ignore[union-attr]
+        jvm.java.lang.Class.forName(  # type: ignore[union-attr]
+            cls, False, jvm.org.apache.spark.util.Utils.getContextOrSparkClassLoader()
+        )
         return True
     except Exception:
         return False
@@ -84,8 +88,8 @@ def _derby_home() -> str:
     """``derby.system.home``: Derby reads it once per JVM, when its engine
     boots, and writes ``derby.log`` there from then on, so it lives as
     long as the process, not in a query scope."""
-    home = tempfile.mkdtemp(prefix="spark-graft-derby-")
-    atexit.register(shutil.rmtree, home, True)
+    home = os.path.join(scratch.process_dir(), "derby")
+    os.makedirs(home, exist_ok=True)
     return home
 
 

@@ -23,6 +23,8 @@ event feed.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -30,65 +32,39 @@ from pyspark.sql import types as T
 from toy_map_reduce_spark import scratch
 from toy_map_reduce_spark.registry import register
 from toy_map_reduce_spark.session import pin_conf, streaming_session
-from toy_map_reduce_spark.tables import _read_path, load, table_path
+from toy_map_reduce_spark.tables import _read_path, load
 
-# events.ts parquet physical type per fixture file (see read_events_stream).
-# Keyed on (path, mtime, size) — not path alone — so a fixture regenerated
-# with a different physical type in the same process invalidates naturally
-# (r6 advisor); a stale path-only key would silently feed the old schema.
-_TS_TYPE_CACHE: dict[tuple[str, float, int], str] = {}
-
-
-def _events_schema(ts_type: T.DataType) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
+_EVENTS_SCHEMA = T.StructType(
+    [
+        T.StructField("event_id", T.LongType()),
+        T.StructField("ts", T.TimestampNTZType()),
+        T.StructField("user_id", T.LongType()),
+        T.StructField("event_type", T.StringType()),
+        T.StructField("value", T.DoubleType()),
+        T.StructField("props", T.StringType()),
+    ]
+)
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet with a proper event-time column,
     in a new streaming session of the query (session.streaming_session).
 
-    The events fixture's ``ts`` has shipped both as TIMESTAMP(NANOS)
-    (readable only as a raw nanos long) and TIMESTAMP(MICROS) (native
-    timestamp read) — see tables.load. A file stream needs an explicit
-    schema, so sniff the batch-read footer schema once and pick the stream
-    schema + normalization to session-UTC TimestampType accordingly.
+    A file stream needs an explicit schema: ``ts`` is stored as
+    TIMESTAMP(MICROS) without a time zone, read as ``timestamp_ntz`` and
+    cast to ``TimestampType`` under the session's UTC time zone, as
+    ``tables.load`` does. The stream reads the re-chunked copy the batch
+    path reads, so a micro-batch scan is not one task. The file source
+    only accepts directories, so a glob filter picks the one file.
     """
-    import os
-
     pin_conf(spark)
     spark = streaming_session(spark)
-    # the footer sniff costs a ~0.2s batch-read per call and its answer is
-    # a property of the fixture FILE, so memoize per path — every S-tier
-    # query (× every bench pass) otherwise re-pays it
-    src_path = table_path(sf_dir, "events")
-    st = os.stat(src_path)
-    cache_key = (src_path, st.st_mtime, st.st_size)
-    batch_ts = _TS_TYPE_CACHE.get(cache_key)
-    if batch_ts is None:
-        batch_ts = dict(spark.read.parquet(src_path).dtypes)["ts"]
-        _TS_TYPE_CACHE[cache_key] = batch_ts
-    # read through the same re-chunked layout-cache file the batch path
-    # uses (the fixture's single row group otherwise serializes EVERY
-    # micro-batch scan on one task — a stream-stream join scans the
-    # source once per side). The file stream source only accepts
-    # directories, so glob-filter to the exact file; the cache tag in
-    # the name keys the glob to the current chunking, never a stale one.
-    src = _read_path(sf_dir, "events")
-    src_dir, src_file = os.path.split(src)
-    reader = spark.readStream.option("pathGlobFilter", src_file)
-    if batch_ts == "bigint":  # nanos-as-long fixtures
-        raw = reader.schema(_events_schema(T.LongType())).parquet(src_dir)
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    raw = reader.schema(_events_schema(T.TimestampNTZType())).parquet(src_dir)
+    src_dir, src_file = os.path.split(_read_path(sf_dir, "events"))
+    raw = (
+        spark.readStream.option("pathGlobFilter", src_file)
+        .schema(_EVENTS_SCHEMA)
+        .parquet(src_dir)
+    )
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
